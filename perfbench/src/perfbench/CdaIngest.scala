@@ -22,9 +22,9 @@ object CdaIngest extends Workload {
   private val PerRound = 2
   private val FilesPerFolder = 2
   private val RowsPerFile = 20
-  private val OpsPerSecond = 2.25
+  private val OpsPerSecond = 0.75
 
-  def opCount(seconds: Int): Int = math.max(3, math.round(seconds * OpsPerSecond).toInt)
+  def opCount(seconds: Int): Int = wholeCycles(seconds, OpsPerSecond, 1)
 
   /** Folder layout for `ops` timed rounds after the bootstrap and warm-up
     * rounds. */
@@ -97,33 +97,34 @@ object CdaIngest extends Workload {
       }
     }
 
-    /** Traced pass only, after the op's clock stops: the `sources` layer's
-      * listing and footer work over the folders this round landed. */
+    /** Traced pass only, after the op's clock stops: the `sources` calls the
+      * Indexer made this round, repeated on the same folders. It lists every
+      * fingerprint of the manifest, reads the footers of every folder in its
+      * window, and probes a schema only on the first folder with files of a
+      * fingerprint, where the Indexer commits the fingerprint's schema. */
     private def traceSources(landed: Int, prev: Int, op: OpContext): Unit = {
       val conf = spark.sparkContext.hadoopConfiguration
+      def timed[A](name: String)(body: => A): A = {
+        val t0 = System.nanoTime()
+        try op.clock.span("sources", name)(body)
+        finally op.pass.add(s"sources.${name}_ms", (System.nanoTime() - t0) / 1e6)
+      }
       op.pass.probe {
         tables.foreach { t =>
-          val fresh = t.folders.slice(prev, landed)
-          fresh.map(_.fingerprint).distinct.foreach { fp =>
-            val t0 = System.nanoTime()
-            op.clock.span("sources", "list")(CdaLayout.listTimestampDirectories(
+          t.folders.take(landed).map(_.fingerprint).distinct.foreach { fp =>
+            timed("list")(CdaLayout.listTimestampDirectories(
               conf, CdaGen.tableDir(data, t).resolve(fp).toUri.toString))
-            op.pass.add("sources.list_ms", (System.nanoTime() - t0) / 1e6)
           }
-          fresh.foreach { f =>
-            val folder = CdaGen.folderDir(data, t, f).toUri.toString
-            val t0 = System.nanoTime()
-            val listed = op.clock.span("sources", "list")(CdaLayout.listParquetFiles(conf, folder))
-            val t1 = System.nanoTime()
-            op.clock.span("sources", "footer")(CdaLayout.listParquetFiles(conf, folder, withStats = true))
-            val t2 = System.nanoTime()
-            op.clock.span("sources", "harvest")(
-              if (listed.nonEmpty) graft.sources.SchemaProbe.readSchemaFromFiles(conf, listed.toSeq))
-            op.pass.add("sources.list_ms", (t1 - t0) / 1e6)
-            op.pass.add("sources.footer_ms", (t2 - t1) / 1e6)
-            op.pass.add("sources.harvest_ms", (System.nanoTime() - t2) / 1e6)
+          // record-less folders are not checkpointed, so the window starts
+          // after the last folder with files
+          val from = t.folders.take(prev).lastIndexWhere(_.files.nonEmpty) + 1
+          t.folders.slice(from, landed).foreach { f =>
+            val files = timed("footer")(CdaLayout.listParquetFiles(
+              conf, CdaGen.folderDir(data, t, f).toUri.toString, withStats = true))
+            if (t.folders.find(g => g.fingerprint == f.fingerprint && g.files.nonEmpty).contains(f))
+              timed("harvest")(graft.sources.SchemaProbe.readSchemaFromFiles(conf, files.toSeq))
             op.pass.add("sources.folders", 1)
-            op.pass.add("sources.files", listed.length.toDouble)
+            op.pass.add("sources.files", files.length.toDouble)
           }
         }
       }

@@ -15,30 +15,29 @@ import scala.collection.mutable
 object DocDedup extends Workload {
   val name = "doc_dedup"
   private val Slices = 3
-  private val Docs = 240
+  private val Docs = 960
+  /** Documents of the warm-up slice, which setup runs every operator on. */
+  private val WarmDocs = Docs / 8
   private val Words = 30
   private val Vocab = 3000
   private val Dim = 32
-  private val OpsPerSecond = 3.2
+  private val OpsPerSecond = 1.05
 
   val Kinds = IndexedSeq("exact_dedup", "minhash", "simhash", "ngram_jaccard", "cosine_neardup")
 
-  def opCount(seconds: Int): Int = {
-    val n = math.max(Kinds.size, math.round(seconds * OpsPerSecond).toInt)
-    n - n % Kinds.size
-  }
+  def opCount(seconds: Int): Int = wholeCycles(seconds, OpsPerSecond, Kinds.size)
 
   final case class Doc(id: Long, blk: Int, text: String, vec: Seq[Double])
 
   /** Slice `s`: base documents plus exact copies and near copies (three
     * words replaced; embeddings with small noise) of some of them. */
-  def slice(seed: Long, s: Int): IndexedSeq[Doc] = {
+  def slice(seed: Long, s: Int, docs: Int = Docs): IndexedSeq[Doc] = {
     val rng = new scala.util.Random(seed * 31 + s)
     def words() = IndexedSeq.fill(Words)(s"w${rng.nextInt(Vocab)}")
     def vec() = IndexedSeq.fill(Dim)(rng.nextGaussian())
-    val base = (0 until Docs * 8 / 10).map(_ => (words(), vec()))
-    val copies = (0 until Docs / 10).map(_ => base(rng.nextInt(base.size)))
-    val near = (0 until Docs / 10).map { _ =>
+    val base = (0 until docs * 8 / 10).map(_ => (words(), vec()))
+    val copies = (0 until docs / 10).map(_ => base(rng.nextInt(base.size)))
+    val near = (0 until docs / 10).map { _ =>
       val (w, v) = base(rng.nextInt(base.size))
       val w2 = (0 until 3).foldLeft(w)((acc, _) => acc.updated(rng.nextInt(Words), s"w${rng.nextInt(Vocab)}"))
       (w2, v.map(_ + rng.nextGaussian() * 0.01))
@@ -65,14 +64,20 @@ object DocDedup extends Workload {
     }.toSet
 
   /** Exact word-trigram Jaccard pairs within a block, at the operator's
-    * permille rounding. */
+    * permille rounding. Only documents that share a trigram can reach a
+    * positive threshold, so candidates come from a trigram index. */
   def ngramPairs(docs: Seq[Doc], threshold: Double): Set[(Long, Long)] = {
+    require(threshold > 0, "the trigram index needs a positive threshold")
     val sh = docs.map { d =>
       val w = d.text.split(" ")
       d -> (0 until w.length - 2).map(i => (w(i), w(i + 1), w(i + 2))).toSet
     }
     sh.groupBy(_._1.blk).values.flatMap { g =>
-      for (i <- g.indices; j <- i + 1 until g.size;
+      val byGram = g.indices.flatMap(i => g(i)._2.map(_ -> i)).groupMap(_._1)(_._2)
+      val candidates = byGram.values.flatMap { is =>
+        for (a <- is; b <- is if a < b) yield (a, b)
+      }.toSet
+      for ((i, j) <- candidates;
            inter = (g(i)._2 intersect g(j)._2).size;
            union = g(i)._2.size + g(j)._2.size - inter
            if math.round(1000.0 * inter / union) >= (threshold * 1000).toLong)
@@ -82,8 +87,8 @@ object DocDedup extends Workload {
 
   def setup(dir: Path, seed: Long, ops: Int)(implicit spark: SparkSession): Instance = {
     val inst = new Inst(dir, seed, schedule(seed, ops))
-    Kinds.zipWithIndex.foreach { case (k, i) =>
-      inst.apply(k, i % Slices, new OpContext(new Pass(false)))().foreach(e =>
+    Kinds.foreach { k =>
+      inst.apply(k, Slices, new OpContext(new Pass(false)))().foreach(e =>
         throw new IllegalStateException(s"$name warm-up $k: $e"))
     }
     inst
@@ -92,7 +97,8 @@ object DocDedup extends Workload {
   final class Inst(dir: Path, seed: Long, sched: IndexedSeq[(String, Int)])(
       implicit spark: SparkSession) extends Instance {
     import spark.implicits._
-    private val docs = (0 until Slices).map(slice(seed, _))
+    /** The timed slices, then the warm-up slice. */
+    private val docs = (0 until Slices).map(slice(seed, _)) :+ slice(seed, Slices, WarmDocs)
     private val paths = docs.zipWithIndex.map { case (d, s) =>
       val p = dir.resolve(s"slice$s").toUri.toString
       d.toDF().coalesce(1).write.parquet(p)

@@ -79,6 +79,7 @@ object Main {
 
     val result = if (!traced) {
       val setups = (1 to SetupReps).map(r => setup(s"setup$r"))
+      System.err.println(s"[perfbench] setup seconds: ${setups.map(_._3).mkString(" ")}")
       val (inst, dir, _) = setups.last
       val p = runPass(inst, dir, ops, new Pass(false))
       println(Json.obj(Seq("workload" -> Json.str(workload.name), "info" ->
@@ -172,6 +173,8 @@ object Main {
       error.foreach { e => failed += 1; System.err.println(s"[perfbench] op $i failed: $e") }
       if (check.isRight) ctx.runDeferred()
     }
+    System.err.println("[perfbench] op ms by kind: " + (0 until ops).groupBy(inst.kind).toSeq.sortBy(_._1)
+      .map { case (k, is) => s"$k ${is.map(i => f"${opMs(i)}%.0f").mkString(",")}" }.mkString("; "))
     val counters = Counters.delta(Counters.read(), before)
       .map { case (k, v) => k -> (v - pass.excluded(k)) }
     val wl = inst.finish() ++

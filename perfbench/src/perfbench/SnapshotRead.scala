@@ -28,10 +28,7 @@ object SnapshotRead extends Workload {
   private val Cycle = IndexedSeq("latest_point", "latest_range", "version_as_of",
     "timestamp_as_of", "changes_since", "latest_events_point", "latest_events_range", "version_as_of_2")
 
-  def opCount(seconds: Int): Int = {
-    val n = math.max(Cycle.size, math.round(seconds * OpsPerSecond).toInt)
-    n - n % Cycle.size
-  }
+  def opCount(seconds: Int): Int = wholeCycles(seconds, OpsPerSecond, Cycle.size)
 
   final case class Ev(id: Long, key: Int, name: String, qty: Long)
 

@@ -20,20 +20,16 @@ import scala.jdk.CollectionConverters._
 object TableDml extends Workload {
   val name = "table_dml"
   private val InitialRows = 8000
-  private val InitialBatches = 4
   private val BatchRows = 200
   private val Keys = 1000
-  private val OpsPerSecond = 3.0
+  private val OpsPerSecond = 2.0
 
-  /** Op kinds of one cycle; every cycle has each kind once, plus one compact. */
+  /** Op kinds of one cycle, in a fixed order so that every seed puts each
+    * op on a table in the same state; a compact ends each cycle. */
   private val Cycle = IndexedSeq("append_flat", "append_part", "append_feed", "delete_cow",
     "delete_mor", "update", "merge", "stream")
 
-  def opCount(seconds: Int): Int = {
-    val per = Cycle.size + 1
-    val n = math.max(per, math.round(seconds * OpsPerSecond).toInt)
-    n - n % per
-  }
+  def opCount(seconds: Int): Int = wholeCycles(seconds, OpsPerSecond, Cycle.size + 1)
 
   final case class Rec(id: Long, key: Int, part: Int, qty: Long, status: String)
 
@@ -61,7 +57,7 @@ object TableDml extends Workload {
       "feed" -> fresh(InitialRows / 8))
     val cycles = 1 + ops / (Cycle.size + 1)
     val sched = (0 until cycles).flatMap { c =>
-      (rng.shuffle(Cycle) :+ "compact").map { k =>
+      (Cycle :+ "compact").map { k =>
         val rows = k match {
           case "merge" =>
             // distinct ids: a target row matched twice fails the MERGE
@@ -98,9 +94,7 @@ object TableDml extends Workload {
       Seq("flat", "part", "feed", "sink").map(_ -> mutable.HashMap.empty[Long, Rec]).toMap
 
     initial.foreach { case (t, rows) =>
-      rows.grouped(math.max(1, rows.size / InitialBatches)).foreach { b =>
-        GwSink.append(b.toDF(), path(t), partitionBy = if (t == "part") Seq("part") else Nil)
-      }
+      GwSink.append(rows.toDF(), path(t), partitionBy = if (t == "part") Seq("part") else Nil)
       rows.foreach(r => model(t)(r.id) = r)
     }
 

@@ -15,6 +15,11 @@ trait Workload {
   /** Fixed op count of a timed pass nominally `seconds` long. */
   def opCount(seconds: Int): Int
 
+  /** The whole number of `cycle`-op cycles nearest to `seconds` of ops at
+    * the measured rate `opsPerSecond`, at least one. */
+  protected def wholeCycles(seconds: Int, opsPerSecond: Double, cycle: Int): Int =
+    cycle * math.max(1, math.round(seconds * opsPerSecond / cycle).toInt)
+
   /** Generates the inputs under `dir` from `seed` and runs every op kind
     * once, untimed; the returned instance is ready for `ops` timed ops. */
   def setup(dir: Path, seed: Long, ops: Int)(implicit spark: SparkSession): Instance
