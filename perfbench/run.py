@@ -22,7 +22,7 @@ sys.dont_write_bytecode = True
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 import build  # noqa: E402
 
-WORKLOADS = ("cda_ingest", "snapshot_read", "table_dml", "doc_dedup")
+WORKLOADS = ("cda_ingest", "snapshot_read", "table_dml", "table_dml_uri", "doc_dedup")
 HEAP = "2g"
 RUN_TIMEOUT_S = 170
 

@@ -22,7 +22,7 @@ object CdaIngest extends Workload {
   private val PerRound = 2
   private val FilesPerFolder = 2
   private val RowsPerFile = 20
-  private val OpsPerSecond = 0.75
+  private val OpsPerSecond = 1.0
 
   def opCount(seconds: Int): Int = wholeCycles(seconds, OpsPerSecond, 1)
 

@@ -13,7 +13,7 @@ import scala.util.control.NonFatal
  * `--selftest` checks the seeded generators instead.
  */
 object Main {
-  val Workloads: Seq[Workload] = Seq(CdaIngest, SnapshotRead, TableDml, DocDedup)
+  val Workloads: Seq[Workload] = Seq(CdaIngest, SnapshotRead, TableDml, TableDmlUri, DocDedup)
 
   /** Setups per untraced run; `setup_s` is their median. */
   private val SetupReps = 3
