@@ -163,10 +163,7 @@ class GwCatalog extends TableCatalog with SupportsNamespaces {
       val opts = new CaseInsensitiveStringMap(java.util.Collections.singletonMap("path", location))
       new org.apache.spark.sql.graftbridge.GwDeltaTable(
         displayName, SparkSession.active, opts, log.snapshot(version),
-        // only the LATEST snapshot accepts writes or streams; time travel
-        // is a read-only batch relation
         writable = version.isEmpty,
-        streaming = version.isEmpty,
         v2BatchWrite = version.isEmpty)
     }
   }

@@ -29,11 +29,16 @@ import java.util.{Map => JMap}
  * metadata); the scan itself delegates to Spark's own parquet V2 table, so
  * column pruning, filter pushdown, vectorized reading, and AQE apply exactly
  * as they would on a plain parquet read. Batch reads additionally file-skip
- * with harvested footer stats; streaming reads tail the log one version
- * range per micro-batch (see `GwDeltaStreamSource`).
+ * with harvested footer stats; streaming reads (plain or `readChangeFeed`)
+ * tail the log one version range per micro-batch through the same V2
+ * stream as catalog tables (`GwMicroBatchStream`).
+ *
+ * Streaming WRITES keep a V1 face (`StreamSinkProvider`) for paths with no
+ * transaction log yet: Spark hands `partitionBy` only to a V1 sink, so it is
+ * the one face that can bootstrap a partitioned table from a stream. Once
+ * the log exists, the table's V2 `GwStreamingWrite` takes over.
  */
 class GwDeltaDataSource extends TableProvider with DataSourceRegister
-    with org.apache.spark.sql.sources.StreamSourceProvider
     with org.apache.spark.sql.sources.StreamSinkProvider
     with org.apache.spark.sql.sources.CreatableRelationProvider {
 
@@ -177,40 +182,7 @@ class GwDeltaDataSource extends TableProvider with DataSourceRegister
     }
   }
 
-  // ---- streaming tail (spark.readStream.format("gwdelta")) ----
-
-  private def streamPath(parameters: Map[String, String]): String =
-    parameters.getOrElse("path",
-      throw new IllegalArgumentException("gwdelta requires a path"))
-
-  override def sourceSchema(
-      sqlContext: org.apache.spark.sql.SQLContext,
-      schema: Option[StructType],
-      providerName: String,
-      parameters: Map[String, String]): (String, StructType) = {
-    // the stream always serves the log's schema; accepting a user schema
-    // here would bind the query against columns the batches don't produce
-    require(schema.isEmpty,
-      "gwdelta streams read the table's log schema; drop .schema(...)")
-    val path = streamPath(parameters)
-    val log = GwLog.forTable(
-      sqlContext.sparkSession.sparkContext.hadoopConfiguration, path)
-    val base = log.snapshot(None).schema
-    val cdf = org.apache.spark.sql.catalyst.util.CaseInsensitiveMap(parameters)
-      .get("readChangeFeed").exists(_.toBoolean)
-    (shortName(),
-      if (cdf) org.apache.spark.sql.graftbridge.GwDeltaStreamSource.cdfSchema(base)
-      else base)
-  }
-
-  override def createSource(
-      sqlContext: org.apache.spark.sql.SQLContext,
-      metadataPath: String,
-      schema: Option[StructType],
-      providerName: String,
-      parameters: Map[String, String]): org.apache.spark.sql.execution.streaming.Source =
-    new org.apache.spark.sql.graftbridge.GwDeltaStreamSource(
-      sqlContext, streamPath(parameters), parameters)
+  // ---- streaming sink for log-less targets (see the class doc) ----
 
   override def createSink(
       sqlContext: org.apache.spark.sql.SQLContext,
@@ -222,6 +194,8 @@ class GwDeltaDataSource extends TableProvider with DataSourceRegister
       s"gwdelta sink writes append-only commits; got $outputMode " +
         "(complete/update would need remove+rewrite semantics per batch)")
     new org.apache.spark.sql.graftbridge.GwDeltaStreamSink(
-      streamPath(parameters), parameters.get("checkpointLocation"), partitionColumns)
+      parameters.getOrElse("path",
+        throw new IllegalArgumentException("gwdelta requires a path")),
+      partitionColumns)
   }
 }

@@ -4,41 +4,35 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.streaming.Sink
+import org.apache.spark.sql.execution.streaming.runtime.StreamExecution
 
 /**
- * V1 streaming sink backing `writeStream.format("gwdelta").start(path)`:
- * the declarative face of [[graft.streaming.GwSink]] — one atomic log
- * commit per micro-batch, `"<streamId>/<batchId>"` as the commit txnId for
- * crash-replay idempotence. The stream identity is the checkpoint location
- * (stable across restarts of the same query, distinct between different
- * queries feeding the same table — batch ids alone would collide); a query
- * with only a temporary checkpoint cannot resume, so a per-sink random id
- * is enough there.
+ * V1 streaming sink for `writeStream.format("gwdelta").start(path)` on a
+ * path with no transaction log yet: Spark hands the writer's `partitionBy`
+ * only to V1 sinks, so this face bootstraps a (partitioned) table; once the
+ * log exists the table's V2 [[GwStreamingWrite]] takes over. One atomic log
+ * commit per micro-batch ([[graft.streaming.GwSink]]) under txnId
+ * `"<queryId>/<batchId>"`, the stable query id the V2 face commits under
+ * too, so a replayed batch is recognised whichever face committed it first.
  *
  * `addBatch`'s DataFrame carries the micro-batch's INCREMENTAL plan; like
  * Spark's own ForeachBatchSink, the already-computed result is pinned as an
  * RDD-backed batch plan before writing, so the parquet write does not
  * re-execute the source side of the plan.
  */
-class GwDeltaStreamSink(tablePath: String, checkpointLocation: Option[String],
-    partitionBy: Seq[String] = Nil) extends Sink {
-
-  private val streamId: String = checkpointLocation match {
-    case Some(cp) =>
-      // digest, not the raw path: txnIds stay fixed-width and survive a '/'
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(cp.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .map("%02x".format(_)).mkString
-    case None => java.util.UUID.randomUUID().toString
-  }
+class GwDeltaStreamSink(tablePath: String, partitionBy: Seq[String] = Nil) extends Sink {
 
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
     val classic = data.asInstanceOf[Dataset[org.apache.spark.sql.Row]]
     val spark = classic.sparkSession.asInstanceOf[ClassicSession]
+    // set by StreamExecution on the stream thread that calls addBatch
+    val queryId = Option(spark.sparkContext.getLocalProperty(StreamExecution.QUERY_ID_KEY))
+      .getOrElse(throw new IllegalStateException(
+        s"GwDeltaStreamSink[$tablePath]: addBatch outside a streaming query"))
     val node = LogicalRDD.fromDataset(
       classic.queryExecution.toRdd, classic, isStreaming = false)
     val batchDf = Dataset.ofRows(spark, node)
-    graft.streaming.GwSink.append(batchDf, tablePath, Some(s"$streamId/$batchId"),
+    graft.streaming.GwSink.append(batchDf, tablePath, Some(s"$queryId/$batchId"),
       partitionBy)
     ()
   }

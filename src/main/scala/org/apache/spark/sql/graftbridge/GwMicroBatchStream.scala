@@ -1,22 +1,22 @@
 package org.apache.spark.sql.graftbridge
 
-import graft.log.{AddFile, GwLog, Metadata}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory, Scan}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset => OffsetV2, ReadLimit}
+import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetScan, ParquetTable}
-import org.apache.spark.sql.execution.streaming.runtime.LongOffset
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
 
 /**
- * V2 streaming tail of a gwdelta table — what `spark.readStream.table("c.ns.t")`
- * resolves to on catalog tables (the V1 `GwDeltaStreamSource` serves the
- * path-based `format("gwdelta")` form; both share the same semantics):
+ * Streaming tail of a gwdelta table — what both `spark.readStream.format(
+ * "gwdelta").load(path)` and `spark.readStream.table("c.ns.t")` resolve to:
  *
- *  - offsets are log versions (`LongOffset`, the same wire JSON as the V1
- *    source, so a checkpoint written by one form restarts under the other);
+ *  - offsets are log versions ([[GwStreamOffset]]; a bare version number on
+ *    the wire, so checkpoints of earlier releases restart here);
  *  - the first batch is the full live snapshot at the end version, then
  *    each batch reads exactly the `dataChange` files of `(start, end]` —
  *    a metadata diff, never a reprocess;
@@ -24,19 +24,25 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
  *    was REPLACED; an incremental append would corrupt the sink);
  *  - each batch's partitions come from a parquet V2 scan over just that
  *    batch's files, so vectorized reading and partition sizing behave
- *    exactly like a batch read of those files.
+ *    exactly like a batch read of those files; deletion vectors in the
+ *    initial snapshot are reconciled task-side ([[GwMorScan]]).
+ *
+ * With `changeFeed` (the `readChangeFeed` option of a path load) the stream
+ * serves the row-level CHANGE FEED instead: per version, the rows of the
+ * files [[GwStreamAdmission.changeSlices]] selects, tagged with
+ * `_change_type` and `_commit_version` as constant partition values of
+ * each file — pure file reads, no joins.
  */
 class GwMicroBatchStream(
     spark: SparkSession,
     tablePath: String,
     streamSchema: StructType,
-    readOptions: CaseInsensitiveStringMap = CaseInsensitiveStringMap.empty())
+    readOptions: CaseInsensitiveStringMap,
+    changeFeed: Boolean)
     extends MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
 
-
-
-  private val log = GwLog.forTable(spark.sparkContext.hadoopConfiguration, tablePath)
+  private val log = graft.log.GwLog.forTable(spark.sparkContext.hadoopConfiguration, tablePath)
 
   /** Trigger.AvailableNow's pin: versions committed after the stream
     * started are left for the next run. */
@@ -49,8 +55,9 @@ class GwMicroBatchStream(
     GwStreamAdmission.defaultLimit(k => Option(readOptions.get(k)))
 
   /** `startingVersion`: first version served, skipping the initial
-    * snapshot (same contract as the V1 face; a checkpointed offset always
-    * wins because Spark only asks for initialOffset on a fresh stream). */
+    * snapshot (the change feed's default is the full history instead); a
+    * checkpointed offset always wins because Spark only asks for
+    * initialOffset on a fresh stream. */
   private val startingVersion: Option[Long] =
     Option(readOptions.get("startingVersion")).map { v =>
       val n = v.toLong
@@ -59,21 +66,22 @@ class GwMicroBatchStream(
     }
 
   /** -1 = nothing consumed: the next batch delivers the initial snapshot
-    * (or starts at `startingVersion` when given). */
+    * (or the change feed from version 0), or starts at `startingVersion`. */
   override def initialOffset(): OffsetV2 =
     GwStreamOffset(startingVersion.map(_ - 1).getOrElse(-1L))
 
-  override def latestOffset(): OffsetV2 =
-    LongOffset(log.latestVersion().getOrElse(-1L))
+  override def latestOffset(): OffsetV2 = reportLatestOffset()
 
   /** Rate-limited admission ([[GwStreamAdmission.nextOffset]]): the initial
     * snapshot is sliced by file index, tailing admits whole versions. */
   override def latestOffset(start: OffsetV2, limit: ReadLimit): OffsetV2 =
-    GwStreamAdmission.nextOffset(log, GwStreamOffset.of(start), limit,
+    if (changeFeed)
+      GwStreamAdmission.nextChangeOffset(log, GwStreamOffset.of(start), availableNowCap)
+    else GwStreamAdmission.nextOffset(log, GwStreamOffset.of(start), limit,
       availableNowCap)
 
   override def reportLatestOffset(): OffsetV2 =
-    LongOffset(log.latestVersion().getOrElse(-1L))
+    GwStreamOffset(log.latestVersion().getOrElse(-1L))
 
   override def deserializeOffset(json: String): OffsetV2 =
     GwStreamOffset.parse(json)
@@ -82,54 +90,101 @@ class GwMicroBatchStream(
 
   override def stop(): Unit = ()
 
-  private def filesFor(start: OffsetV2, end: OffsetV2): Seq[AddFile] =
-    // deletion-vector re-assertions are skipped in incremental ranges (a
-    // merge-on-read DELETE adds no NEW rows — same contract as
-    // changesSince; without the guard the stream would re-emit the whole
-    // re-asserted file); the initial snapshot serves DV'd files through
-    // the MOR partitions below
-    GwStreamAdmission.rangeFiles(log, tablePath,
-      GwStreamOffset.of(start), GwStreamOffset.of(end))
+  override def toString: String = s"GwMicroBatchStream[$tablePath]"
 
-  private def parquetScan(paths: Seq[String]): ParquetScan = {
+  /** A parquet scan over `paths` reading the on-file (PHYSICAL, column
+    * mapping) layout `dataSchema`; the stream reports logical names upward
+    * and rows are positional. */
+  private def parquetScan(paths: Seq[String], dataSchema: StructType): ParquetScan = {
     val options = new CaseInsensitiveStringMap(
       java.util.Collections.singletonMap("path", tablePath))
-    // PHYSICAL layout into the parquet reader (column mapping); the stream
-    // reports logical names upward and rows are positional
     ParquetTable(s"gwdelta-stream:$tablePath", spark, options, paths,
-      Some(graft.log.ColumnMapping.physicalSchema(streamSchema)),
-      classOf[ParquetFileFormat])
+      Some(dataSchema), classOf[ParquetFileFormat])
       .newScanBuilder(options).build().asInstanceOf[ParquetScan]
   }
 
+  private def dataSchema = graft.log.ColumnMapping.physicalSchema(streamSchema)
+
+  /** The last planned range and its partitions: Spark asks several times
+    * per batch (each copy of the scan node plans anew), and a range always
+    * plans to the same files. */
+  @volatile private var lastPlanned: ((GwStreamOffset, GwStreamOffset), Array[InputPartition]) = _
+
   override def planInputPartitions(start: OffsetV2, end: OffsetV2): Array[InputPartition] = {
-    val files = filesFor(start, end)
-    if (files.isEmpty) return Array.empty
-    // only the INITIAL snapshot can contain DV'd files (incremental batches
-    // skip DV re-assertions above): serve their LIVE rows through the same
-    // per-file skipping partitions the batch MOR scan uses — a plain
-    // parquet read would resurrect the deleted rows
-    val (dvd, clean) = files.partition(_.dv.isDefined)
-    val cleanParts: Array[InputPartition] =
-      if (clean.isEmpty) Array.empty
-      else parquetScan(clean.map(_.path)).toBatch.planInputPartitions()
-    val dvParts: Array[InputPartition] =
-      if (dvd.isEmpty) Array.empty
-      else GwMorScan.groupDvPartitions(
-        parquetScan(dvd.map(_.path)).toBatch.planInputPartitions(),
-        dvd.map(f => graft.GwTable.uriKey(f.path) -> f.dv.get).toMap)
-    cleanParts ++ dvParts
+    val range = (GwStreamOffset.of(start), GwStreamOffset.of(end))
+    val last = lastPlanned
+    if (last != null && last._1 == range) return last._2
+    val parts = plan(range._1, range._2)
+    lastPlanned = (range, parts)
+    parts
   }
+
+  private def plan(start: GwStreamOffset, end: GwStreamOffset): Array[InputPartition] =
+    if (changeFeed) changePartitions(start, end)
+    else {
+      // deletion-vector re-assertions are skipped in incremental ranges (a
+      // merge-on-read DELETE adds no NEW rows); only the INITIAL snapshot
+      // can contain DV'd files: serve their LIVE rows through the same
+      // per-file skipping partitions the batch MOR scan uses — a plain
+      // parquet read would resurrect the deleted rows
+      val files = GwStreamAdmission.rangeFiles(log, tablePath, start, end)
+      val (dvd, clean) = files.partition(_.dv.isDefined)
+      val cleanParts: Array[InputPartition] =
+        if (clean.isEmpty) Array.empty
+        else parquetScan(clean.map(_.path), dataSchema).toBatch.planInputPartitions()
+      val dvParts: Array[InputPartition] =
+        if (dvd.isEmpty) Array.empty
+        else GwMorScan.groupDvPartitions(
+          parquetScan(dvd.map(_.path), dataSchema).toBatch.planInputPartitions(),
+          dvd.map(f => graft.GwTable.uriKey(f.path) -> f.dv.get).toMap)
+      cleanParts ++ dvParts
+    }
+
+  /** Change-feed partitions of `(start, end]`: each slice's files planned by
+    * a parquet scan, every split carrying the slice's tags as its partition
+    * values; change-data-file splits are marked for their own reader. */
+  private def changePartitions(start: GwStreamOffset, end: GwStreamOffset): Array[InputPartition] =
+    GwStreamAdmission.changeSlices(log, tablePath, start.version, end.version)
+      .toArray.flatMap { slice =>
+        val tags = InternalRow.fromSeq(
+          slice.changeType.map(UTF8String.fromString).toSeq :+ slice.version)
+        val schema =
+          if (slice.changeType.isEmpty) graft.Cdc.physicalSchema(streamSchema) else dataSchema
+        parquetScan(slice.paths, schema).toBatch.planInputPartitions().map {
+          case fp: FilePartition =>
+            val tagged = fp.copy(files = fp.files.map(_.copy(partitionValues = tags)))
+            if (slice.changeType.isEmpty) GwCdcPartition(tagged) else tagged
+          case other => throw new IllegalStateException(
+            s"expected FilePartition from the parquet scan, got $other")
+        }
+      }
+
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory
 
   /** Partition readers only depend on the read schema and parquet options
     * (the file list rides inside each partition), so one factory serves
     * every batch. The MOR wrapper routes DV partitions (initial snapshot
     * only) through the position-skipping row reader and everything else —
-    * columnar reads included — straight to the parquet factory. */
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val parquet = parquetScan(Nil).toBatch.createReaderFactory()
-    new GwMorReaderFactory(Some(parquet), parquet,
-      new graft.SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
+    * columnar reads included — straight to the parquet factory. A change
+    * feed appends its tags as partition columns: `_change_type` and
+    * `_commit_version` to data files, `_commit_version` to change-data
+    * files, which hold their `_change_type`. */
+  private lazy val readerFactory: PartitionReaderFactory = {
+    val conf = new graft.SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
+    val commitVersion = StructField(GwStreamAdmission.CommitVersionCol, LongType)
+    def tagged(data: StructType, tags: StructField*): PartitionReaderFactory =
+      parquetScan(Nil, data).copy(readPartitionSchema = StructType(tags))
+        .toBatch.createReaderFactory()
+    if (!changeFeed) {
+      val parquet = tagged(dataSchema)
+      new GwMorReaderFactory(Some(parquet), parquet, conf)
+    } else {
+      // a change feed has no DV partitions (changeSlices refuses them)
+      val data = tagged(dataSchema,
+        StructField(graft.Cdc.ChangeTypeCol, StringType), commitVersion)
+      new GwMorReaderFactory(Some(data), data, conf,
+        Some(tagged(graft.Cdc.physicalSchema(streamSchema), commitVersion)))
+    }
   }
 }
 
@@ -139,7 +194,8 @@ class GwDeltaScan(
     spark: SparkSession,
     tablePath: String,
     streamSchema: StructType,
-    readOptions: CaseInsensitiveStringMap = CaseInsensitiveStringMap.empty())
+    readOptions: CaseInsensitiveStringMap,
+    changeFeed: Boolean)
     extends Scan
     with org.apache.spark.sql.connector.read.SupportsReportStatistics
     with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering {
@@ -180,8 +236,14 @@ class GwDeltaScan(
     inner.columnarSupportMode()
   override def supportedCustomMetrics(): Array[org.apache.spark.sql.connector.metric.CustomMetric] =
     inner.supportedCustomMetrics()
-  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new GwMicroBatchStream(spark, tablePath, streamSchema, readOptions)
+  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
+    // the feed's extra columns are part of the TABLE schema, which only a
+    // path load with the option can declare
+    require(changeFeed || !readOptions.getBoolean("readChangeFeed", false),
+      s"readChangeFeed streams load by path: " +
+        s"spark.readStream.format(\"gwdelta\").option(\"readChangeFeed\", \"true\").load(\"$tablePath\")")
+    new GwMicroBatchStream(spark, tablePath, streamSchema, readOptions, changeFeed)
+  }
 
   // value equality over the inner scan (whose own equality covers the
   // file set) so Spark's exchange/scan reuse keeps working when the same

@@ -132,18 +132,31 @@ case class GwMorPartition(inner: FilePartition, dv: DvDescriptor)
   override def preferredLocations(): Array[String] = inner.preferredLocations()
 }
 
+/** A change feed's change-data-file splits (see [[GwMicroBatchStream]]):
+  * their on-file layout differs from the data files', so they read through
+  * their own factory. */
+case class GwCdcPartition(inner: FilePartition) extends InputPartition {
+  override def preferredLocations(): Array[String] = inner.preferredLocations()
+}
+
 /** Serves both MOR batch scans and the streaming tail: DV partitions get
-  * the skipping row reader; anything else delegates to the clean factory —
-  * including columnar reads, so clean streaming batches stay vectorized
-  * (the batch GwMorScan pins row-based at the scan level instead). */
+  * the skipping row reader, change-data-file partitions the `cdcFactory`;
+  * anything else delegates to the clean factory — including columnar
+  * reads, so clean streaming batches stay vectorized (the batch GwMorScan
+  * pins row-based at the scan level instead). */
 class GwMorReaderFactory(
     cleanFactory: Option[PartitionReaderFactory],
     dvFactory: PartitionReaderFactory,
-    conf: SerializableHadoopConf) extends PartitionReaderFactory {
+    conf: SerializableHadoopConf,
+    cdcFactory: Option[PartitionReaderFactory] = None) extends PartitionReaderFactory {
 
   private def clean(p: InputPartition): PartitionReaderFactory =
     cleanFactory.getOrElse(throw new IllegalStateException(
       s"no clean-side reader factory for $p"))
+
+  private def cdc(p: InputPartition): PartitionReaderFactory =
+    cdcFactory.getOrElse(throw new IllegalStateException(
+      s"no change-data reader factory for $p"))
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     partition match {
@@ -151,6 +164,7 @@ class GwMorReaderFactory(
         // executor-side: DataSourceRDD calls createReader in the task
         new GwDvSkippingReader(dvFactory.createReader(m.inner),
           graft.Dv.readPositions(conf.value, m.dv))
+      case c: GwCdcPartition => cdc(c).createReader(c.inner)
       case other => clean(other).createReader(other)
     }
 
@@ -158,12 +172,14 @@ class GwMorReaderFactory(
     partition match {
       case _: GwMorPartition =>
         throw new IllegalStateException("DV partitions are row-based")
+      case c: GwCdcPartition => cdc(c).createColumnarReader(c.inner)
       case other => clean(other).createColumnarReader(other)
     }
 
   override def supportColumnarReads(partition: InputPartition): Boolean =
     partition match {
       case _: GwMorPartition => false
+      case c: GwCdcPartition => cdcFactory.exists(_.supportColumnarReads(c.inner))
       case other => cleanFactory.exists(_.supportColumnarReads(other))
     }
 }

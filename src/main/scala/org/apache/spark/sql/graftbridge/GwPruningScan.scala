@@ -31,8 +31,9 @@ class GwDeltaTable(
     spark: SparkSession,
     options: CaseInsensitiveStringMap,
     snapshot: Snapshot,
+    // the LATEST snapshot: accepts writes and streams; a time-travel load
+    // is a read-only batch relation
     writable: Boolean = false,
-    streaming: Boolean = false,
     // catalog-loaded tables declare the strict v2 BATCH_WRITE capability
     // (required by dynamic partition overwrite); the PATH-based
     // DataFrameWriter face keeps V1-only so its option wiring (txnAppId/
@@ -44,7 +45,14 @@ class GwDeltaTable(
     with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations {
 
   override def name(): String = tableName
-  override def schema(): StructType = snapshot.schema
+
+  /** A path load with `readChangeFeed` is the table's change feed: its
+    * columns plus the feed's metadata columns, readable only as a stream. */
+  private val changeFeed = options.getBoolean("readChangeFeed", false)
+
+  override def schema(): StructType =
+    if (changeFeed) GwStreamAdmission.changeFeedSchema(snapshot.schema)
+    else snapshot.schema
 
   /** Log-metadata configuration (TBLPROPERTIES), exposed so analysis-time
     * consumers — the CHECK-constraint rule ([[GwConstraintRule]]), SHOW
@@ -64,8 +72,12 @@ class GwDeltaTable(
   /** Filesystem location of the table (maintenance SQL resolution). */
   def tablePath: String = options.get("path")
   override def capabilities(): java.util.Set[TableCapability] = {
+    if (changeFeed)
+      return if (writable) java.util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
+      else java.util.EnumSet.noneOf(classOf[TableCapability])
     val caps = java.util.EnumSet.of(TableCapability.BATCH_READ)
     if (writable) {
+      caps.add(TableCapability.MICRO_BATCH_READ)
       caps.add(TableCapability.V1_BATCH_WRITE)
       caps.add(TableCapability.TRUNCATE)
       caps.add(TableCapability.STREAMING_WRITE)
@@ -86,7 +98,6 @@ class GwDeltaTable(
         caps.add(TableCapability.OVERWRITE_DYNAMIC)
       }
     }
-    if (streaming) caps.add(TableCapability.MICRO_BATCH_READ)
     caps
   }
 
@@ -112,14 +123,15 @@ class GwDeltaTable(
       .toArray
 
   override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder =
-    if (!streaming) new GwPruningScanBuilder(tableName, spark, opts, snapshot)
+    if (!writable) new GwPruningScanBuilder(tableName, spark, opts, snapshot)
     else new GwPruningScanBuilder(tableName, spark, opts, snapshot) {
       // same pruning batch scan, plus the streaming entry point
-      // (spark.readStream.table) that tails the log version by version;
-      // the per-read options carry the stream's rate limits
+      // (readStream.format("gwdelta") / readStream.table) that tails the
+      // log version by version; the per-read options carry the stream's
+      // rate limits
       override def build(): Scan =
         new GwDeltaScan(super.build(), spark, options.get("path"),
-          snapshot.schema, opts)
+          snapshot.schema, opts, changeFeed)
     }
 
   /** INSERT INTO / INSERT OVERWRITE / df.writeTo(...): a V1Write bridge

@@ -1,9 +1,8 @@
 package org.apache.spark.sql.graftbridge
 
-import graft.log.{AddFile, GwLog, Metadata}
+import graft.log.{AddFile, CdcFile, GwLog, Metadata, RemoveFile}
 import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, Offset => OffsetV2, ReadAllAvailable, ReadLimit, ReadMaxBytes, ReadMaxFiles}
-import org.apache.spark.sql.execution.streaming.{Offset => OffsetV1}
-import org.apache.spark.sql.execution.streaming.runtime.LongOffset
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
 /**
  * Stream offset over a gwdelta log: a log VERSION, plus — only while the
@@ -17,7 +16,7 @@ import org.apache.spark.sql.execution.streaming.runtime.LongOffset
  * deterministic commit-order replay of the log ([[graft.log.Snapshot]]) —
  * the same log always yields the same slices.
  */
-case class GwStreamOffset(version: Long, snapIdx: Long = -1L) extends OffsetV1 {
+case class GwStreamOffset(version: Long, snapIdx: Long = -1L) extends OffsetV2 {
   override def json: String =
     if (snapIdx < 0) version.toString else s"""{"v":$version,"i":$snapIdx}"""
 }
@@ -33,20 +32,24 @@ object GwStreamOffset {
     } else GwStreamOffset(t.toLong)
   }
 
-  /** Any offset the engine hands back (ours, LongOffset, or a checkpoint's
+  /** Any offset the engine hands back (ours or a checkpoint's
     * SerializedOffset) -> the typed form; null = nothing consumed. */
   def of(o: OffsetV2): GwStreamOffset = o match {
     case null => GwStreamOffset(-1L)
     case g: GwStreamOffset => g
-    case l: LongOffset => GwStreamOffset(l.offset)
     case other => parse(other.json)
   }
 }
 
+/** One version's share of a change-feed batch: the files whose rows the
+  * feed emits for `version`, tagged `changeType`. `None` marks change-data
+  * files, which carry their own `_change_type` column. */
+case class GwChangeSlice(version: Long, changeType: Option[String], paths: Seq[String])
+
 /**
- * Admission control shared by both stream faces of a gwdelta table (the V1
- * `format("gwdelta")` source and the V2 catalog `readStream.table` stream):
- * `maxFilesPerTrigger` / `maxBytesPerTrigger` bound each micro-batch, and
+ * Admission control of the gwdelta stream ([[GwMicroBatchStream]], both
+ * the `format("gwdelta")` path face and the catalog `readStream.table`
+ * face): `maxFilesPerTrigger` / `maxBytesPerTrigger` bound each micro-batch, and
  * `Trigger.AvailableNow` runs the backlog in those bounded batches and
  * stops. The initial snapshot — the 100 TB case — is sliced WITHIN a
  * version by file index ([[GwStreamOffset]]); incremental tailing admits
@@ -153,6 +156,70 @@ object GwStreamAdmission {
           return GwStreamOffset(admitted)
       }
       GwStreamOffset(admitted)
+    }
+  }
+
+  val CommitVersionCol = "_commit_version"
+
+  /** Table schema + the change-feed metadata columns. */
+  def changeFeedSchema(base: StructType): StructType =
+    base.add(graft.Cdc.ChangeTypeCol, StringType).add(CommitVersionCol, LongType)
+
+  /** Change-feed admission: every whole version up to `capVersion` (a
+    * commit is the feed's unit; snapshot slicing and file caps do not apply). */
+  def nextChangeOffset(log: GwLog, start: GwStreamOffset,
+      capVersion: Option[Long]): GwStreamOffset = {
+    val latest = log.latestVersion().getOrElse(-1L)
+    val end = capVersion.fold(latest)(math.min(latest, _))
+    if (end > start.version) GwStreamOffset(end) else start
+  }
+
+  /** The change feed of versions `(start, end]` (`start` -1 = from version
+    * 0), one slice per version that changes rows: the commit's change-data
+    * files ([[graft.Cdc]]) when it has them, else the added rows of an
+    * insert-only commit or the removed rows of a remove-only one. Other
+    * commits and schema restatements stop the feed with guidance (the
+    * batch `GwTable.rowChanges`); property-only restatements pass. */
+  def changeSlices(log: GwLog, tablePath: String,
+      start: Long, end: Long): Seq[GwChangeSlice] = {
+    def stop(v: Long, why: String): Nothing = throw new IllegalStateException(
+      s"gwdelta CDF stream at $tablePath: version $v $why")
+    var curMeta: Option[Metadata] =
+      if (start < 0) None else log.snapshot(Some(start)).metadata
+    ((start + 1) to end).flatMap { v =>
+      val actions = log.readVersion(v)
+      actions.collectFirst { case m: Metadata => m }.foreach { m =>
+        val benign = v == 0 || curMeta.exists(c =>
+          c.schemaString == m.schemaString &&
+            c.partitionColumns == m.partitionColumns)
+        if (!benign)
+          stop(v, "restates the table's schema; row identity is undefined " +
+            "across schemas — restart consumption from a full snapshot")
+        curMeta = Some(m)
+      }
+      val cdcs = actions.collect { case c: CdcFile => c.path }
+      if (cdcs.nonEmpty) Some(GwChangeSlice(v, None, cdcs))
+      else {
+        val adds = actions.collect { case a: AddFile if a.dataChange => a }
+        val rms = actions.collect { case r: RemoveFile if r.dataChange => r.path }
+        if (adds.exists(_.dv.isDefined))
+          stop(v, "asserts deletion vectors; the position-level diff needs " +
+            "the batch API — GwTable.rowChanges")
+        if (adds.nonEmpty && rms.nonEmpty)
+          stop(v, "mixes added and removed data files (a rewrite); the " +
+            "row-level diff needs the batch API — GwTable.rowChanges")
+        if (rms.nonEmpty) {
+          // removed rows must be LIVE rows: a file that carried a deletion
+          // vector needs position reconciliation the feed cannot do
+          val prev = log.snapshot(Some(v - 1)).files.map(f => f.path -> f).toMap
+          if (rms.exists(p => prev.get(p).exists(_.dv.isDefined)))
+            stop(v, "removes a file carrying a deletion vector — use " +
+              "GwTable.rowChanges")
+        }
+        if (adds.nonEmpty) Some(GwChangeSlice(v, Some(graft.Cdc.Insert), adds.map(_.path)))
+        else if (rms.nonEmpty) Some(GwChangeSlice(v, Some(graft.Cdc.Delete), rms))
+        else None
+      }
     }
   }
 

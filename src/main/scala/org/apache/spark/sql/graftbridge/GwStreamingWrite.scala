@@ -23,11 +23,11 @@ import scala.collection.mutable
  * (Spark's own parquet OutputWriter, executor work), and the epoch commit is
  * ONE atomic log append through the same path as the V1 sink
  * ([[graft.streaming.GwSink.commitHarvested]]): txnId =
- * `"<queryId>/<epochId>"`, so a crash-replayed epoch re-arrives with the
- * same id and is skipped — exactly-once into the log. Only files reported
- * by committed tasks enter the commit; stray output from failed/speculative
- * attempts stays uncommitted under `_stream/` where `vacuum`'s debris rule
- * owns it.
+ * `"<queryId>/<epochId>"` (the V1 sink's id too), so a crash-replayed
+ * epoch re-arrives with the same id and is skipped — exactly-once into the
+ * log. Only files reported by committed tasks enter the commit; stray
+ * output from failed/speculative attempts stays uncommitted under
+ * `_stream/` where `vacuum`'s debris rule owns it.
  *
  * Partitioned tables: each task routes rows to one open writer per
  * partition-value combination (hive-style `__gwp_<col>=<value>` dirs, the
@@ -63,8 +63,14 @@ class GwStreamingWrite(
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val written = messages.collect { case GwFilesWritten(ps) => ps }.flatten.toSet
     val epochDir = new Path(s"$epochBase/$epochId")
+    // tasks report paths spelled like the table path (`file:///t/...`, a
+    // plain `/t/...`), the harvest lists them qualified (`file:/t/...`):
+    // compare both sides in the filesystem's qualified form
+    val fs = epochDir.getFileSystem(conf)
+    def qualified(p: String): String = fs.makeQualified(new Path(p)).toString
+    val written = messages.collect { case GwFilesWritten(ps) => ps }.flatten
+      .map(qualified).toSet
     // the shared harvesting rule (stats, zero-row drop, partition values
     // from the __gwp_ layout), restricted to files committed tasks reported
     val log0 = graft.log.GwLog.forTable(conf, tablePath)
@@ -78,8 +84,7 @@ class GwStreamingWrite(
         .harvestPartitioned(conf, epochDir, dataChange = true, partitionColumns,
           statsCols = graft.streaming.GwSink.statsColumnFilter(
             tableConfig, info.schema()))
-        .filter(f => written.contains(f.path) ||
-          written.contains(new Path(f.path).toUri.getPath))
+        .filter(f => written.contains(qualified(f.path)))
     graft.streaming.GwSink.commitHarvested(conf, tablePath, info.schema(), files,
       Some(s"${info.queryId()}/$epochId"), partitionColumns)
     ()

@@ -339,7 +339,7 @@ class GwDeltaSourceSpec extends AnyFunSuite {
     assert(drain() == 0, "no new versions -> empty drain")
   }
 
-  test("streams honor deletion vectors: V2 reconciles, V1 fails loudly / skips") {
+  test("streams honor deletion vectors: catalog and path faces both reconcile") {
     import org.apache.spark.sql.functions.expr
     import org.apache.spark.sql.streaming.Trigger
     catalogReady
@@ -377,21 +377,53 @@ class GwDeltaSourceSpec extends AnyFunSuite {
     spark.range(3000, 3005).selectExpr("id", "id % 7 AS grp")
       .write.format("gwdelta").mode("append").save(loc)
     assert(drain() == 5)
-    // V1 path-based stream: a DV'd initial snapshot cannot be reconciled
-    // there — must fail loudly, not serve deleted rows
-    val v1cp = work.resolve("v1cp").toString
-    val v1out = work.resolve("v1out").toString
-    val q = spark.readStream.format("gwdelta").load(loc)
-      .writeStream.format("parquet")
-      .option("path", v1out).option("checkpointLocation", v1cp)
+    // the path face plans the same V2 stream: its initial snapshot serves
+    // the table's live rows (deleted rows reconciled), not an error
+    val pathOut = work.resolve("path-out").toString
+    val pathStream = spark.readStream.format("gwdelta").load(loc)
+    assert(pathStream.queryExecution.analyzed.collectFirst {
+      case r: org.apache.spark.sql.catalyst.streaming.StreamingRelationV2 => r
+    }.nonEmpty, "the path face must plan a V2 streaming relation")
+    val q = pathStream.writeStream.format("parquet")
+      .option("path", pathOut)
+      .option("checkpointLocation", work.resolve("path-cp").toString)
       .trigger(Trigger.AvailableNow()).start()
-    val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      q.awaitTermination()
+    q.awaitTermination()
+    assert(q.recentProgress.flatMap(_.sources)
+      .exists(_.description.contains("GwMicroBatchStream")))
+    val live = spark.read.format("gwdelta").load(loc).count()
+    assert(live == 1504, "1,500 rows survive the first delete, one more is deleted, five appended")
+    assert(spark.read.parquet(pathOut).count() == live)
+    assert(spark.read.parquet(pathOut)
+      .filter(expr("id < 3000 AND (id % 2 = 0 OR id = 1)")).count() == 0)
+  }
+
+  test("a checkpoint written by the retired V1 path source restarts on the V2 stream") {
+    import org.apache.spark.sql.streaming.Trigger
+    val root = Files.createTempDirectory("gwdelta-v1cp")
+    val loc = root.resolve("t").toString
+    val region = spark.read.parquet(s"$sf/region.parquet").coalesce(1)
+    for (_ <- 0 until 3) graft.streaming.GwSink.append(region, loc) // v0..v2
+    // the committed checkpoint drained a two-version table through the V1
+    // GwDeltaStreamSource: one batch, last offset 1
+    val cp = root.resolve("cp")
+    val res = Paths.get(getClass.getResource("/stream/v1-path-checkpoint").toURI)
+    Files.walk(res).forEach { p =>
+      val dst = cp.resolve(res.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(dst) else Files.copy(p, dst)
     }
-    def rootMessages(e: Throwable): Seq[String] =
-      Option(e).toSeq.flatMap(x => x.getMessage +: rootMessages(x.getCause))
-    assert(rootMessages(err).exists(m => m != null && m.contains("deletion vectors")),
-      s"V1 stream over a DV'd snapshot must name the problem: ${err.getMessage}")
+    val served = new java.util.concurrent.atomic.AtomicLong()
+    val q = spark.readStream.format("gwdelta").load(loc)
+      .writeStream
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        served.addAndGet(b.count()); ()
+      }
+      .option("checkpointLocation", cp.toString)
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    assert(served.get == 5, "only version 2, after the checkpoint's offset, is served")
+    assert(q.recentProgress.flatMap(_.sources)
+      .exists(_.description.contains("GwMicroBatchStream")))
   }
 
   test("catalog: INSERT INTO appends a commit; INSERT OVERWRITE truncates atomically") {

@@ -109,6 +109,18 @@ class PartitionSpec extends AnyFunSuite {
     assert(snap.files.forall(_.partitionValues.contains("n_regionkey")),
       "the streaming batch must re-derive the partitioned layout")
     assert(spark.read.format("gwdelta").load(loc).count() == 50)
+    // a log-less target takes its layout from writeStream.partitionBy, which
+    // Spark hands only to a V1 sink — the reason that face stays
+    val fresh = Files.createTempDirectory("part-stream-boot").resolve("nation").toString
+    spark.readStream.schema(nation.schema).parquet(stage.toString)
+      .writeStream.format("gwdelta").partitionBy("n_regionkey")
+      .option("checkpointLocation",
+        Files.createTempDirectory("part-stream-boot-cp").toString)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start(fresh).awaitTermination()
+    val boot = GwTable.forPath(spark, fresh).snapshot()
+    assert(boot.metadata.map(_.partitionColumns).contains(Seq("n_regionkey")))
+    assert(boot.files.forall(_.partitionValues.contains("n_regionkey")))
   }
 
   test("SQL DELETE takes the merge-on-read path under spark.graft.mergeOnRead") {

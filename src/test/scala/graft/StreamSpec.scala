@@ -163,11 +163,41 @@ class StreamSpec extends SparkSpec {
     val table = GwTable.forPath(spark, tablePath)
     assert(table.toDF.count() == 10, "two staged files, one commit each")
     assert(table.snapshot().version == 1L)
+    // a crash after batch 1's log commit, before Spark's own commit marker:
+    // the restart replays it through the V2 face (the log exists now),
+    // which must recognise the V1 face's commit of the same batch
+    Files.delete(java.nio.file.Paths.get(cp, "commits", "1"))
+    Files.deleteIfExists(java.nio.file.Paths.get(cp, "commits", ".1.crc"))
     // restart from the checkpoint with one NEW file: exactly one more commit
     StreamOps.stageLinks(src, stage, Seq("c.parquet"))
     drain()
     assert(table.toDF.count() == 15, "only the new file's rows were appended")
     assert(table.snapshot().version == 2L, "no duplicate commits on resume")
+  }
+
+  test("writeStream.format(gwdelta) restarted into an existing file:/// table commits its rows") {
+    import java.nio.file.{Files, Paths}
+    val root = Files.createTempDirectory("gwsink-uri")
+    val tableUri = root.resolve("t").toUri.toString.replaceFirst("^file:/+", "file:///")
+    val cp = root.resolve("cp").toString
+    val stage = Files.createTempDirectory("gwsink-uri-stage")
+    val src = Paths.get(s"$dir/region.parquet")
+    val schema = spark.read.parquet(src.toString).schema
+    def drain(): Unit = {
+      val q = spark.readStream.schema(schema).parquet(stage.toString)
+        .writeStream.format("gwdelta")
+        .option("checkpointLocation", cp)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start(tableUri)
+      q.awaitTermination()
+    }
+    StreamOps.stageLinks(src, stage, Seq("a.parquet"))
+    drain() // no log yet: bootstraps through the V1 sink
+    StreamOps.stageLinks(src, stage, Seq("b.parquet"))
+    drain() // the restart writes through the existing table's V2 face
+    val table = GwTable.forPath(spark, tableUri)
+    assert(table.snapshot().version == 1L, "the restarted batch must commit")
+    assert(table.toDF.count() == 10)
   }
 
   test("writeStream.toTable enforces declared CHECK constraints per micro-batch") {
