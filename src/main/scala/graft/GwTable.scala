@@ -1,6 +1,6 @@
 package graft
 
-import graft.log.{Action, AddFile, CommitInfo, GwLog, Metadata, RemoveFile, Snapshot}
+import graft.log.{Action, AddFile, GwLog, GwTxn, Metadata, RemoveFile, Snapshot}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
@@ -217,25 +217,15 @@ final class GwTable private (spark: SparkSession, tablePath: String) {
           partitionValues = f.partitionValues))
       adds ++ removes
     }
-    val newBytes = rewritten.collect { case a: AddFile => a.size }
-    val info = CommitInfo(
-      timestamp = now, operation = "OPTIMIZE", mode = "Compact",
-      numFiles = newBytes.size, numOutputBytes = newBytes.sum,
-      isBlindAppend = false, txnId = java.util.UUID.randomUUID().toString)
     // conflict-checked commit: a compaction re-adds every row of the files
     // it read, so a concurrent DML that removed one of them (or grew its
     // deletion vector) mid-rewrite would be silently UNDONE — rows
     // resurrected — if this committed blindly. Retry past benign winners
     // (appends land files this rewrite never touched); abort with the
     // typed taxonomy when the plan is invalidated (graft.log.Occ).
-    graft.streaming.GwSink.commitWithRetry(gwLog) { _ =>
-      val fresh = gwLog.snapshot(None)
-      graft.log.Occ.checkTableState(tablePath.toString, snap, fresh)
-      val live = fresh.files.map(f => f.path -> f).toMap
-      graft.log.Occ.checkFiles(tablePath.toString, live,
-        deletes = groupsToDo.flatMap(_._2))
-      rewritten :+ info
-    }
+    GwTxn(gwLog, "OPTIMIZE", "Compact",
+      GwTxn.Rewrite(Some(snap), deletes = groupsToDo.flatMap(_._2)))
+      .commit(_ => rewritten)
   }
 
   /** Which of `tuples` (partition-column string values, in `partCols`
@@ -440,12 +430,10 @@ final class GwTable private (spark: SparkSession, tablePath: String) {
             .readStats(sconf.value, p, statsCols).map(p -> _))
         }.collect().toMap
       if (harvested.nonEmpty) {
-        val now = System.currentTimeMillis()
         var committed = 0 // assigned per OCC attempt; added once on success
         try {
-          graft.streaming.GwSink.commitWithRetry(gwLog) { _ =>
-            val fresh = gwLog.snapshot(None)
-            graft.log.Occ.checkTableState(tablePath.toString, snap, fresh)
+          GwTxn(gwLog, "COMPUTE STATISTICS", "Analyze", GwTxn.Rewrite(Some(snap)),
+              numOutputBytes = Some(0L)).commit { fresh =>
             val liveNow = fresh.files.map(f => f.path -> f).toMap
             // rebase onto the files as they are NOW: stats derive from the
             // immutable file bytes, so they graft onto whatever
@@ -455,9 +443,7 @@ final class GwTable private (spark: SparkSession, tablePath: String) {
                 cur.copy(stats = Some(harvested(p)), dataChange = false)))
             if (adds.isEmpty) throw new GwTable.NothingToCommit
             committed = adds.size
-            adds :+ CommitInfo(now, "COMPUTE STATISTICS", "Analyze",
-              numFiles = adds.size, numOutputBytes = 0, isBlindAppend = false,
-              txnId = java.util.UUID.randomUUID().toString)
+            adds
           }
           refreshed += committed
         } catch { case _: GwTable.NothingToCommit => () }
@@ -725,25 +711,16 @@ final class GwTable private (spark: SparkSession, tablePath: String) {
       dvPairs: Seq[(AddFile, AddFile)], newAdds: Seq[AddFile],
       verify: Seq[AddFile] = Nil, readSnap: Option[Snapshot] = None,
       cdc: Seq[Action] = Nil): Long =
-    graft.streaming.GwSink.commitWithRetry(gwLog) { _ =>
-      val now = System.currentTimeMillis()
-      val fresh = gwLog.snapshot(None)
-      fresh.protocol.foreach(p =>
-        graft.log.Protocol.assertWritable(tablePath.toString, p))
+    // tombstoned + DV-re-asserted files are this op's DELETES; untouched
+    // candidates it only read classify separately (Occ taxonomy); the
+    // re-asserted copies move no bytes
+    GwTxn(gwLog, operation, "MergeOnRead",
+      GwTxn.Rewrite(readSnap, deletes = removes ++ dvPairs.map(_._1), reads = verify),
+      numOutputBytes = Some(newAdds.map(_.size).sum)).commit { fresh =>
       GwTable.assertNotAppendOnly(tablePath, fresh, operation)
-      readSnap.foreach(r => graft.log.Occ.checkTableState(tablePath.toString, r, fresh))
-      val live = fresh.files.map(f => f.path -> f).toMap
-      // tombstoned + DV-re-asserted files are this op's DELETES; untouched
-      // candidates it only read classify separately (Occ taxonomy)
-      graft.log.Occ.checkFiles(tablePath.toString, live,
-        deletes = removes ++ dvPairs.map(_._1), reads = verify)
-      val dvAdds = dvPairs.map(_._2)
-      val rms: Seq[Action] = removes.map(f => RemoveFile(f.path, f.size, now))
-      val info = CommitInfo(now, operation, "MergeOnRead",
-        numFiles = dvAdds.size + newAdds.size,
-        numOutputBytes = newAdds.map(_.size).sum,
-        isBlindAppend = false, txnId = java.util.UUID.randomUUID().toString)
-      rms ++ dvAdds ++ newAdds ++ cdc :+ info
+      val now = System.currentTimeMillis()
+      removes.map(f => RemoveFile(f.path, f.size, now)) ++ dvPairs.map(_._2) ++
+        newAdds ++ cdc
     }
 
   /**
@@ -1012,8 +989,8 @@ final class GwTable private (spark: SparkSession, tablePath: String) {
     import org.apache.spark.sql.functions.{first, max, monotonically_increasing_id}
     // exactly-once (same contract as GwSink.append): a merge whose txnId
     // already committed is a crash replay — skip every scan and return the
-    // original version; the guard re-checks inside the commit retry loop
-    graft.streaming.GwSink.replayedVersion(gwLog, txnId)
+    // original version; every commit attempt re-checks it ([[GwTxn]])
+    GwTxn.replayedVersion(gwLog, txnId)
       .foreach(v => return v)
     require(whenMatchedSet.nonEmpty || insertNotMatched || whenMatchedDeleteIf.nonEmpty,
       "MERGE needs a matched-update, matched-delete and/or not-matched-insert action")
@@ -1270,31 +1247,19 @@ final class GwTable private (spark: SparkSession, tablePath: String) {
       newAdds: Seq[AddFile], readSnap: Option[Snapshot] = None,
       cdc: Seq[Action] = Nil, metaRestate: Option[Metadata] = None,
       txnId: Option[String] = None): Long =
-    graft.streaming.GwSink.commitReplayable(gwLog, txnId) { _ =>
-      val now = System.currentTimeMillis()
-      val fresh = gwLog.snapshot(None)
-      fresh.protocol.foreach(p =>
-        graft.log.Protocol.assertWritable(tablePath.toString, p))
+    // a parseable "<app>/<batch>" txnId is exactly-once, like the sink's
+    // appends: a raced replay is a no-op and the commit carries the txn
+    GwTxn(gwLog, operation, "CopyOnWrite", GwTxn.Rewrite(readSnap, deletes = removes),
+      txnId = txnId).commit { fresh =>
       if (removes.nonEmpty) // MERGE with inserts only stays append-legal
         GwTable.assertNotAppendOnly(tablePath, fresh, operation)
-      readSnap.foreach(r => graft.log.Occ.checkTableState(tablePath.toString, r, fresh))
-      val live = fresh.files.map(f => f.path -> f).toMap
-      graft.log.Occ.checkFiles(tablePath.toString, live, deletes = removes)
-      val rms: Seq[Action] = removes.map(f => RemoveFile(f.path, f.size, now))
-      val info = CommitInfo(now, operation, "CopyOnWrite",
-        numFiles = newAdds.size, numOutputBytes = newAdds.map(_.size).sum,
-        isBlindAppend = false,
-        txnId = txnId.getOrElse(java.util.UUID.randomUUID().toString))
-      // a parseable "<app>/<batch>" txnId also commits the spec's txn
-      // action, exactly like the sink's appends — replay detection then
-      // survives checkpoints and any log length
-      val txn = txnId.flatMap(graft.streaming.GwSink.parseTxnId)
-        .map { case (app, batch) => graft.log.SetTransaction(app, batch, Some(now)) }
+      val now = System.currentTimeMillis()
       // schema evolution rides the SAME commit as its data (a reader can
       // never see evolved rows under the old schema or vice versa); OCC's
-      // metadata check above aborts if anyone else restated mid-flight,
-      // so the planning-time restatement can never clobber foreign DDL
-      metaRestate.toSeq ++ rms ++ newAdds ++ cdc ++ txn.toSeq :+ info
+      // metadata check aborts if anyone else restated mid-flight, so the
+      // planning-time restatement can never clobber foreign DDL
+      metaRestate.toSeq ++ removes.map(f => RemoveFile(f.path, f.size, now)) ++
+        newAdds ++ cdc
     }
 
   /** Connector commit hook for SQL UPDATE / MERGE INTO (`ReplaceData`,
@@ -1434,15 +1399,10 @@ final class GwTable private (spark: SparkSession, tablePath: String) {
     * `vacuum`. Returns the committed version, or -1 on an empty log. */
   def truncate(): Long = {
     if (gwLog.listVersions().isEmpty) return -1L
-    graft.streaming.GwSink.commitWithRetry(gwLog) { _ =>
-      val now = System.currentTimeMillis()
-      val snap = gwLog.snapshot(None)
+    GwTxn(gwLog, "DELETE", "Truncate").commit { snap =>
       GwTable.assertNotAppendOnly(tablePath, snap, "TRUNCATE")
-      val removes: Seq[Action] =
-        snap.files.map(f => RemoveFile(f.path, f.size, now))
-      removes :+ CommitInfo(now, "DELETE", "Truncate",
-        numFiles = 0, numOutputBytes = 0, isBlindAppend = false,
-        txnId = java.util.UUID.randomUUID().toString)
+      val now = System.currentTimeMillis()
+      snap.files.map(f => RemoveFile(f.path, f.size, now))
     }
   }
 
@@ -1482,10 +1442,11 @@ final class GwTable private (spark: SparkSession, tablePath: String) {
           s"${missing.headOption.getOrElse("")} no longer exists (vacuumed); " +
           "restore to a newer version")
     }
-    graft.streaming.GwSink.commitWithRetry(gwLog) { _ =>
-      val now = System.currentTimeMillis()
-      val cur = gwLog.snapshot(None)
+    // re-asserted files move no bytes
+    GwTxn(gwLog, "RESTORE", s"toVersion=$version",
+        numOutputBytes = Some(0L)).commit { cur =>
       GwTable.assertNotAppendOnly(tablePath, cur, "RESTORE")
+      val now = System.currentTimeMillis()
       val curByPath = cur.files.map(f => f.path -> f).toMap
       val removes: Seq[Action] = cur.files
         .filterNot(f => tgtByPath.get(f.path).contains(f))
@@ -1523,10 +1484,7 @@ final class GwTable private (spark: SparkSession, tablePath: String) {
             graft.log.DomainMetadata(d, c)
         } ++ (cur.domains.keySet -- target.domains.keySet).toSeq.sorted.map(
           d => graft.log.DomainMetadata(d, "", removed = true))
-      val info = CommitInfo(now, "RESTORE", s"toVersion=$version",
-        numFiles = adds.size, numOutputBytes = 0,
-        isBlindAppend = false, txnId = java.util.UUID.randomUUID().toString)
-      meta ++ doms ++ removes ++ adds :+ info
+      meta ++ doms ++ removes ++ adds
     }
   }
 
@@ -1549,8 +1507,19 @@ final class GwTable private (spark: SparkSession, tablePath: String) {
     val tgt = graft.log.GwLog.forTable(conf, targetPath)
     require(tgt.listVersions().isEmpty,
       s"cannot SHALLOW CLONE into $targetPath: a table already exists there")
-    graft.streaming.GwSink.commitWithRetry(tgt) { bootstrap =>
-      if (!bootstrap) throw new IllegalStateException(
+    // the clone references the source's files: no bytes written
+    commitClone(tgt, targetPath, snap, s"from=$tablePath@v${snap.version}",
+      snap.files.map(_.copy(dataChange = true)), outputBytes = 0L)
+  }
+
+  /** A clone's one commit at `targetPath`: protocol, fresh-id metadata, the
+    * source's metadata domains (Delta spec) and `adds`. Refuses an attempt
+    * that finds the target already created. */
+  private def commitClone(tgt: GwLog, targetPath: String, snap: Snapshot,
+      mode: String, adds: Seq[AddFile], outputBytes: Long): Long =
+    GwTxn(tgt, "CLONE", mode, isBlindAppend = true,
+        numOutputBytes = Some(outputBytes)).commitOrCreate { fresh =>
+      if (fresh.isDefined) throw new IllegalStateException(
         s"concurrent table creation at $targetPath raced the clone; re-run")
       val now = System.currentTimeMillis()
       val meta = snap.metadata
@@ -1558,16 +1527,9 @@ final class GwTable private (spark: SparkSession, tablePath: String) {
         .getOrElse(graft.log.Metadata(
           id = java.util.UUID.randomUUID().toString,
           schemaString = snap.schema.json, createdTime = now))
-      val adds: Seq[Action] = snap.files.map(_.copy(dataChange = true))
-      // Delta spec: clones carry the source's metadata domains
-      val doms: Seq[Action] =
-        snap.domains.toSeq.map { case (d, c) => graft.log.DomainMetadata(d, c) }
-      val info = CommitInfo(now, "CLONE", s"from=$tablePath@v${snap.version}",
-        numFiles = snap.files.size, numOutputBytes = 0,
-        isBlindAppend = true, txnId = java.util.UUID.randomUUID().toString)
-      (graft.log.Protocol(): Action) +: (meta: Action) +: (doms ++ adds) :+ info
+      Seq(graft.log.Protocol(), meta) ++
+        snap.domains.toSeq.map { case (d, c) => graft.log.DomainMetadata(d, c) } ++ adds
     }
-  }
 
   /**
    * DEEP CLONE: bootstrap a NEW table at `targetPath` that owns a physical
@@ -1633,32 +1595,17 @@ final class GwTable private (spark: SparkSession, tablePath: String) {
           val st = dp.getFileSystem(c).getFileStatus(dp)
           (dst, (st.getLen, st.getModificationTime))
         }.collect().toMap
-    graft.streaming.GwSink.commitWithRetry(tgt) { bootstrap =>
-      if (!bootstrap) throw new IllegalStateException(
-        s"concurrent table creation at $targetPath raced the clone; re-run")
-      val now = System.currentTimeMillis()
-      val meta = snap.metadata
-        .map(m => m.copy(id = java.util.UUID.randomUUID().toString, createdTime = now))
-        .getOrElse(graft.log.Metadata(
-          id = java.util.UUID.randomUUID().toString,
-          schemaString = snap.schema.json, createdTime = now))
-      val adds: Seq[Action] = dataDst.map { case (f, d) =>
-        val (sz, mt) = copied(d)
-        f.copy(path = d, size = sz, modificationTime = mt, dataChange = true,
-          dv = f.dv.map(v =>
-            if (v.isOnDisk) v.copy(pathOrInlineDv = dvDst(v.pathOrInlineDv))
-            else v),
-          stats = f.stats.map(graft.log.Bloom.remapStats(_, bloomDst)))
-      }
-      // Delta spec: clones carry the source's metadata domains
-      val doms: Seq[Action] =
-        snap.domains.toSeq.map { case (d, c) => graft.log.DomainMetadata(d, c) }
-      val info = CommitInfo(now, "CLONE",
-        s"from=$tablePath@v${snap.version} mode=deep",
-        numFiles = adds.size, numOutputBytes = copied.map(_._2._1).sum,
-        isBlindAppend = true, txnId = java.util.UUID.randomUUID().toString)
-      (graft.log.Protocol(): Action) +: (meta: Action) +: (doms ++ adds) :+ info
+    val adds = dataDst.map { case (f, d) =>
+      val (sz, mt) = copied(d)
+      f.copy(path = d, size = sz, modificationTime = mt, dataChange = true,
+        dv = f.dv.map(v =>
+          if (v.isOnDisk) v.copy(pathOrInlineDv = dvDst(v.pathOrInlineDv))
+          else v),
+        stats = f.stats.map(graft.log.Bloom.remapStats(_, bloomDst)))
     }
+    // output bytes count every copied object, sidecars included
+    commitClone(tgt, targetPath, snap, s"from=$tablePath@v${snap.version} mode=deep",
+      adds, outputBytes = copied.map(_._2._1).sum)
   }
 
   /** Row-level change feed (CDF): the inserted/deleted ROWS per commit in
@@ -1783,10 +1730,8 @@ final class GwTable private (spark: SparkSession, tablePath: String) {
     * committed version. */
   def addColumns(cols: org.apache.spark.sql.types.StructField*): Long = {
     require(cols.nonEmpty, "no columns to add")
-    graft.streaming.GwSink.commitWithRetry(gwLog) { _ =>
-      val snap = gwLog.snapshot(None)
-      val meta = snap.metadata.getOrElse(throw new IllegalStateException(
-        s"cannot ALTER a table with no schema in its log: $tablePath"))
+    GwTxn(gwLog, "ADD COLUMNS", "Upgrade").commit { snap =>
+      val meta = alterable(snap)
       val existing = snap.schema.fieldNames.map(_.toLowerCase).toSet
       cols.map(_.name).find(n => existing.contains(n.toLowerCase)).foreach(n =>
         throw new IllegalArgumentException(s"column already exists: $n"))
@@ -1814,13 +1759,14 @@ final class GwTable private (spark: SparkSession, tablePath: String) {
       }
       val widened = org.apache.spark.sql.types.StructType(
         snap.schema.fields ++ added)
-      Seq(
-        meta.copy(schemaString = widened.json),
-        CommitInfo(System.currentTimeMillis(), "ADD COLUMNS", "Upgrade",
-          numFiles = 0, numOutputBytes = 0, isBlindAppend = false,
-          txnId = java.util.UUID.randomUUID().toString))
+      Seq(meta.copy(schemaString = widened.json))
     }
   }
+
+  /** The metadata an ALTER restates; refuses a log without a schema. */
+  private def alterable(snap: Snapshot): Metadata =
+    snap.metadata.getOrElse(throw new IllegalStateException(
+      s"cannot ALTER a table with no schema in its log: $tablePath"))
 
   /**
    * `REORG TABLE ... APPLY (PURGE)`: physically rebase the table — rewrite
@@ -1879,20 +1825,11 @@ final class GwTable private (spark: SparkSession, tablePath: String) {
             partitionValues = f.partitionValues))
         adds ++ removes
     }
-    val info = CommitInfo(now, "REORG", "Purge",
-      numFiles = rewritten.count(_.isInstanceOf[AddFile]),
-      numOutputBytes = rewritten.collect { case a: AddFile => a.size }.sum,
-      isBlindAppend = false, txnId = java.util.UUID.randomUUID().toString)
-    graft.streaming.GwSink.commitWithRetry(gwLog) { _ =>
-      val fresh = gwLog.snapshot(None)
-      graft.log.Occ.checkTableState(tablePath.toString, snap, fresh)
-      val live = fresh.files.map(f => f.path -> f).toMap
-      graft.log.Occ.checkFiles(tablePath.toString, live, deletes = toRewrite)
-      val newMeta: Seq[Action] =
-        if (!metaChanged) Nil
-        else Seq(meta.copy(schemaString = cleanSchema.json, configuration = cleanConf))
-      newMeta ++ rewritten :+ info
-    }
+    val newMeta: Seq[Action] =
+      if (!metaChanged) Nil
+      else Seq(meta.copy(schemaString = cleanSchema.json, configuration = cleanConf))
+    GwTxn(gwLog, "REORG", "Purge", GwTxn.Rewrite(Some(snap), deletes = toRewrite))
+      .commit(_ => newMeta ++ rewritten)
   }
 
   /** Guardrail shared by RENAME/DROP COLUMN: the column must exist, must
@@ -1937,10 +1874,8 @@ final class GwTable private (spark: SparkSession, tablePath: String) {
     require(newName.nonEmpty && newName.forall(c =>
       !c.isWhitespace && !"=,;{}()".contains(c)),
       s"invalid column name: '$newName'")
-    graft.streaming.GwSink.commitWithRetry(gwLog) { _ =>
-      val snap = gwLog.snapshot(None)
-      val meta = snap.metadata.getOrElse(throw new IllegalStateException(
-        s"cannot ALTER a table with no schema in its log: $tablePath"))
+    GwTxn(gwLog, "RENAME COLUMN", s"$oldName->$newName").commit { snap =>
+      val meta = alterable(snap)
       val field = mappableColumn(meta, snap.schema, oldName, "rename")
       require(!snap.schema.fieldNames.exists(_.equalsIgnoreCase(newName)),
         s"cannot rename '$oldName' to '$newName': the name is taken")
@@ -1952,11 +1887,7 @@ final class GwTable private (spark: SparkSession, tablePath: String) {
               graft.log.ColumnMapping.physicalName(f))
             .build())
       })
-      Seq(
-        meta.copy(schemaString = renamed.json),
-        CommitInfo(System.currentTimeMillis(), "RENAME COLUMN",
-          s"$oldName->$newName", numFiles = 0, numOutputBytes = 0,
-          isBlindAppend = false, txnId = java.util.UUID.randomUUID().toString))
+      Seq(meta.copy(schemaString = renamed.json))
     }
   }
 
@@ -1974,15 +1905,17 @@ final class GwTable private (spark: SparkSession, tablePath: String) {
     * foreign reader that would misread narrow physical bytes must refuse
     * the table instead. Narrowing or any lossy change is refused typed. */
   def widenColumn(name: String, to: org.apache.spark.sql.types.DataType): Long = {
-    graft.streaming.GwSink.commitWithRetry(gwLog) { _ =>
-      val snap = gwLog.snapshot(None)
-      val meta = snap.metadata.getOrElse(throw new IllegalStateException(
-        s"cannot ALTER a table with no schema in its log: $tablePath"))
-      val field = mappableColumn(meta, snap.schema, name, "widen")
-      require(GwTable.isWidening(field.dataType, to),
-        s"cannot ALTER COLUMN '$name' TYPE ${to.sql}: only lossless " +
-          s"widenings of ${field.dataType.sql} are supported (narrowing " +
-          "or cross-family changes would misread existing file bytes)")
+    // the logged mode names the widened-from type, so the commit is
+    // planned on this snapshot and aborts if its metadata changes
+    val planned = gwLog.snapshot(None)
+    val field = mappableColumn(alterable(planned), planned.schema, name, "widen")
+    require(GwTable.isWidening(field.dataType, to),
+      s"cannot ALTER COLUMN '$name' TYPE ${to.sql}: only lossless " +
+        s"widenings of ${field.dataType.sql} are supported (narrowing " +
+        "or cross-family changes would misread existing file bytes)")
+    GwTxn(gwLog, "ALTER COLUMN", s"$name ${field.dataType.sql}->${to.sql}",
+        GwTxn.Rewrite(Some(planned))).commit { snap =>
+      val meta = alterable(snap)
       val widened = org.apache.spark.sql.types.StructType(
         snap.schema.fields.map { f =>
           if (f.name != field.name) f
@@ -1995,14 +1928,8 @@ final class GwTable private (spark: SparkSession, tablePath: String) {
                   s"${field.dataType.typeName}->${to.typeName}@v${snap.version + 1}")
               .build())
         })
-      Seq(
-        meta.copy(schemaString = widened.json,
-          configuration =
-            meta.configuration + ("graft.enableTypeWidening" -> "true")),
-        CommitInfo(System.currentTimeMillis(), "ALTER COLUMN",
-          s"$name ${field.dataType.sql}->${to.sql}", numFiles = 0,
-          numOutputBytes = 0, isBlindAppend = false,
-          txnId = java.util.UUID.randomUUID().toString))
+      Seq(meta.copy(schemaString = widened.json,
+        configuration = meta.configuration + ("graft.enableTypeWidening" -> "true")))
     }
   }
 
@@ -2017,10 +1944,9 @@ final class GwTable private (spark: SparkSession, tablePath: String) {
     * expression must be a constant-foldable literal castable to the
     * column's type — validated here, before the commit. */
   def setColumnDefault(name: String, defaultSql: Option[String]): Long = {
-    graft.streaming.GwSink.commitWithRetry(gwLog) { _ =>
-      val snap = gwLog.snapshot(None)
-      val meta = snap.metadata.getOrElse(throw new IllegalStateException(
-        s"cannot ALTER a table with no schema in its log: $tablePath"))
+    GwTxn(gwLog, "ALTER COLUMN", defaultSql.map(s => s"$name SET DEFAULT $s")
+        .getOrElse(s"$name DROP DEFAULT")).commit { snap =>
+      val meta = alterable(snap)
       val field = snap.schema.fields.find(_.name.equalsIgnoreCase(name))
         .getOrElse(throw new IllegalArgumentException(
           s"cannot set default on column '$name': not in the table schema " +
@@ -2060,13 +1986,7 @@ final class GwTable private (spark: SparkSession, tablePath: String) {
             f.copy(metadata = b.build())
           }
         })
-      Seq(
-        meta.copy(schemaString = updated.json),
-        CommitInfo(System.currentTimeMillis(), "ALTER COLUMN",
-          defaultSql.map(s => s"$name SET DEFAULT $s")
-            .getOrElse(s"$name DROP DEFAULT"),
-          numFiles = 0, numOutputBytes = 0, isBlindAppend = false,
-          txnId = java.util.UUID.randomUUID().toString))
+      Seq(meta.copy(schemaString = updated.json))
     }
   }
 
@@ -2074,10 +1994,8 @@ final class GwTable private (spark: SparkSession, tablePath: String) {
     * leaves the logical schema; the bytes stay in the files (pre-drop
     * versions read them via time travel), new scans never request them. */
   def dropColumn(name: String): Long = {
-    graft.streaming.GwSink.commitWithRetry(gwLog) { _ =>
-      val snap = gwLog.snapshot(None)
-      val meta = snap.metadata.getOrElse(throw new IllegalStateException(
-        s"cannot ALTER a table with no schema in its log: $tablePath"))
+    GwTxn(gwLog, "DROP COLUMN", name).commit { snap =>
+      val meta = alterable(snap)
       val field = mappableColumn(meta, snap.schema, name, "drop")
       require(snap.schema.fields.length > 1,
         s"cannot drop '$name': it is the table's only column")
@@ -2088,12 +2006,8 @@ final class GwTable private (spark: SparkSession, tablePath: String) {
       // resurrect as the "new" column
       val dropKey = GwTable.DroppedPhysicalPrefix +
         graft.log.ColumnMapping.physicalName(field).toLowerCase
-      Seq(
-        meta.copy(schemaString = narrowed.json,
-          configuration = meta.configuration + (dropKey -> "true")),
-        CommitInfo(System.currentTimeMillis(), "DROP COLUMN", name,
-          numFiles = 0, numOutputBytes = 0, isBlindAppend = false,
-          txnId = java.util.UUID.randomUUID().toString))
+      Seq(meta.copy(schemaString = narrowed.json,
+        configuration = meta.configuration + (dropKey -> "true")))
     }
   }
 
@@ -2210,30 +2124,22 @@ final class GwTable private (spark: SparkSession, tablePath: String) {
             s"UPDATE ... SET $colName = $v")
       }
     }
-    // Pinned-version retry (round-12 ADVICE): each attempt validates
-    // against a fresh snapshot and commits at EXACTLY snap.version + 1 —
+    // Each GwTxn attempt commits at exactly its snapshot's version + 1, so
     // a concurrent append landing anywhere inside the validate-to-commit
-    // window (the re-validation scan can take long on a big table) now
-    // surfaces as a VersionConflictException and re-runs the validation,
-    // instead of the ALTER silently landing at a later version on top of
-    // rows it never proved the generation invariant over.
-    var __alterAttempt = 0
-    var __alterVersion = -1L
-    while (__alterVersion < 0) {
-      __alterAttempt += 1
-      val snap = gwLog.snapshot(None)
-      val meta = snap.metadata.getOrElse(throw new IllegalStateException(
-        s"cannot ALTER a table with no schema in its log: $tablePath"))
-      // TOCTOU close (round-11 ADVICE): the generated-column invariant
-      // above was proven against `snapForValidate`'s FILE SET, and this
-      // commit block retries on version conflicts — a concurrent append
-      // planned under pre-ALTER metadata can land rows between the
-      // validation scan and the winning attempt that are neither
+    // window (the re-validation scan below can take long on a big table)
+    // loses this attempt the version race and the next attempt re-runs the
+    // validation on a snapshot that includes it.
+    GwTxn(gwLog, if (set.nonEmpty) "SET TBLPROPERTIES" else "UNSET TBLPROPERTIES",
+        "Upgrade").commit { snap =>
+      val meta = alterable(snap)
+      // The generated-column invariant above was proven against
+      // `snapForValidate`'s FILE SET; a concurrent append planned under
+      // pre-ALTER metadata can land rows after that scan that are neither
       // validated nor write-enforced, which GwGeneratedPruning would then
       // silently prune against. Any growth of the file set re-proves the
-      // invariant over the fresh snapshot (pinned to this attempt's
-      // version) before the ALTER may commit; winning the version race
-      // then guarantees no unvalidated file predates the declaration.
+      // invariant over this attempt's snapshot before the ALTER may
+      // commit; committing on top of exactly that snapshot then guarantees
+      // no unvalidated file predates the declaration.
       val genKeys = set.keys.filter(_.startsWith(GwTable.GeneratedPrefix)).toSeq
       if (genKeys.nonEmpty && snap.files.nonEmpty) {
         val validated = snapForValidate
@@ -2254,19 +2160,8 @@ final class GwTable private (spark: SparkSession, tablePath: String) {
           }
         }
       }
-      val conf = meta.configuration ++ set -- unset
-      val actions: Seq[graft.log.Action] = Seq(
-        meta.copy(configuration = conf),
-        CommitInfo(System.currentTimeMillis(),
-          if (set.nonEmpty) "SET TBLPROPERTIES" else "UNSET TBLPROPERTIES",
-          "Upgrade", numFiles = 0, numOutputBytes = 0, isBlindAppend = false,
-          txnId = java.util.UUID.randomUUID().toString))
-      try __alterVersion = gwLog.commitPinned(snap.version + 1, actions)
-      catch {
-        case _: graft.log.VersionConflictException if __alterAttempt < 10 => ()
-      }
+      Seq(meta.copy(configuration = meta.configuration ++ set -- unset))
     }
-    __alterVersion
   }
 
   /** Live metadata domains (Delta `domainMetadata`): domain name →
@@ -2281,13 +2176,8 @@ final class GwTable private (spark: SparkSession, tablePath: String) {
     * the committed version. */
   def setDomainMetadata(domain: String, configuration: String): Long = {
     require(domain.nonEmpty, "domain name must be non-empty")
-    graft.streaming.GwSink.commitWithRetry(gwLog) { _ =>
-      Seq(
-        graft.log.DomainMetadata(domain, configuration),
-        CommitInfo(System.currentTimeMillis(), "SET DOMAIN METADATA",
-          "Upgrade", numFiles = 0, numOutputBytes = 0, isBlindAppend = false,
-          txnId = java.util.UUID.randomUUID().toString))
-    }
+    GwTxn(gwLog, "SET DOMAIN METADATA", "Upgrade")
+      .commit(_ => Seq(graft.log.DomainMetadata(domain, configuration)))
   }
 
   /** Remove a metadata domain by committing its tombstone (`removed =
@@ -2296,15 +2186,11 @@ final class GwTable private (spark: SparkSession, tablePath: String) {
     * misspelled domain in an operational runbook). Returns the committed
     * version. */
   def removeDomainMetadata(domain: String): Long = {
-    graft.streaming.GwSink.commitWithRetry(gwLog) { _ =>
-      require(gwLog.snapshot(None).domains.contains(domain),
+    GwTxn(gwLog, "REMOVE DOMAIN METADATA", "Upgrade").commit { snap =>
+      require(snap.domains.contains(domain),
         s"no metadata domain '$domain' on $tablePath (live domains: " +
-          s"${gwLog.snapshot(None).domains.keys.mkString(", ")})")
-      Seq(
-        graft.log.DomainMetadata(domain, "", removed = true),
-        CommitInfo(System.currentTimeMillis(), "REMOVE DOMAIN METADATA",
-          "Upgrade", numFiles = 0, numOutputBytes = 0, isBlindAppend = false,
-          txnId = java.util.UUID.randomUUID().toString))
+          s"${snap.domains.keys.mkString(", ")})")
+      Seq(graft.log.DomainMetadata(domain, "", removed = true))
     }
   }
 
@@ -2376,8 +2262,7 @@ final class GwTable private (spark: SparkSession, tablePath: String) {
         truncated = true
       }
     }
-    graft.streaming.GwSink.commitWithRetry(gwLog) { _ =>
-      val snap = gwLog.snapshot(None)
+    GwTxn(gwLog, "DROP FEATURE", "Downgrade").commit { snap =>
       GwTable.featureTraceInSnapshot(feature, snap).foreach(msg =>
         throw new IllegalStateException(
           s"cannot drop feature '$feature' from $tablePath: a concurrent " +
@@ -2403,23 +2288,20 @@ final class GwTable private (spark: SparkSession, tablePath: String) {
         else snap.metadata.toSeq.map(m => m.copy(configuration =
           m.configuration + ("delta.requireCheckpointProtectionBeforeVersion"
             -> (snap.version + 2).toString)))
-      metaRestate ++ Seq(
-        down,
-        CommitInfo(System.currentTimeMillis(), "DROP FEATURE", "Downgrade",
-          numFiles = 0, numOutputBytes = 0, isBlindAppend = false,
-          txnId = java.util.UUID.randomUUID().toString))
+      metaRestate :+ down
     }
   }
 
   /** Commit history as a DataFrame (version, timestamp, operation, ...). */
   def history: DataFrame = {
     import spark.implicits._
-    gwLog.history().map { case (v, ci) =>
-      val c = ci.getOrElse(CommitInfo(0L, "UNKNOWN", "", 0L, 0L, isBlindAppend = false, ""))
+    gwLog.history().map {
       // the effective timestamp IS the time-travel clock: the monotonic
       // in-commit timestamp when the table enables ICT, wall clock else
-      (v, c.effectiveTimestamp, c.operation, c.mode, c.numFiles, c.numOutputBytes, c.isBlindAppend,
-        c.userMetadata.orNull)
+      case (v, Some(c)) =>
+        (v, c.effectiveTimestamp, c.operation, c.mode, c.numFiles, c.numOutputBytes,
+          c.isBlindAppend, c.userMetadata.orNull)
+      case (v, None) => (v, 0L, "UNKNOWN", "", 0L, 0L, false, null: String)
     }.toDF("version", "timestamp", "operation", "mode", "numFiles", "numOutputBytes", "isBlindAppend",
       "userMetadata")
   }
@@ -2474,22 +2356,16 @@ object GwTable {
       withStats = true).toSeq
     require(adds.nonEmpty, s"CONVERT: no parquet files under $dir")
     val schema = spark.read.parquet(dir).schema
-    graft.streaming.GwSink.commitWithRetry(log) { bootstrap =>
-      if (!bootstrap) throw new IllegalStateException(
-        s"concurrent table creation at $dir raced the CONVERT; the " +
-          "directory is already a table")
-      val now = System.currentTimeMillis()
-      (graft.log.Protocol(): graft.log.Action) +:
-        (graft.log.Metadata(
+    GwTxn(log, "CONVERT", s"parquet.$dir", isBlindAppend = true)
+      .commitOrCreate { fresh =>
+        if (fresh.isDefined) throw new IllegalStateException(
+          s"concurrent table creation at $dir raced the CONVERT; the " +
+            "directory is already a table")
+        Seq(graft.log.Protocol(), graft.log.Metadata(
           id = java.util.UUID.randomUUID().toString,
           schemaString = schema.json,
-          createdTime = now): graft.log.Action) +:
-        (adds: Seq[graft.log.Action]) :+
-        graft.log.CommitInfo(now, "CONVERT", s"parquet.$dir",
-          numFiles = adds.size, numOutputBytes = adds.map(_.size).sum,
-          isBlindAppend = true,
-          txnId = java.util.UUID.randomUUID().toString)
-    }
+          createdTime = System.currentTimeMillis())) ++ adds
+      }
   }
 
   /** Delta `delta.appendOnly` (the appendOnly writer feature): row removal

@@ -291,34 +291,31 @@ object Indexer {
    * runtime, so `GwTable.history` shows the real operation per commit.)
    */
   def commitBatch(gwLog: GwLog, batch: Batch): Long = {
-    val now = System.currentTimeMillis()
-    val tableExists = gwLog.exists()
+    // the folder's txnId labels the commit for the backward walk above; it
+    // is no stream tag, so the log carries no txn action for it
+    val txn = GwTxn(gwLog, "WRITE", "Append", isBlindAppend = true,
+      txnId = Some(indexTxnId(batch)), exactlyOnce = false,
+      timestamp = Some(batch.commitTimestamp))
     batch.metadata match {
       case Some(md) =>
-        val removes =
-          if (tableExists) gwLog.snapshot().files.map(f => RemoveFile(f.path, f.size, now))
-          else Nil
-        val protocol: Seq[Action] = if (tableExists) Nil else Seq(Protocol())
-        val info = CommitInfo(
-          timestamp = batch.commitTimestamp,
-          operation = if (tableExists) "UPGRADE SCHEMA" else "CREATE TABLE",
-          mode = "Overwrite",
-          numFiles = batch.filesToAdd.size, numOutputBytes = batch.filesToAdd.map(_.size).sum,
-          isBlindAppend = false, txnId = indexTxnId(batch))
-        gwLog.commit(protocol ++ Seq(md) ++ batch.filesToAdd ++ removes ++ Seq(info))
+        txn.copy(operation = "UPGRADE SCHEMA", mode = "Overwrite",
+          isBlindAppend = false, createTable = true).commitOrCreate { fresh =>
+          val now = System.currentTimeMillis()
+          val removes = fresh.toSeq.flatMap(_.files).map(f => RemoveFile(f.path, f.size, now))
+          val protocol: Seq[Action] = if (fresh.isEmpty) Seq(Protocol()) else Nil
+          protocol ++ Seq(md) ++ batch.filesToAdd ++ removes
+        }
       case None =>
-        // fail fast instead of writing a log whose snapshot has no
-        // protocol/metaData (unreadable table) — the invariant
-        // delta-standalone enforces for the reference at commit time
-        if (!tableExists) throw new IllegalStateException(
-          s"refusing bootstrap blind-append at ${gwLog.tablePath}: first commit of a " +
-            s"table needs a schema, but none could be probed for fingerprint ${batch.schemaId} " +
-            s"(ts=${batch.commitTimestamp})")
-        val info = CommitInfo(
-          timestamp = batch.commitTimestamp, operation = "WRITE", mode = "Append",
-          numFiles = batch.filesToAdd.size, numOutputBytes = batch.filesToAdd.map(_.size).sum,
-          isBlindAppend = true, txnId = indexTxnId(batch))
-        gwLog.commit(batch.filesToAdd ++ Seq(info))
+        txn.commitOrCreate { fresh =>
+          // fail fast instead of writing a log whose snapshot has no
+          // protocol/metaData (unreadable table) — the invariant
+          // delta-standalone enforces for the reference at commit time
+          if (fresh.isEmpty) throw new IllegalStateException(
+            s"refusing bootstrap blind-append at ${gwLog.tablePath}: first commit of a " +
+              s"table needs a schema, but none could be probed for fingerprint ${batch.schemaId} " +
+              s"(ts=${batch.commitTimestamp})")
+          batch.filesToAdd
+        }
     }
   }
 

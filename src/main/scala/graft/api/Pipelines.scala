@@ -1116,7 +1116,7 @@ object Pipelines {
     // and then on the candidate rows — batch-bounded — never as an extra
     // shuffle of the index itself; the common path pays nothing
     val isReplay = txnId.isDefined &&
-      graft.streaming.GwSink.replayedVersion(t.log, txnId).isDefined
+      graft.log.GwTxn.replayedVersion(t.log, txnId).isDefined
     val candBase = bb.select(col("band"), col("bucket"),
         col("doc_id").as("id"), col("sig"))
       .join(pinned.select(col("band"), col("bucket"),
@@ -1276,7 +1276,7 @@ object Pipelines {
       .localCheckpoint()
     val bb = capBucketMembers(banded0, "vec_id", bucketCap).localCheckpoint()
     val isReplay = txnId.isDefined &&
-      graft.streaming.GwSink.replayedVersion(t.log, txnId).isDefined
+      graft.log.GwTxn.replayedVersion(t.log, txnId).isDefined
     val candBase = bb.select(col("band"), col("bucket"),
         col("vec_id").as("id"), col("emb"))
       .join(pinned.select(col("band"), col("bucket"),
@@ -1445,7 +1445,7 @@ object Pipelines {
         org.apache.spark.sql.types.StructField("was_member",
           org.apache.spark.sql.types.BooleanType, nullable = false))))
     if (txnId.isDefined &&
-        graft.streaming.GwSink.replayedVersion(table.log, txnId).isDefined)
+        graft.log.GwTxn.replayedVersion(table.log, txnId).isDefined)
       return emptyUpserts
     // freeze the batch edges once: nodes, the contraction join and the
     // upsert assembly all reuse them, and the caller's pair GENERATOR
@@ -1587,7 +1587,7 @@ object Pipelines {
     val spark = batch.sparkSession
     val table = graft.GwTable.forPath(spark, indexPath)
     val isReplay = txnId.isDefined &&
-      graft.streaming.GwSink.replayedVersion(table.log, txnId).isDefined
+      graft.log.GwTxn.replayedVersion(table.log, txnId).isDefined
     val b = batch.select(id.cast("long").as("id"), md5(text).as("fp"))
     val probe = b.select("fp").distinct()
     val small = probe.count() <= broadcastMaxDigests
@@ -3181,7 +3181,7 @@ object Pipelines {
     val metricsLog = graft.log.GwLog.forTable(
       spark.sparkContext.hadoopConfiguration, metricsPath)
     if (txnId.isDefined && metricsLog.exists() &&
-        graft.streaming.GwSink.replayedVersion(metricsLog, txnId).isDefined)
+        graft.log.GwTxn.replayedVersion(metricsLog, txnId).isDefined)
       return spark.read.format("gwdelta").load(metricsPath)
         .filter(col("batch") === batch)
     val q = probes.select(id.cast("long").as("pid"), vec.as("pemb"))

@@ -20,8 +20,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
  * The indexer's fan-out guarantees a single writer per table
  * (reference behavior: one Spark task per table, Guidewire.scala:71-74),
  * so conflicts only arise from concurrent maintenance writers; losers get
- * a [[VersionConflictException]] rather than a silent clobber, and we fail
- * fast rather than retry.
+ * a [[VersionConflictException]] rather than a silent clobber. Writers
+ * commit through [[GwTxn]], which re-validates and retries the loser.
  */
 class GwLog(val tablePath: Path, conf: Configuration,
     checkpointInterval: Int = GwLog.DefaultCheckpointInterval,
@@ -287,7 +287,9 @@ class GwLog(val tablePath: Path, conf: Configuration,
     (None, Nil, Nil)
 
   /** Write `actions` as the next version; returns the committed version.
-    * Every `checkpointInterval` commits the replayed snapshot is also
+    * A raw, unchecked append (log tooling and tests): engine writers go
+    * through [[GwTxn]]. Every `checkpointInterval` commits the replayed
+    * snapshot is also
     * checkpointed to parquet so later reads resume in O(1) instead of
     * replaying every version JSON (see [[Checkpoint]]). */
   def commit(actions: Seq[Action]): Long =
@@ -295,9 +297,10 @@ class GwLog(val tablePath: Path, conf: Configuration,
 
   /** [[commit]] pinned to exactly `version`: for writers whose validation
     * ran against the snapshot at `version - 1` — any intervening commit
-    * then surfaces as a [[VersionConflictException]] (forcing the caller's
-    * retry loop to re-validate) instead of silently landing the write at a
-    * later version on top of state it never saw. */
+    * then surfaces as a [[VersionConflictException]] instead of silently
+    * landing the write at a later version on top of state it never saw.
+    * [[GwTxn]] commits every attempt this way and re-validates on the
+    * conflict. */
   def commitPinned(version: Long, actions: Seq[Action]): Long = {
     // basis snapshot resolved BEFORE the commit lands: the fold state the
     // post-commit snapshot advance below continues from
@@ -939,8 +942,17 @@ class GwLog(val tablePath: Path, conf: Configuration,
     * only the JSON deltas after it are replayed — and falls back to full
     * JSON replay when no checkpoint qualifies (e.g. time travel before the
     * first checkpoint). */
-  def snapshot(versionAsOf: Option[Long] = None): Snapshot = {
+  def snapshot(versionAsOf: Option[Long] = None): Snapshot =
+    snapshotIn(listVersions(), versionAsOf)
+
+  /** The latest snapshot, or None on an empty log — one listing resolves
+    * both, which is how every [[GwTxn]] attempt reads the table. */
+  def latestSnapshot(): Option[Snapshot] = {
     val versions = listVersions()
+    if (versions.isEmpty) None else Some(snapshotIn(versions, None))
+  }
+
+  private def snapshotIn(versions: Seq[Long], versionAsOf: Option[Long]): Snapshot = {
     require(versions.nonEmpty, s"No transaction log at $logDir")
     val upTo = versionAsOf.getOrElse(versions.last)
     require(

@@ -1,8 +1,8 @@
 package graft.log
 
 /**
- * Typed optimistic-concurrency conflict taxonomy + the conflict checks the
- * DML/maintenance commit paths run inside their retry loops.
+ * Typed optimistic-concurrency conflict taxonomy + the conflict checks every
+ * [[GwTxn]] attempt runs against the snapshot it commits on top of.
  *
  * Commit protocol recap ([[GwLog.commitAt]]): version files are claimed
  * atomically, so a losing writer gets a [[VersionConflictException]] and
@@ -37,7 +37,7 @@ package graft.log
  * never reorders commits, so WriteSerializable is what the log provides.)
  *
  * Same-appId idempotent-write races ([[graft.streaming.GwSink]] txnAppId/
- * txnVersion) do NOT raise: the replay check re-runs inside the retry loop
+ * txnVersion) do NOT raise: every [[GwTxn]] attempt re-checks the replay
  * and a version the winner already committed becomes a silent no-op — for
  * the foreachBatch exactly-once contract a skip is strictly safer than
  * delta's ConcurrentTransactionException (the data IS committed).
@@ -70,8 +70,8 @@ final class ConcurrentDeleteReadException(table: String, file: String)
 object Occ {
 
   /** Abort when a winner restated what the operation's plan was derived
-    * from: run inside the commit retry loop with the freshly-read snapshot
-    * vs the snapshot the operation planned against. Equality is exact —
+    * from: the attempt's fresh snapshot vs the snapshot the operation
+    * planned against ([[GwTxn.Rewrite]]). Equality is exact —
     * ANY metadata restatement (schema, partitioning, constraints, table
     * properties) invalidates a planned rewrite, because its replacement
     * rows were shaped and validated against the old metadata. */
@@ -97,7 +97,7 @@ object Occ {
     }
   }
 
-  /** Blind-append safety, run inside the append retry loop: an append's
+  /** Blind-append safety ([[GwTxn.Append]]): an append's
     * plan depends only on the table's SCHEMA (its staged files' shape),
     * the write-path CHECK constraints, and any identity/generated column
     * declarations (all validated/computed pre-commit against the metadata

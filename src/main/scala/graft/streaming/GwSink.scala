@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.log.{Action, AddFile, CommitInfo, GwLog, Metadata, Protocol}
+import graft.log.{Action, AddFile, GwLog, GwTxn, Metadata, Protocol}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 
@@ -32,12 +32,10 @@ import org.apache.spark.sql.DataFrame
  * the walk reads one or two commit files, not the whole log. Keying on the
  * stream identity is what keeps two different streams feeding one table
  * from colliding on equal batch ids (delta's app-id transaction pattern).
+ * The walk is [[GwTxn.replayedVersion]]; every commit attempt re-checks the
+ * stream's `txn` high-water mark ([[GwTxn]]).
  */
 object GwSink {
-
-  /** Backstop on how many log-tail versions the txnId dedup walk inspects
-    * when no commit of the same stream is found. */
-  private val DedupWindow = 64
 
   /** Append one batch to the table at `tablePath`; returns the committed
     * version, or -1 if the batch was empty (no commit written). With
@@ -52,44 +50,37 @@ object GwSink {
     val spark = df.sparkSession
     val conf = spark.sparkContext.hadoopConfiguration
     val log = GwLog.forTable(conf, tablePath)
-    replayedVersion(log, txnId).foreach(v => return v)
+    GwTxn.replayedVersion(log, txnId).foreach(v => return v)
     val readMeta = tableMeta(log)
+    val config = readMeta.map(_.configuration).getOrElse(bootstrapProps)
     // Delta mergeSchema: a widening batch (new nullable columns appended)
     // restates the schema ATOMICALLY with its files; overlapping columns
     // must still type-match, and without the option the strict check holds
     val widened: Option[org.apache.spark.sql.types.StructType] =
       if (!mergeSchema) { checkAppendSchema(readMeta, tablePath, df.schema); None }
       else widenedSchema(readMeta, tablePath, df.schema)
-    val parts = effectivePartitioning(log, df, partitionBy)
+    val parts = effectivePartitioning(readMeta, df, partitionBy)
     val outDir = new Path(tablePath, s"_stream/${java.util.UUID.randomUUID()}")
     val physTarget = widened.orElse(readMeta.map(schemaOfMeta))
     // declared CHECK constraints bind here too — the path-based face must
     // not bypass what the catalog face enforces
-    val checked = org.apache.spark.sql.graftbridge.GwConstraintRule.enforce(
-      df, readMeta.map(_.configuration).getOrElse(bootstrapProps))
-    val arranged = maybeOptimizeWrite(checked,
-      readMeta.map(_.configuration).getOrElse(bootstrapProps), parts)
+    val checked = org.apache.spark.sql.graftbridge.GwConstraintRule.enforce(df, config)
+    val arranged = maybeOptimizeWrite(checked, config, parts)
     stageWrite(physTarget.map(graft.log.ColumnMapping.toPhysicalDf(arranged, _))
       .getOrElse(arranged), outDir, parts,
-      graft.log.Bloom.parquetWriteOptions(
-        readMeta.map(_.configuration).getOrElse(bootstrapProps),
-        readMeta.map(_.schemaString), df.schema))
+      graft.log.Bloom.parquetWriteOptions(config, readMeta.map(_.schemaString), df.schema))
     val fs = outDir.getFileSystem(conf)
     val files: Seq[AddFile] =
       graft.sources.SchemaProbe.harvestPartitioned(conf, outDir,
-        dataChange = true, parts,
-        statsCols = statsColumnFilter(
-          readMeta.map(_.configuration).getOrElse(bootstrapProps), df.schema))
+        dataChange = true, parts, statsCols = statsColumnFilter(config, df.schema))
     if (files.isEmpty) { fs.delete(outDir, true); return -1L }
     // per-file Bloom build for tables declaring graft.bloom.columns (one
     // extra columnar pass over the fresh files; no-op otherwise)
-    val withBlooms = graft.log.Bloom.augment(spark,
-      readMeta.map(_.configuration).getOrElse(bootstrapProps),
+    val withBlooms = graft.log.Bloom.augment(spark, config,
       readMeta.map(_.schemaString), tablePath, files)
     val v = commitAppend(log, df.schema, withBlooms, txnId, parts, readMeta,
       widened, bootstrapProps, userMetadata)
-    maybeAutoCompact(spark, log, tablePath,
-      readMeta.map(_.configuration).getOrElse(bootstrapProps))
+    maybeAutoCompact(spark, log, tablePath, config)
     v
   }
 
@@ -220,11 +211,9 @@ object GwSink {
     * layout per table); with no explicit columns the table's logged
     * partitioning applies automatically, so plain INSERT INTO / streaming
     * appends keep a partitioned table partitioned. */
-  private def effectivePartitioning(log: GwLog, df: DataFrame,
+  private def effectivePartitioning(meta: Option[Metadata], df: DataFrame,
       partitionBy: Seq[String]): Seq[String] = {
-    val logged =
-      if (log.listVersions().isEmpty) Nil
-      else log.snapshot(None).metadata.map(_.partitionColumns).getOrElse(Nil)
+    val logged = meta.map(_.partitionColumns).getOrElse(Nil)
     if (partitionBy.nonEmpty && logged.nonEmpty)
       require(partitionBy == logged,
         s"partitionBy ${partitionBy.mkString(",")} does not match the table's " +
@@ -258,7 +247,7 @@ object GwSink {
       schema: org.apache.spark.sql.types.StructType, files: Seq[AddFile],
       txnId: Option[String], partitionColumns: Seq[String] = Nil): Long = {
     val log = GwLog.forTable(conf, tablePath)
-    replayedVersion(log, txnId).foreach(v => return v)
+    GwTxn.replayedVersion(log, txnId).foreach(v => return v)
     if (files.isEmpty) return -1L
     val readMeta = tableMeta(log)
     readMeta.foreach { m =>
@@ -270,55 +259,6 @@ object GwSink {
     }
     checkAppendSchema(readMeta, tablePath, schema)
     commitAppend(log, schema, files, txnId, partitionColumns, readMeta)
-  }
-
-  /** `"<streamId>/<batchId>"` -> (streamId, batchId) when the suffix is a
-    * number — the shape the streaming writers use, and the shape that maps
-    * onto the log's `txn` (SetTransaction) high-water marks. */
-  private[graft] def parseTxnId(id: String): Option[(String, Long)] =
-    id.lastIndexOf('/') match {
-      case -1 => None
-      case i => id.substring(i + 1).toLongOption.map(id.substring(0, i) -> _)
-    }
-
-  /** The version already carrying `txnId`, if this batch is a crash replay
-    * (see the exactly-once note in the object scaladoc). The snapshot's
-    * `txn` high-water mark is the primary signal — it survives checkpoints
-    * and ANY log length; the bounded tail walk over `CommitInfo.txnId`
-    * resolves the exact version (and remains the only detector for legacy
-    * logs written before `txn` actions). */
-  private[graft] def replayedVersion(log: GwLog, txnId: Option[String]): Option[Long] = {
-    for (id <- txnId) {
-      def walk(): Option[Long] = {
-        val prefix = id.lastIndexOf('/') match {
-          case -1 => ""
-          case i  => id.substring(0, i + 1)
-        }
-        val recent = log.listVersions().takeRight(DedupWindow).reverseIterator
-        var stop = false
-        while (recent.hasNext && !stop) {
-          val v = recent.next()
-          log.readVersion(v).collectFirst { case ci: CommitInfo => ci }.foreach { ci =>
-            if (ci.txnId == id) return Some(v)
-            // a different batch of the SAME stream: anything older cannot be
-            // this batch's commit — fresh data, stop walking
-            if (prefix.nonEmpty && ci.txnId.startsWith(prefix)) stop = true
-          }
-        }
-        None
-      }
-      val byTxnMark = parseTxnId(id).exists { case (app, batch) =>
-        log.latestVersion().isDefined &&
-          log.snapshot(None).transactions.get(app).exists(_ >= batch)
-      }
-      if (byTxnMark) {
-        // committed for sure; -1 when the commit is older than the walk
-        // window (same "no new commit" sentinel as an empty batch)
-        return Some(walk().getOrElse(-1L))
-      }
-      walk().foreach(v => return Some(v))
-    }
-    None
   }
 
   /** The table's current metadata, or None before the bootstrap commit.
@@ -365,52 +305,41 @@ object GwSink {
       widened: Option[org.apache.spark.sql.types.StructType] = None,
       bootstrapProps: Map[String, String] = Map.empty,
       userMetadata: Option[String] = None): Long =
-    commitReplayable(log, txnId) { bootstrap =>
-      val freshMeta = if (bootstrap) None else log.snapshot(None).metadata
-      if (!bootstrap)
-        graft.log.Occ.checkAppendState(log.tablePath.toString, readMeta, freshMeta)
-      // a mergeSchema widening restates the metadata in THIS commit; the
-      // identity advance (if any) builds on the widened copy so one
-      // metadata action carries both
-      val widenedMeta = (freshMeta, widened) match {
-        case (Some(m), Some(w)) => Some(m.copy(schemaString = w.json))
-        case _ => None
+    GwTxn(log, "WRITE", "Append", GwTxn.Append(readMeta), isBlindAppend = true,
+      createTable = true, txnId = txnId, userMetadata = userMetadata)
+      .commitOrCreate { fresh =>
+        val freshMeta = fresh.flatMap(_.metadata)
+        // a mergeSchema widening restates the metadata in THIS commit; the
+        // identity advance (if any) builds on the widened copy so one
+        // metadata action carries both
+        val widenedMeta = (freshMeta, widened) match {
+          case (Some(m), Some(w)) => Some(m.copy(schemaString = w.json))
+          case _ => None
+        }
+        val idMeta = identityAdvance(log.tablePath.toString, files,
+          widenedMeta.orElse(freshMeta))
+        val metaAction: Option[Metadata] = idMeta.orElse(widenedMeta)
+        val head: Seq[Action] =
+          if (fresh.isEmpty) bootstrap(schema, partitionColumns, bootstrapProps)
+          else Nil
+        metaAction.toSeq ++ head ++ files
       }
-      val idMeta = identityAdvance(log.tablePath.toString, files,
-        widenedMeta.orElse(freshMeta))
-      val metaAction: Option[Metadata] = idMeta.orElse(widenedMeta)
-      val now = System.currentTimeMillis()
-      val head: Seq[Action] =
-        if (bootstrap)
-          Seq(Protocol(), Metadata(
-            id = java.util.UUID.randomUUID().toString,
-            schemaString = schema.json,
-            partitionColumns = partitionColumns,
-            configuration = bootstrapProps,
-            createdTime = now))
-        else Nil
-      val info = CommitInfo(
-        timestamp = now,
-        operation = if (bootstrap) "CREATE TABLE" else "WRITE",
-        mode = "Append",
-        numFiles = files.size,
-        numOutputBytes = files.map(_.size).sum,
-        isBlindAppend = !bootstrap,
-        txnId = txnId.getOrElse(java.util.UUID.randomUUID().toString),
-        userMetadata = userMetadata)
-      // a parseable stream batch id also commits the spec's txn action, so
-      // replay detection survives checkpoints and any log length
-      val txn = txnId.flatMap(parseTxnId).map { case (app, batch) =>
-        graft.log.SetTransaction(app, batch, Some(now))
-      }
-      metaAction.toSeq ++ head ++ files ++ txn.toSeq :+ info
-    }
+
+  /** The protocol + metaData pair of a table's first commit. */
+  private def bootstrap(schema: org.apache.spark.sql.types.StructType,
+      partitionColumns: Seq[String], props: Map[String, String]): Seq[Action] =
+    Seq(Protocol(), Metadata(
+      id = java.util.UUID.randomUUID().toString,
+      schemaString = schema.json,
+      partitionColumns = partitionColumns,
+      configuration = props,
+      createdTime = System.currentTimeMillis()))
 
   /**
    * Identity-column commit support ([[graft.GwTable.IdentityPrefix]]): from
    * the batch's harvested footer stats, the furthest allocated value per
-   * identity column. Two jobs, both inside the commit retry loop so they
-   * see the freshest state:
+   * identity column. Two jobs, both inside every [[GwTxn]] attempt, on the
+   * snapshot that attempt commits on top of:
    *
    *  - GUARD: the batch's nearest allocated value must lie strictly beyond
    *    the CURRENT watermark in the step's direction. The ids were computed
@@ -465,56 +394,6 @@ object GwSink {
     if (changed) Some(m.copy(configuration = conf)) else None
   }
 
-  /** Control flow for the in-loop idempotence re-check: a racer committed
-    * this writer's (txnAppId, txnVersion) between the entry replay check
-    * and the commit attempt — the batch IS committed, so the write becomes
-    * a silent no-op rather than a duplicate (and rather than delta's
-    * ConcurrentTransactionException: for the foreachBatch exactly-once
-    * contract a skip is strictly safer — see [[graft.log.Occ]]). */
-  private final class ReplayedCommit extends RuntimeException
-
-  /** [[commitWithRetry]] for TAGGED commits: before each attempt, re-check
-    * the fresh snapshot's txn high-water mark for this writer's appId —
-    * the entry-time replay check leaves a window in which a concurrent
-    * writer of the SAME logical stream can commit the same batch, and
-    * committing again would double the data. Untagged commits pass
-    * through untouched. */
-  private[graft] def commitReplayable(log: GwLog, txnId: Option[String])(
-      build: Boolean => Seq[Action]): Long = {
-    val tag = txnId.flatMap(parseTxnId)
-    try commitWithRetry(log) { bootstrap =>
-      tag.foreach { case (app, batch) =>
-        if (!bootstrap && log.snapshot(None).transactions.get(app).exists(_ >= batch))
-          throw new ReplayedCommit
-      }
-      build(bootstrap)
-    } catch {
-      case _: ReplayedCommit => replayedVersion(log, txnId).getOrElse(-1L)
-    }
-  }
-
-  /**
-   * Commit actions rebuilt per attempt against the CURRENT log state: on a
-   * [[graft.log.VersionConflictException]] (a concurrent maintenance or
-   * sink commit won the version), re-derive and retry at the next version
-   * — a blind append stays valid no matter what the winner committed, and
-   * overwrite removes are recomputed from the fresh snapshot inside
-   * `build`. Bounded so writers never spin on a hot table.
-   */
-  private[graft] def commitWithRetry(log: GwLog, maxAttempts: Int = 10)(
-      build: Boolean => Seq[Action]): Long = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      val bootstrap = log.listVersions().isEmpty
-      try return log.commit(build(bootstrap))
-      catch {
-        case _: graft.log.VersionConflictException if attempt < maxAttempts => ()
-      }
-    }
-    -1L // unreachable
-  }
-
   /** Truncating write (INSERT OVERWRITE): one commit that removes every
     * live file and adds the batch's files — readers switch atomically from
     * the old content to the new; the tombstoned files stay readable for
@@ -536,86 +415,53 @@ object GwSink {
     val spark = df.sparkSession
     val conf = spark.sparkContext.hadoopConfiguration
     val log = GwLog.forTable(conf, tablePath)
-    replayedVersion(log, txnId).foreach(v => return v)
+    GwTxn.replayedVersion(log, txnId).foreach(v => return v)
     val readMeta = tableMeta(log)
+    val config = readMeta.map(_.configuration).getOrElse(bootstrapProps)
     checkAppendSchema(readMeta, tablePath, df.schema)
-    val parts = effectivePartitioning(log, df, partitionBy)
+    val parts = effectivePartitioning(readMeta, df, partitionBy)
     val outDir = new Path(tablePath, s"_stream/${java.util.UUID.randomUUID()}")
     // path-face CHECK enforcement, same as append
-    val checked = org.apache.spark.sql.graftbridge.GwConstraintRule.enforce(
-      df, readMeta.map(_.configuration).getOrElse(bootstrapProps))
-    stageWrite(physicalFrame(maybeOptimizeWrite(checked,
-        readMeta.map(_.configuration).getOrElse(bootstrapProps), parts), readMeta),
+    val checked = org.apache.spark.sql.graftbridge.GwConstraintRule.enforce(df, config)
+    stageWrite(physicalFrame(maybeOptimizeWrite(checked, config, parts), readMeta),
       outDir, parts,
-      graft.log.Bloom.parquetWriteOptions(
-        readMeta.map(_.configuration).getOrElse(bootstrapProps),
-        readMeta.map(_.schemaString), df.schema))
+      graft.log.Bloom.parquetWriteOptions(config, readMeta.map(_.schemaString), df.schema))
     val files0: Seq[AddFile] =
       graft.sources.SchemaProbe.harvestPartitioned(conf, outDir,
-        dataChange = true, parts,
-        statsCols = statsColumnFilter(
-          readMeta.map(_.configuration).getOrElse(bootstrapProps), df.schema))
+        dataChange = true, parts, statsCols = statsColumnFilter(config, df.schema))
     if (files0.isEmpty) outDir.getFileSystem(conf).delete(outDir, true)
-    val files = graft.log.Bloom.augment(spark,
-      readMeta.map(_.configuration).getOrElse(bootstrapProps),
+    val files = graft.log.Bloom.augment(spark, config,
       readMeta.map(_.schemaString), tablePath, files0)
-    commitReplayable(log, txnId) { bootstrap =>
-      val freshMeta = if (bootstrap) None else log.snapshot(None).metadata
-      if (!bootstrap)
-        graft.log.Occ.checkAppendState(log.tablePath.toString, readMeta, freshMeta)
-      // the watermark only ever ADVANCES: an overwrite replaces content but
-      // never reuses identity values (Delta's contract)
-      val idMeta0 = identityAdvance(log.tablePath.toString, files, freshMeta)
-      // property restatement ATOMIC with the content swap (`setProps`):
-      // readers see old content + old properties or new + new, never a
-      // mix — the REINDEX contract (e.g. an IVF rebuild landing retrained
-      // centroids with their reassigned lists in one commit)
-      val idMeta =
-        if (bootstrap || setProps.isEmpty) idMeta0
-        else idMeta0.orElse(freshMeta)
-          .map(m => m.copy(configuration = m.configuration ++ setProps))
-      val now = System.currentTimeMillis()
-      // removes recomputed per attempt: a conflicting commit may have
-      // changed the live set this overwrite must tombstone
-      val removes: Seq[Action] =
-        if (bootstrap) Nil
-        else {
-          val fresh = log.snapshot(None)
-          graft.GwTable.assertNotAppendOnly(
-            log.tablePath.toString, fresh, "INSERT OVERWRITE")
-          val victims =
-            if (!dynamicPartitions || parts.isEmpty) fresh.files
-            else {
-              // dynamic mode tombstones ONLY the partitions the batch
-              // touches; tokens compare exactly because old and new
-              // AddFiles render partitionValues through the same harvest
-              val touched = files.map(_.partitionValues).toSet
-              fresh.files.filter(f => touched.contains(f.partitionValues))
-            }
-          victims.map(f => graft.log.RemoveFile(f.path, f.size, now))
-        }
-      val head: Seq[Action] =
-        if (bootstrap)
-          Seq(Protocol(), Metadata(
-            id = java.util.UUID.randomUUID().toString,
-            schemaString = df.schema.json,
-            partitionColumns = parts,
-            configuration = bootstrapProps,
-            createdTime = now))
-        else Nil
-      val info = CommitInfo(
-        timestamp = now,
-        operation = if (bootstrap) "CREATE TABLE" else "WRITE",
-        mode = "Overwrite",
-        numFiles = files.size,
-        numOutputBytes = files.map(_.size).sum,
-        isBlindAppend = false,
-        txnId = txnId.getOrElse(java.util.UUID.randomUUID().toString),
-        userMetadata = userMetadata)
-      val txn = txnId.flatMap(parseTxnId).map { case (app, v) =>
-        graft.log.SetTransaction(app, v, Some(now))
-      }
-      idMeta.toSeq ++ head ++ removes ++ files ++ txn.toSeq :+ info
+    GwTxn(log, "WRITE", "Overwrite", GwTxn.Append(readMeta), createTable = true,
+      txnId = txnId, userMetadata = userMetadata).commitOrCreate {
+      case None => bootstrap(df.schema, parts, bootstrapProps) ++ files
+      case Some(fresh) =>
+        // the watermark only ever ADVANCES: an overwrite replaces content
+        // but never reuses identity values (Delta's contract)
+        val idMeta0 = identityAdvance(log.tablePath.toString, files, fresh.metadata)
+        // property restatement ATOMIC with the content swap (`setProps`):
+        // readers see old content + old properties or new + new, never a
+        // mix — the REINDEX contract (e.g. an IVF rebuild landing retrained
+        // centroids with their reassigned lists in one commit)
+        val idMeta =
+          if (setProps.isEmpty) idMeta0
+          else idMeta0.orElse(fresh.metadata)
+            .map(m => m.copy(configuration = m.configuration ++ setProps))
+        graft.GwTable.assertNotAppendOnly(
+          log.tablePath.toString, fresh, "INSERT OVERWRITE")
+        // removes derive from the attempt's snapshot: a conflicting commit
+        // may have changed the live set this overwrite must tombstone
+        val victims =
+          if (!dynamicPartitions || parts.isEmpty) fresh.files
+          else {
+            // dynamic mode tombstones ONLY the partitions the batch
+            // touches; tokens compare exactly because old and new
+            // AddFiles render partitionValues through the same harvest
+            val touched = files.map(_.partitionValues).toSet
+            fresh.files.filter(f => touched.contains(f.partitionValues))
+          }
+        val now = System.currentTimeMillis()
+        idMeta.toSeq ++ victims.map(f => graft.log.RemoveFile(f.path, f.size, now)) ++ files
     }
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory, Scan}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset => OffsetV2, ReadLimit}
-import org.apache.spark.sql.execution.datasources.FilePartition
+import org.apache.spark.sql.execution.datasources.{FilePartition, InMemoryFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetScan, ParquetTable}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -172,9 +172,14 @@ class GwMicroBatchStream(
   private lazy val readerFactory: PartitionReaderFactory = {
     val conf = new graft.SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
     val commitVersion = StructField(GwStreamAdmission.CommitVersionCol, LongType)
+    // the factory reads no file index: an empty one lists nothing
+    val options = new CaseInsensitiveStringMap(
+      java.util.Collections.singletonMap("path", tablePath))
+    val noFiles = new InMemoryFileIndex(spark, Nil, Map.empty, None)
     def tagged(data: StructType, tags: StructField*): PartitionReaderFactory =
-      parquetScan(Nil, data).copy(readPartitionSchema = StructType(tags))
-        .toBatch.createReaderFactory()
+      ParquetScan(spark, spark.sessionState.newHadoopConfWithOptions(
+          Map("path" -> tablePath)), noFiles, data, data, StructType(tags),
+        Array.empty, options).createReaderFactory()
     if (!changeFeed) {
       val parquet = tagged(dataSchema)
       new GwMorReaderFactory(Some(parquet), parquet, conf)
@@ -188,17 +193,31 @@ class GwMicroBatchStream(
   }
 }
 
-/** Scan wrapper that adds the streaming entry point to the pruning scan. */
+/** Scan wrapper that adds the streaming entry point to the pruning scan.
+  * The pruning scan (an `InMemoryFileIndex` over every live file) is built
+  * on first use: a stream plans each micro-batch itself, so once
+  * [[toMicroBatchStream]] has run, the questions Spark's
+  * `MicroBatchScanExec` still asks (schema, description, metrics, columnar
+  * mode) are answered without it. `hasDvs`: the snapshot carries deletion
+  * vectors, whose initial-snapshot partitions read row by row. */
 class GwDeltaScan(
-    inner: Scan,
+    buildInner: () => Scan,
     spark: SparkSession,
     tablePath: String,
     streamSchema: StructType,
     readOptions: CaseInsensitiveStringMap,
-    changeFeed: Boolean)
+    changeFeed: Boolean,
+    hasDvs: Boolean)
     extends Scan
     with org.apache.spark.sql.connector.read.SupportsReportStatistics
     with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering {
+  @volatile private var built = false
+  @volatile private var streaming = false
+  private lazy val inner: Scan = { built = true; buildInner() }
+
+  /** Whether the batch scan was built (plan observability in tests). */
+  def innerBuilt: Boolean = built
+
   /** The wrapped batch scan (plan observability in tests/gates). */
   def innerScan: Scan = inner
 
@@ -229,28 +248,37 @@ class GwDeltaScan(
         override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()
       }
     }
-  override def readSchema(): StructType = inner.readSchema()
+  override def readSchema(): StructType =
+    if (streaming) streamSchema else inner.readSchema()
   override def toBatch: org.apache.spark.sql.connector.read.Batch = inner.toBatch
-  override def description(): String = inner.description()
+  override def description(): String =
+    if (streaming) s"GwMicroBatchStream[$tablePath]" else inner.description()
+  // the answers the batch scan gives: a DV'd snapshot reads row-based
+  // (GwMorScan), a clean one per partition (the parquet scan's default)
   override def columnarSupportMode(): Scan.ColumnarSupportMode =
-    inner.columnarSupportMode()
+    if (!streaming) inner.columnarSupportMode()
+    else if (hasDvs) Scan.ColumnarSupportMode.UNSUPPORTED
+    else Scan.ColumnarSupportMode.PARTITION_DEFINED
   override def supportedCustomMetrics(): Array[org.apache.spark.sql.connector.metric.CustomMetric] =
-    inner.supportedCustomMetrics()
+    if (streaming) Array.empty else inner.supportedCustomMetrics()
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
     // the feed's extra columns are part of the TABLE schema, which only a
     // path load with the option can declare
     require(changeFeed || !readOptions.getBoolean("readChangeFeed", false),
       s"readChangeFeed streams load by path: " +
         s"spark.readStream.format(\"gwdelta\").option(\"readChangeFeed\", \"true\").load(\"$tablePath\")")
+    streaming = true
     new GwMicroBatchStream(spark, tablePath, streamSchema, readOptions, changeFeed)
   }
 
   // value equality over the inner scan (whose own equality covers the
   // file set) so Spark's exchange/scan reuse keeps working when the same
-  // table is read twice in one plan
+  // table is read twice in one plan; a stream's scan equals only itself
   override def equals(other: Any): Boolean = other match {
-    case g: GwDeltaScan => g.innerScan == inner
+    case g: GwDeltaScan =>
+      (g eq this) || (!streaming && !g.streaming && g.innerScan == inner)
     case _ => false
   }
-  override def hashCode(): Int = inner.hashCode()
+  override def hashCode(): Int =
+    if (streaming) System.identityHashCode(this) else inner.hashCode()
 }

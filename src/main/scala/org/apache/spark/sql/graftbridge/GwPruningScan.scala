@@ -128,10 +128,11 @@ class GwDeltaTable(
       // same pruning batch scan, plus the streaming entry point
       // (readStream.format("gwdelta") / readStream.table) that tails the
       // log version by version; the per-read options carry the stream's
-      // rate limits
+      // rate limits. The batch scan is built on first use: a stream never
+      // reads it.
       override def build(): Scan =
-        new GwDeltaScan(super.build(), spark, options.get("path"),
-          snapshot.schema, opts, changeFeed)
+        new GwDeltaScan(() => super.build(), spark, options.get("path"),
+          snapshot.schema, opts, changeFeed, snapshot.files.exists(_.dv.isDefined))
     }
 
   /** INSERT INTO / INSERT OVERWRITE / df.writeTo(...): a V1Write bridge

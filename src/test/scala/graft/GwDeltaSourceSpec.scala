@@ -586,12 +586,12 @@ class GwDeltaSourceSpec extends AnyFunSuite {
         s"$tag: expected the 3-file snapshot split into >=3 batches, got ${batches(cp)}")
       spark.read.parquet(out).count()
     }
-    // V2 catalog face
+    // catalog face
     assert(drain(spark.readStream.option("maxFilesPerTrigger", "1")
       .table("gwtest.cda.rated"), "v2") == 15)
-    // V1 path face
+    // path face
     assert(drain(spark.readStream.format("gwdelta")
-      .option("maxFilesPerTrigger", "1").load(loc), "v1") == 15)
+      .option("maxFilesPerTrigger", "1").load(loc), "path") == 15)
     // startingVersion on the V2 face skips the snapshot (v1..v2 = 10 rows);
     // one batch, so bypass the >=3-batch drain helper
     val out2 = work.resolve("v2-startv-out").toString
@@ -603,6 +603,26 @@ class GwDeltaSourceSpec extends AnyFunSuite {
     q2.awaitTermination()
     assert(spark.read.parquet(out2).count() == 10,
       "V2 startingVersion=1 must serve exactly versions 1..2")
+  }
+
+  test("a stream never builds the batch scan it is planned from") {
+    import org.apache.spark.sql.streaming.Trigger
+    val loc = Files.createTempDirectory("gwtest-lazy").resolve("t").toString
+    graft.streaming.GwSink.append(spark.read.parquet(s"$sf/region.parquet").coalesce(1), loc)
+    val q = spark.readStream.format("gwdelta").load(loc).writeStream.format("noop")
+      .option("checkpointLocation", Files.createTempDirectory("gwtest-lazy-cp").toString)
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    val scans = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+      .streamingQuery.lastExecution.executedPlan.collect {
+        case m: org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec => m.scan
+      }
+    assert(scans.nonEmpty, "the stream ran a micro-batch scan")
+    scans.foreach {
+      case g: org.apache.spark.sql.graftbridge.GwDeltaScan =>
+        assert(!g.innerBuilt, "the stream built the pruning batch scan")
+      case other => fail(s"unexpected stream scan $other")
+    }
   }
 
   test("GwSink: streams do not collide on batch ids; schema drift rejected") {

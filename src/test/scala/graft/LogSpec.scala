@@ -665,8 +665,8 @@ class LogSpec extends AnyFunSuite {
     // each attempt rebuilds against the current log: the first sees an
     // empty log (bootstrap), the retries see the winner's commits
     var observed = List.empty[Boolean]
-    val v = graft.streaming.GwSink.commitWithRetry(log) { bootstrap =>
-      observed :+= bootstrap
+    val v = graft.log.GwTxn(log, "WRITE", "Append").commitOrCreate { fresh =>
+      observed :+= fresh.isEmpty
       Seq(AddFile(s"/data/retry.parquet", 10, 1000),
         CommitInfo(2L, "WRITE", "Append", 1, 10, isBlindAppend = true,
           s"a${observed.size}"))
@@ -685,7 +685,7 @@ class LogSpec extends AnyFunSuite {
         throw new VersionConflictException(version, logPathFor(version), null)
     }
     intercept[VersionConflictException] {
-      graft.streaming.GwSink.commitWithRetry(stormy) { _ => Seq.empty }
+      graft.log.GwTxn(stormy, "WRITE", "Append").commitOrCreate(_ => Seq.empty)
     }
   }
 

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{LongType, StructField}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.log.{ConcurrentDeleteDeleteException, GwLog, Metadata,
   MetadataChangedException, Occ, ProtocolChangedException, Snapshot}
 
@@ -125,11 +125,59 @@ class OccSpec extends SparkSpec {
     val before = log.latestVersion().get
     // a loser that passed its ENTRY replay check (we skip it by calling the
     // commit loop directly) must detect the winner inside the loop and skip
-    val v = graft.streaming.GwSink.commitReplayable(log, Some("q1/5")) { _ =>
+    val v = graft.log.GwTxn(log, "WRITE", "Append", txnId = Some("q1/5")).commitOrCreate { _ =>
       fail("the build closure must not produce a duplicate commit")
     }
     assert(v == before, "the replayed version is reported, nothing committed")
     assert(log.latestVersion().get == before)
+  }
+
+  /** A log seeded with files a and b whose FIRST latest-snapshot read lands
+    * `racer` as the next version right after returning — a concurrent
+    * writer slipping in between a commit attempt's checks and its version
+    * claim. */
+  private def racedLog(racer: (Metadata, graft.log.AddFile) => Seq[graft.log.Action]) = {
+    val dir = new org.apache.hadoop.fs.Path(Files.createTempDirectory("occ-race").toString)
+    val conf = new org.apache.hadoop.conf.Configuration()
+    val meta = Metadata("m", new StructType().add("id", LongType).json)
+    val a = graft.log.AddFile("/data/a.parquet", 10, 1000)
+    def ci(op: String) = graft.log.CommitInfo(1L, op, "", 0, 0, isBlindAppend = false, op)
+    new GwLog(dir, conf).commitAt(0L, Seq(graft.log.Protocol(), meta, a,
+      graft.log.AddFile("/data/b.parquet", 10, 1000), ci("seed")))
+    val log = new GwLog(dir, conf) {
+      private var raced = false
+      override def latestSnapshot(): Option[Snapshot] = {
+        val s = super.latestSnapshot()
+        if (!raced) {
+          raced = true
+          commitAt(s.get.version + 1, racer(meta, a) :+ ci("racer"))
+        }
+        s
+      }
+    }
+    (log, log.snapshot(None), a)
+  }
+
+  test("a racer landing after a txn's checks is checked, not committed over") {
+    // the racer removes file a between the attempt's checks and its claim:
+    // the attempt loses version 1, and its retry sees the removal
+    val (log, planned, a) = racedLog((_, a) => Seq(graft.log.RemoveFile(a.path, a.size, 2L)))
+    intercept[ConcurrentDeleteDeleteException] {
+      graft.log.GwTxn(log, "DELETE", "CopyOnWrite",
+        graft.log.GwTxn.Rewrite(Some(planned), deletes = Seq(a)))
+        .commit(_ => Seq(graft.log.RemoveFile(a.path, a.size, 3L)))
+    }
+    assert(log.listVersions() == Seq(0L, 1L), "nothing lands on top of the racer")
+    // the racer declares a CHECK constraint the append's rows were never
+    // validated against (or, alike, moves an identity watermark)
+    val (log2, planned2, _) = racedLog((m, _) =>
+      Seq(m.copy(configuration = Map("graft.constraints.c" -> "id > 0"))))
+    intercept[MetadataChangedException] {
+      graft.log.GwTxn(log2, "WRITE", "Append", graft.log.GwTxn.Append(planned2.metadata),
+        isBlindAppend = true)
+        .commitOrCreate(_ => Seq(graft.log.AddFile("/data/c.parquet", 10, 1000)))
+    }
+    assert(log2.listVersions() == Seq(0L, 1L), "nothing lands on top of the racer")
   }
 
   test("compaction never resurrects a concurrent DELETE's rows (lost update)") {
