@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
-import graft.log.{CdcFile, ColumnMapping, Snapshot}
+import graft.log.{AddFile, CdcFile, ColumnMapping, Snapshot}
 
 /**
  * Change-data-file plumbing for the Delta CHANGE DATA FEED contract
@@ -26,7 +26,7 @@ import graft.log.{CdcFile, ColumnMapping, Snapshot}
  * Scale: a cdc file's size tracks the CHANGED rows of its commit, not the
  * table — the extra write cost is proportional to the DML's own output,
  * the same trade Delta makes. Reads are a plain pinned-schema parquet
- * scan, pruned to exactly the requested commit range.
+ * scan over the logged files, pruned to exactly the requested commit range.
  */
 object Cdc {
   val ChangeTypeCol = "_change_type"
@@ -65,8 +65,8 @@ object Cdc {
   }
 
   /** Read cdc files back under the table's LOGICAL names + `_change_type`. */
-  def read(spark: SparkSession, schema: StructType, cdcs: Seq[CdcFile]): DataFrame = {
-    val df = spark.read.schema(physicalSchema(schema)).parquet(cdcs.map(_.path): _*)
-    df.toDF((schema.fieldNames :+ ChangeTypeCol).toIndexedSeq: _*)
-  }
+  def read(spark: SparkSession, schema: StructType, cdcs: Seq[CdcFile]): DataFrame =
+    org.apache.spark.sql.graftbridge.GwFileIndex.frame(spark,
+      schema.add(StructField(ChangeTypeCol, StringType)),
+      cdcs.map(c => AddFile(c.path, c.size, 0L)))
 }

@@ -6,6 +6,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col}
+import org.apache.spark.sql.graftbridge.GwFileIndex
 
 /**
  * Merge-on-read deletion-vector plumbing (see [[graft.log.DvDescriptor]]).
@@ -193,34 +194,32 @@ object Dv {
       .toDF("dv_path", "pos")
   }
 
-  /** LIVE rows of `files` under `schema`: raw parquet scan minus each DV'd
-    * file's deleted positions (anti join on (encoded path, row_index)). The
-    * anti join's build side is the deleted positions of the files READ —
-    * bounded by the operation, broadcast under AQE at typical DV sizes. */
+  /** LIVE rows of `files` under `schema`: the parquet read minus each DV'd
+    * file's deleted positions. The anti join's build side is the deleted
+    * positions of the files READ — bounded by the operation, broadcast
+    * under AQE at typical DV sizes. */
   def readLive(spark: SparkSession, schema: org.apache.spark.sql.types.StructType,
       files: Seq[AddFile]): DataFrame = {
-    import graft.log.ColumnMapping
     if (files.isEmpty)
       return spark.createDataFrame(java.util.Collections.emptyList[Row](),
-        ColumnMapping.stripMeta(schema))
-    // files carry PHYSICAL names (column mapping); rename to logical after
-    // the DV anti-join so _metadata stays resolvable on the scan relation
-    val raw = spark.read.schema(ColumnMapping.physicalSchema(schema))
-      .parquet(files.map(_.path): _*)
+        graft.log.ColumnMapping.stripMeta(schema))
     val dvd = files.filter(_.dv.isDefined)
-    val live =
-      if (dvd.isEmpty) raw
-      else {
-        val del = positionsDF(spark, dvd)
-          .join(broadcast(pathMapping(spark, dvd)), Seq("dv_path"))
-          .select(col("enc_path"), col("pos"))
-        raw.join(del,
-          raw.col("_metadata.file_path") === del.col("enc_path") &&
-            raw.col("_metadata.row_index") === del.col("pos"),
-          "left_anti")
-      }
-    if (!ColumnMapping.hasMapping(schema)) live
-    else live.toDF(schema.fieldNames.toIndexedSeq: _*)
+    if (dvd.isEmpty) GwFileIndex.frame(spark, schema, files)
+    else rowsAt(spark, schema, files, positionsDF(spark, dvd), dvd, "left_anti")
+  }
+
+  /** The rows of `files` (LOGICAL names) that sit at (`how = "left_semi"`)
+    * or off (`"left_anti"`) the (dv_path, pos) `positions` of `posFiles`:
+    * a position is `_metadata.row_index`, and the path matches in both its
+    * logged and its URL-encoded form ([[pathMapping]]). */
+  def rowsAt(spark: SparkSession, schema: org.apache.spark.sql.types.StructType,
+      files: Seq[AddFile], positions: DataFrame, posFiles: Seq[AddFile],
+      how: String): DataFrame = {
+    val raw = GwFileIndex.frame(spark, schema, files)
+    val at = positions.join(broadcast(pathMapping(spark, posFiles)), Seq("dv_path"))
+      .select(col("enc_path"), col("pos"))
+    raw.join(at, raw.col("_metadata.file_path") === at.col("enc_path") &&
+      raw.col("_metadata.row_index") === at.col("pos"), how)
   }
 
   /** Convenience: live rows of a snapshot. */

@@ -5,14 +5,15 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, count, lit, not, sum, when}
+import org.apache.spark.sql.graftbridge.GwFileIndex
 
 /**
- * Query surface over an indexed table (SURVEY.md §3.3): log replay ->
- * `spark.read.schema(...).parquet(files)`. The replay is pure driver-side
- * metadata work; the scan itself is a standard Catalyst
- * `FileSourceScanExec` with vectorized parquet reading, so column pruning,
- * predicate pushdown and AQE all apply untouched. Time travel =
- * `VERSION AS OF` semantics of the reference's README.md:81-84.
+ * Query surface over an indexed table (SURVEY.md §3.3): log replay -> a
+ * parquet scan over the logged files ([[GwFileIndex]]). The replay is pure
+ * driver-side metadata work; the scan itself is Spark's own vectorized
+ * parquet scan, so column pruning, predicate pushdown and AQE all apply
+ * untouched. Time travel = `VERSION AS OF` semantics of the reference's
+ * README.md:81-84.
  */
 final class GwTable private (spark: SparkSession, tablePath: String) {
   private val gwLog = GwLog.forTable(spark.sparkContext.hadoopConfiguration, tablePath)
@@ -76,12 +77,7 @@ final class GwTable private (spark: SparkSession, tablePath: String) {
       case a: AddFile if a.dataChange && a.dv.isEmpty => byPath(a.path) = a
       case _ => ()
     }
-    val added: Seq[AddFile] = byPath.values.toSeq
-    if (added.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        graft.log.ColumnMapping.stripMeta(latest.schema))
-    else
-      graft.log.ColumnMapping.readLogical(spark, latest.schema, added.map(_.path))
+    Dv.readLive(spark, latest.schema, byPath.values.toSeq)
   }
 
   /**
@@ -663,19 +659,12 @@ final class GwTable private (spark: SparkSession, tablePath: String) {
     if (files.isEmpty) Nil
     else {
       import spark.implicits._
-      val mapping = Dv.pathMapping(spark, files)
-      // physical read + logical aliases in ONE select so both the logical
-      // predicate and the _metadata columns resolve (column mapping)
-      val physSchema = graft.log.ColumnMapping.physicalSchema(snap.schema)
-      val raw = spark.read.schema(physSchema).parquet(files.map(_.path): _*)
-      val dataCols = snap.schema.fields.zip(physSchema.fields).toSeq
-        .map { case (lf, pf) => raw(pf.name).as(lf.name) }
-      val newRows = raw
-        .select(dataCols :+ col("_metadata.file_path").as("enc_path") :+
-          col("_metadata.row_index").as("pos"): _*)
+      val newRows = GwFileIndex.frame(spark, snap.schema, files)
         .filter(hit)
-        .select(col("enc_path"), col("pos"))
-        .join(org.apache.spark.sql.functions.broadcast(mapping), Seq("enc_path"))
+        .select(col("_metadata.file_path").as("enc_path"),
+          col("_metadata.row_index").as("pos"))
+        .join(org.apache.spark.sql.functions.broadcast(Dv.pathMapping(spark, files)),
+          Seq("enc_path"))
         .select("dv_path", "pos")
       // ONE map-side-combining aggregate, not distinct()+groupByKey: each
       // input partition packs its positions per file locally and the
@@ -817,24 +806,9 @@ final class GwTable private (spark: SparkSession, tablePath: String) {
               .flatMap { case (p, b) =>
                 graft.log.RoaringBitmapArray.deserialize(b).map(pos => (p, pos))
               }.toDF("dv_path", "pos")
-            val del = freshPos
-              .join(org.apache.spark.sql.functions.broadcast(
-                Dv.pathMapping(spark, files)), Seq("dv_path"))
-              .select(col("enc_path"), col("pos"))
-            val raw = spark.read
-              .schema(graft.log.ColumnMapping.physicalSchema(schema))
-              .parquet(files.map(_.path): _*)
-            val hitRows = raw.join(del,
-              raw.col("_metadata.file_path") === del.col("enc_path") &&
-                raw.col("_metadata.row_index") === del.col("pos"),
-              "left_semi")
-            if (!graft.log.ColumnMapping.hasMapping(schema)) hitRows
-            else hitRows.toDF(schema.fieldNames.toIndexedSeq: _*)
+            Dv.rowsAt(spark, schema, files, freshPos, files, "left_semi")
           }
-        val insRows =
-          if (newAdds.isEmpty) Dv.readLive(spark, schema, Nil)
-          else graft.log.ColumnMapping.readLogical(
-            spark, schema, newAdds.map(_.path))
+        val insRows = Dv.readLive(spark, schema, newAdds)
         Cdc.write(spark, tablePath, snapForCdc,
           delRows.withColumn(Cdc.ChangeTypeCol, lit(Cdc.Delete))
             .unionAll(insRows.withColumn(Cdc.ChangeTypeCol, lit(Cdc.Insert))))
@@ -1180,13 +1154,8 @@ final class GwTable private (spark: SparkSession, tablePath: String) {
     val candidates = if (ranges.isEmpty) snap.files else snap.filesForConstraints(ranges)
     if (candidates.isEmpty) return (Nil, Nil, 0L)
     val hit = coalesce(cond, lit(false))
-    val physSchema = graft.log.ColumnMapping.physicalSchema(snap.schema)
-    val raw = spark.read.schema(physSchema).parquet(candidates.map(_.path): _*)
-    val dataCols = snap.schema.fields.zip(physSchema.fields).toSeq
-      .map { case (lf, pf) => raw(pf.name).as(lf.name) }
-    val counts = raw
-      .select(dataCols :+ col("_metadata.file_path").as("__gw_f"): _*)
-      .groupBy(col("__gw_f").as("f"))
+    val counts = GwFileIndex.frame(spark, snap.schema, candidates)
+      .groupBy(col("_metadata.file_path").as("f"))
       .agg(count(lit(1)).as("total"), sum(when(hit, 1L).otherwise(0L)).as("hits"))
       .collect()
     val byKey = candidates.map(f => GwTable.uriKey(f.path) -> f).toMap
@@ -1308,10 +1277,7 @@ final class GwTable private (spark: SparkSession, tablePath: String) {
         if (!Cdc.enabled(current)) Nil
         else {
           val removed = Dv.readLive(spark, current.schema, removes)
-          val added =
-            if (newAdds.isEmpty) Dv.readLive(spark, current.schema, Nil)
-            else graft.log.ColumnMapping.readLogical(
-              spark, current.schema, newAdds.map(_.path))
+          val added = Dv.readLive(spark, current.schema, newAdds)
           Cdc.write(spark, tablePath, current,
             removed.exceptAll(added)
               .withColumn(Cdc.ChangeTypeCol, lit(Cdc.Delete))
@@ -1385,8 +1351,7 @@ final class GwTable private (spark: SparkSession, tablePath: String) {
           .withColumn(Cdc.ChangeTypeCol, lit(Cdc.Delete))
         val changes =
           if (newAdds.isEmpty) deleted
-          else deleted.unionAll(graft.log.ColumnMapping
-            .readLogical(spark, snap.schema, newAdds.map(_.path))
+          else deleted.unionAll(GwFileIndex.frame(spark, snap.schema, newAdds)
             .withColumn(Cdc.ChangeTypeCol, lit(Cdc.Insert)))
         Cdc.write(spark, tablePath, snap, changes)
       }
@@ -1632,11 +1597,6 @@ final class GwTable private (spark: SparkSession, tablePath: String) {
     val since = gwLog.snapshot(Some(sinceVersion))
     val schema = since.schema
     var curMeta = since.metadata
-    def read(paths: Seq[String]): DataFrame =
-      if (paths.isEmpty)
-        spark.createDataFrame(java.util.Collections.emptyList[Row](),
-          graft.log.ColumnMapping.stripMeta(schema))
-      else graft.log.ColumnMapping.readLogical(spark, schema, paths)
     val parts = ((sinceVersion + 1) to latest.version).flatMap { v =>
       val actions = gwLog.readVersion(v)
       // a metadata restatement that keeps the schema + partitioning (a
@@ -1667,8 +1627,7 @@ final class GwTable private (spark: SparkSession, tablePath: String) {
       val (dvAdds, plainAdds) = actions
         .collect { case a: AddFile if a.dataChange => a }
         .partition(_.dv.isDefined)
-      val adds = plainAdds.map(_.path)
-      val rms = actions.collect { case r: RemoveFile if r.dataChange => r.path }
+      val rms = actions.collect { case r: RemoveFile if r.dataChange => r }
       val dvParts: Seq[DataFrame] = if (dvAdds.isEmpty) Nil else {
         val prev = gwLog.snapshot(Some(v - 1)).files
           .map(f => f.path -> f).toMap
@@ -1676,36 +1635,21 @@ final class GwTable private (spark: SparkSession, tablePath: String) {
         val oldPos = Dv.positionsDF(spark,
           dvAdds.flatMap(a => prev.get(a.path)).filter(_.dv.isDefined))
         val freshly = newPos.exceptAll(oldPos) // (dv_path, pos)
-        val mapping = Dv.pathMapping(spark, dvAdds)
-        val del = freshly
-          .join(org.apache.spark.sql.functions.broadcast(mapping), Seq("dv_path"))
-          .select(col("enc_path"), col("pos"))
-        val physSchema = graft.log.ColumnMapping.physicalSchema(schema)
-        val raw = spark.read.schema(physSchema).parquet(dvAdds.map(_.path): _*)
-        val joined = raw.join(del,
-          raw.col("_metadata.file_path") === del.col("enc_path") &&
-            raw.col("_metadata.row_index") === del.col("pos"),
-          "left_semi")
-        val logical =
-          if (!graft.log.ColumnMapping.hasMapping(schema)) joined
-          else joined.toDF(schema.fieldNames.toIndexedSeq: _*)
-        Seq(logical
+        Seq(Dv.rowsAt(spark, schema, dvAdds, freshly, dvAdds, "left_semi")
           .withColumn("_change_type", lit("delete"))
           .withColumn("_commit_version", lit(v)))
       }
       val filedParts =
-        if (adds.isEmpty && rms.isEmpty) Nil
+        if (plainAdds.isEmpty && rms.isEmpty) Nil
         else {
           val prev = gwLog.snapshot(Some(v - 1)).files.map(f => f.path -> f).toMap
-          val added = read(adds)
+          val added = Dv.readLive(spark, schema, plainAdds)
           // a removed file that carried a DV contributes only its rows that
           // were LIVE at v-1 — its already-deleted rows were reported at
           // their own deleting commit
-          val removedFiles = rms.map(p =>
-            prev.getOrElse(p, AddFile(p, 0L, 0L)))
-          val removed =
-            if (removedFiles.isEmpty) read(Nil)
-            else Dv.readLive(spark, schema, removedFiles)
+          val removedFiles = rms.map(r =>
+            prev.getOrElse(r.path, AddFile(r.path, r.size, 0L)))
+          val removed = Dv.readLive(spark, schema, removedFiles)
           Seq(
             added.exceptAll(removed).withColumn("_change_type", lit("insert")),
             removed.exceptAll(added).withColumn("_change_type", lit("delete")))
@@ -1715,7 +1659,7 @@ final class GwTable private (spark: SparkSession, tablePath: String) {
       }
     }
     if (parts.isEmpty)
-      read(Nil).withColumn("_change_type", lit(""))
+      Dv.readLive(spark, schema, Nil).withColumn("_change_type", lit(""))
         .withColumn("_commit_version", lit(0L)).limit(0)
     else parts.reduce(_ unionAll _)
   }
@@ -2681,11 +2625,6 @@ object GwTable {
     Option(u.getAuthority).getOrElse("") + u.getPath
   }
 
-  /** Key for a path that came back from `_metadata.file_path`, which is the
-    * URL-ENCODED rendering (space -> %20, literal %xx -> %25xx). Decoding
-    * through java.net.URI converges it onto [[uriKey]]'s raw form — without
-    * this, files inside partition directories whose values needed escaping
-    * (e.g. `grp=a%2Fb c`) fail the snapshot lookup. */
   /** Lossless type widenings the parquet scan up-converts in place
     * (verified against Spark 4.1's vectorized reader): integral up-casts,
     * integral→double, float→double, date→timestamp_ntz, and decimal
@@ -2712,6 +2651,11 @@ object GwTable {
     }
   }
 
+  /** Key for a path that came back from `_metadata.file_path`, which is the
+    * URL-ENCODED rendering (space -> %20, literal %xx -> %25xx). Decoding
+    * through java.net.URI converges it onto [[uriKey]]'s raw form — without
+    * this, files inside partition directories whose values needed escaping
+    * (e.g. `grp=a%2Fb c`) fail the snapshot lookup. */
   def uriKeyScanned(p: String): String =
     scala.util.Try(uriKey(new Path(new java.net.URI(p)).toString)).getOrElse(uriKey(p))
 }

@@ -7,7 +7,6 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, max}
-import scala.jdk.CollectionConverters._
 
 /** One CDA commit folder -> one log version (reference package.scala:27-32). */
 final case class Batch(
@@ -22,21 +21,6 @@ final case class BatchResult(
     processedSchema: String,
     processedTimestamp: Long,
     processedFiles: Int)
-
-/**
- * Hadoop Configuration is not java-serializable; ship it to executors as a
- * key/value list and rebuild lazily per task.
- */
-final class SerializableHadoopConf(@transient private val conf: Configuration) extends Serializable {
-  private val props: Array[(String, String)] =
-    conf.iterator().asScala.map(e => (e.getKey, e.getValue)).toArray
-  @transient private lazy val rebuilt: Configuration = {
-    val c = new Configuration(false)
-    props.foreach { case (k, v) => c.set(k, v) }
-    c
-  }
-  def value: Configuration = rebuilt
-}
 
 /**
  * The indexer — reference `Guidewire.index` re-expressed Spark-first

@@ -1,6 +1,6 @@
 package graft.log
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.{StructField, StructType}
 
 /**
@@ -67,15 +67,6 @@ object ColumnMapping {
   /** physical name (lowercased) -> logical name. */
   def toLogical(schema: StructType): Map[String, String] =
     schema.fields.map(f => physicalName(f).toLowerCase -> f.name).toMap
-
-  /** Read `paths` surfacing the LOGICAL names: mapped tables read the
-    * physical schema and rename positionally; unmapped tables are exactly
-    * the plain pinned-schema read. */
-  def readLogical(spark: SparkSession, schema: StructType,
-      paths: Seq[String]): DataFrame = {
-    val base = spark.read.schema(physicalSchema(schema)).parquet(paths: _*)
-    if (!hasMapping(schema)) base else base.toDF(schema.fieldNames.toIndexedSeq: _*)
-  }
 
   /** Field-metadata-free copy (mapping pins stripped) — for schema
     * comparisons against external/batch schemas, which never carry the

@@ -4,9 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory, Scan}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset => OffsetV2, ReadLimit}
-import org.apache.spark.sql.execution.datasources.{FilePartition, InMemoryFileIndex}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetScan, ParquetTable}
+import org.apache.spark.sql.execution.datasources.FilePartition
+import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -43,6 +42,8 @@ class GwMicroBatchStream(
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
 
   private val log = graft.log.GwLog.forTable(spark.sparkContext.hadoopConfiguration, tablePath)
+  private val options = new CaseInsensitiveStringMap(
+    java.util.Collections.singletonMap("path", tablePath))
 
   /** Trigger.AvailableNow's pin: versions committed after the stream
     * started are left for the next run. */
@@ -92,16 +93,11 @@ class GwMicroBatchStream(
 
   override def toString: String = s"GwMicroBatchStream[$tablePath]"
 
-  /** A parquet scan over `paths` reading the on-file (PHYSICAL, column
+  /** A parquet scan over `files` reading the on-file (PHYSICAL, column
     * mapping) layout `dataSchema`; the stream reports logical names upward
     * and rows are positional. */
-  private def parquetScan(paths: Seq[String], dataSchema: StructType): ParquetScan = {
-    val options = new CaseInsensitiveStringMap(
-      java.util.Collections.singletonMap("path", tablePath))
-    ParquetTable(s"gwdelta-stream:$tablePath", spark, options, paths,
-      Some(dataSchema), classOf[ParquetFileFormat])
-      .newScanBuilder(options).build().asInstanceOf[ParquetScan]
-  }
+  private def parquetScan(files: Seq[graft.log.AddFile], dataSchema: StructType): Scan =
+    GwFileIndex.scanBuilder(spark, files, dataSchema, options).build()
 
   private def dataSchema = graft.log.ColumnMapping.physicalSchema(streamSchema)
 
@@ -128,16 +124,8 @@ class GwMicroBatchStream(
       // per-file skipping partitions the batch MOR scan uses — a plain
       // parquet read would resurrect the deleted rows
       val files = GwStreamAdmission.rangeFiles(log, tablePath, start, end)
-      val (dvd, clean) = files.partition(_.dv.isDefined)
-      val cleanParts: Array[InputPartition] =
-        if (clean.isEmpty) Array.empty
-        else parquetScan(clean.map(_.path), dataSchema).toBatch.planInputPartitions()
-      val dvParts: Array[InputPartition] =
-        if (dvd.isEmpty) Array.empty
-        else GwMorScan.groupDvPartitions(
-          parquetScan(dvd.map(_.path), dataSchema).toBatch.planInputPartitions(),
-          dvd.map(f => graft.GwTable.uriKey(f.path) -> f.dv.get).toMap)
-      cleanParts ++ dvParts
+      val scan = parquetScan(_: Seq[graft.log.AddFile], dataSchema)
+      GwFileIndex.liveScan(spark, files, scan, scan).toBatch.planInputPartitions()
     }
 
   /** Change-feed partitions of `(start, end]`: each slice's files planned by
@@ -150,7 +138,7 @@ class GwMicroBatchStream(
           slice.changeType.map(UTF8String.fromString).toSeq :+ slice.version)
         val schema =
           if (slice.changeType.isEmpty) graft.Cdc.physicalSchema(streamSchema) else dataSchema
-        parquetScan(slice.paths, schema).toBatch.planInputPartitions().map {
+        parquetScan(slice.files, schema).toBatch.planInputPartitions().map {
           case fp: FilePartition =>
             val tagged = fp.copy(files = fp.files.map(_.copy(partitionValues = tags)))
             if (slice.changeType.isEmpty) GwCdcPartition(tagged) else tagged
@@ -172,10 +160,8 @@ class GwMicroBatchStream(
   private lazy val readerFactory: PartitionReaderFactory = {
     val conf = new graft.SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
     val commitVersion = StructField(GwStreamAdmission.CommitVersionCol, LongType)
-    // the factory reads no file index: an empty one lists nothing
-    val options = new CaseInsensitiveStringMap(
-      java.util.Collections.singletonMap("path", tablePath))
-    val noFiles = new InMemoryFileIndex(spark, Nil, Map.empty, None)
+    // the factory reads no file index
+    val noFiles = new GwFileIndex(spark, Nil)
     def tagged(data: StructType, tags: StructField*): PartitionReaderFactory =
       ParquetScan(spark, spark.sessionState.newHadoopConfWithOptions(
           Map("path" -> tablePath)), noFiles, data, data, StructType(tags),
@@ -194,7 +180,7 @@ class GwMicroBatchStream(
 }
 
 /** Scan wrapper that adds the streaming entry point to the pruning scan.
-  * The pruning scan (an `InMemoryFileIndex` over every live file) is built
+  * The pruning scan (a parquet scan over every live file) is built
   * on first use: a stream plans each micro-batch itself, so once
   * [[toMicroBatchStream]] has run, the questions Spark's
   * `MicroBatchScanExec` still asks (schema, description, metrics, columnar

@@ -7,8 +7,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetScanBuilder, ParquetTable}
+import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
 import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
 import org.apache.spark.sql.types.{DateType, DoubleType, FloatType, NumericType, StringType, StructType, TimestampNTZType, TimestampType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -291,10 +290,15 @@ class GwPruningScanBuilder(
     snapshot: Snapshot)
   extends SupportsPushDownCatalystFilters with SupportsPushDownRequiredColumns {
 
-  private var inner: ParquetScanBuilder = _
   private var required: Option[StructType] = None
   // pruned candidate set (partition + stats pruning); starts at all live
   private var candidates: Seq[graft.log.AddFile] = snapshot.files
+  // the physical filters as pushed (kept so a runtime-filter re-plan can
+  // push them into its own clean-file scan)
+  private var pushedPf: Seq[Expression] = Nil
+  // the clean candidates' parquet builder with the filters pushed: made
+  // once per plan by pushFilters, built as is by build()
+  private var pushed: Option[ParquetScanBuilder] = None
 
   // column mapping (RENAME COLUMN, metadata-only): the parquet side of
   // this scan works in PHYSICAL names — the inner scan's schema, the
@@ -325,28 +329,8 @@ class GwPruningScanBuilder(
         a.withName(toPhys(a.name.toLowerCase))
     })
 
-  private def makeInner(paths: Seq[String]): ParquetScanBuilder = {
-    val b = ParquetTable(tableName, spark, options, paths,
-      Some(physType(snapshot.schema)), classOf[ParquetFileFormat])
-      .newScanBuilder(options)
-    required.foreach(r => b.pruneColumns(physType(r)))
-    b
-  }
-
-  private def cleanFiles = candidates.filter(_.dv.isEmpty)
-  private def dvFiles = candidates.filter(_.dv.isDefined)
-
-  private def ensureInner(): ParquetScanBuilder = {
-    // the filter-pushdown side of the scan covers the CLEAN files only; a
-    // DV'd file must stream every physical row for its position counter
-    // (see GwMorScan), so its scan is built filter-free at build() time
-    if (inner == null) inner = makeInner(cleanFiles.map(_.path))
-    inner
-  }
-
-  // the physical filters as pushed (kept so a runtime-filter rebuild can
-  // re-push them into the re-planned inner scan)
-  private var pushedPf: Seq[Expression] = Nil
+  private def parquet(files: Seq[graft.log.AddFile]): ParquetScanBuilder =
+    GwFileIndex.scanBuilder(spark, files, physType(snapshot.schema), options)
 
   override def pushFilters(filters: Seq[Expression]): Seq[Expression] = {
     // physical names from here down: footer stats and partitionValues are
@@ -361,36 +345,32 @@ class GwPruningScanBuilder(
     val constraints = direct ++ GwGeneratedPruning.derive(spark, snapshot, direct)
     // partition pruning (exact, metadata-only) runs before stats pruning
     if (constraints.nonEmpty) candidates = snapshot.filesForConstraints(constraints)
-    inner = makeInner(cleanFiles.map(_.path))
-    val residual = inner.pushFilters(pf)
+    // the filter-pushdown side of the scan covers the CLEAN files only; a
+    // DV'd file must stream every physical row for its position counter
+    // (see GwMorScan), so its scan is built filter-free
+    val b = parquet(candidates.filter(_.dv.isEmpty))
+    val residual = b.pushFilters(pf)
+    pushed = Some(b)
     // the parquet builder reports every data filter as a residual, which is
     // what makes the filter-free DV side correct (Spark re-filters above
     // the scan); a future builder that swallowed filters would silently
     // unfilter DV'd files, so pin the contract here
-    require(dvFiles.isEmpty || residual == pf,
+    require(candidates.forall(_.dv.isEmpty) || residual == pf,
       s"parquet scan builder consumed filters over a DV'd snapshot: $filters")
     // Spark keeps whatever we return and re-applies it ABOVE the scan —
-    // that layer lives in logical names. Under a mapping, hand back the
-    // original logical filters wherever the physical form survived.
+    // that layer lives in logical names, so hand back the logical original
+    // of each physical residual
     if (!mapped) residual
-    else if (residual == pf) filters
-    else logicalResidual(filters, pf, residual)
+    else {
+      val byPhys = pf.zip(filters).toMap
+      residual.map(r => byPhys.getOrElse(r, r))
+    }
   }
 
-  /** Map the inner builder's physical residuals back to their logical
-    * originals (positional over the translated list). */
-  private def logicalResidual(filters: Seq[Expression], pf: Seq[Expression],
-      residual: Seq[Expression]): Seq[Expression] = {
-    val byPhys = pf.zip(filters).toMap
-    residual.map(r => byPhys.getOrElse(r, r))
-  }
+  override def pushedFilters: Array[Predicate] =
+    pushed.map(_.pushedFilters).getOrElse(Array.empty)
 
-  override def pushedFilters: Array[Predicate] = ensureInner().pushedFilters
-
-  override def pruneColumns(s: StructType): Unit = {
-    required = Some(s)
-    if (inner != null) inner.pruneColumns(physType(s))
-  }
+  override def pruneColumns(s: StructType): Unit = required = Some(s)
 
   override def build(): Scan = {
     // a query referencing the hidden row-identity columns (provenance
@@ -405,41 +385,32 @@ class GwPruningScanBuilder(
       return GwRowId.buildScan(tableName, spark, options, snapshot,
         candidates, required.get)
     }
-    val scan = assembleScan(candidates)
+    val scan = assembleScan(candidates, pushed)
     // surface LOGICAL names to Spark: rows are positional, only the
     // reported schema translates. Runtime filtering is forgone on mapped
     // tables (runtime filters arrive in logical names; the stats are
     // physical) — consistent with DPP being forgone there.
     if (mapped) new GwLogicalNamesScan(scan, logiType(scan.readSchema()))
-    else new GwRuntimeFilteringScan(scan, snapshot, candidates, assembleScan)
+    else new GwRuntimeFilteringScan(scan, snapshot, candidates, assembleScan(_, None))
   }
 
   /** Assemble the batch scan over an explicit candidate set — the initial
-    * build and every runtime-filter re-plan go through here, so a pruned
-    * re-plan preserves the pushed filters, the column pruning, and the
-    * clean/DV split exactly. */
-  private def assembleScan(cands: Seq[graft.log.AddFile]): Scan = {
-    val clean = cands.filter(_.dv.isEmpty)
-    val dvd = cands.filter(_.dv.isDefined)
-    if (dvd.isEmpty) {
-      val b = makeInner(clean.map(_.path))
-      if (pushedPf.nonEmpty) b.pushFilters(pushedPf)
+    * build (with the builder pushFilters made) and every runtime-filter
+    * re-plan go through here, so a pruned re-plan preserves the pushed
+    * filters, the column pruning, and the clean/DV split exactly. */
+  private def assembleScan(cands: Seq[graft.log.AddFile],
+      clean: Option[ParquetScanBuilder]): Scan = {
+    def scan(b: ParquetScanBuilder): Scan = {
+      required.foreach(r => b.pruneColumns(physType(r)))
       b.build()
-    } else {
-      val cleanScan =
-        if (clean.isEmpty) None
-        else {
-          val b = makeInner(clean.map(_.path))
-          if (pushedPf.nonEmpty) b.pushFilters(pushedPf)
-          Some(b.build())
-        }
-      // filter-free, column-pruned scan over the DV'd files
-      val dvScan = makeInner(dvd.map(_.path)).build()
-      new GwMorScan(cleanScan, dvScan,
-        new graft.SerializableHadoopConf(spark.sparkContext.hadoopConfiguration),
-        dvd.map(f => graft.GwTable.uriKey(f.path) -> f.dv.get).toMap,
-        planned = cands)
     }
+    GwFileIndex.liveScan(spark, cands,
+      clean = files => scan(clean.getOrElse {
+        val b = parquet(files)
+        if (pushedPf.nonEmpty) b.pushFilters(pushedPf)
+        b
+      }),
+      dv = files => scan(parquet(files)))
   }
 }
 

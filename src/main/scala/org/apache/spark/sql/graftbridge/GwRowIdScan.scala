@@ -8,8 +8,6 @@ import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
 import org.apache.spark.sql.connector.catalog.MetadataColumn
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan}
 import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.vectorized.ColumnarBatch
@@ -68,8 +66,7 @@ object GwRowId {
           s"$tableName: $RowIdCol needs row tracking — file ${f.path} has " +
             "no baseRowId; set TBLPROPERTIES (graft.enableRowTracking = " +
             "'true') and rewrite or re-add existing files"))
-    val inner = ParquetTable(tableName, spark, options, candidates.map(_.path),
-      Some(snapshot.schema), classOf[ParquetFileFormat]).newScanBuilder(options)
+    val inner = GwFileIndex.scanBuilder(spark, candidates, snapshot.schema, options)
     inner.pruneColumns(StructType(dataFields))
     new GwRowIdScan(inner.build(), StructType(required.fields),
       idFields.map(_.name).toIndexedSeq,

@@ -53,7 +53,7 @@ class GwRowLevelOperation(
   override def command(): RowLevelOperation.Command = cmd
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val b = new GwGroupScanBuilder(s"gwdelta-$cmd", spark, options, snapshot)
+    val b = new GwGroupScanBuilder(spark, options, snapshot)
     groupScan = Some(b)
     b
   }
@@ -77,7 +77,6 @@ class GwRowLevelOperation(
   * harvested stats but are NEVER given to the parquet reader (residual-only)
   * — affected files must be read back whole. */
 class GwGroupScanBuilder(
-    tableName: String,
     spark: SparkSession,
     options: CaseInsensitiveStringMap,
     snapshot: Snapshot)
@@ -104,24 +103,14 @@ class GwGroupScanBuilder(
   override def pruneColumns(s: StructType): Unit = required = Some(s)
 
   private def makeScan(files: Seq[graft.log.AddFile]): Scan = {
-    val b = ParquetTable(tableName, spark, options, files.map(_.path),
-      Some(snapshot.schema), classOf[ParquetFileFormat]).newScanBuilder(options)
+    val b = GwFileIndex.scanBuilder(spark, files, snapshot.schema, options)
     required.foreach(b.pruneColumns)
     b.build()
   }
 
-  override def build(): Scan = {
-    // a candidate file carrying a deletion vector must serve LIVE rows only
-    // — the replacement write would otherwise resurrect its deleted rows
-    val (dvd, clean) = candidates.partition(_.dv.isDefined)
-    if (dvd.isEmpty) makeScan(clean)
-    else new GwMorScan(
-      if (clean.isEmpty) None else Some(makeScan(clean)),
-      makeScan(dvd),
-      new graft.SerializableHadoopConf(spark.sparkContext.hadoopConfiguration),
-      dvd.map(f => graft.GwTable.uriKey(f.path) -> f.dv.get).toMap,
-      planned = candidates)
-  }
+  // a candidate file carrying a deletion vector must serve LIVE rows only
+  // — the replacement write would otherwise resurrect its deleted rows
+  override def build(): Scan = GwFileIndex.liveScan(spark, candidates, makeScan, makeScan)
 }
 
 /** The `ReplaceData` write: replacement rows land as parquet under

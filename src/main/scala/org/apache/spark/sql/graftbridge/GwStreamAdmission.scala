@@ -44,7 +44,7 @@ object GwStreamOffset {
 /** One version's share of a change-feed batch: the files whose rows the
   * feed emits for `version`, tagged `changeType`. `None` marks change-data
   * files, which carry their own `_change_type` column. */
-case class GwChangeSlice(version: Long, changeType: Option[String], paths: Seq[String])
+case class GwChangeSlice(version: Long, changeType: Option[String], files: Seq[AddFile])
 
 /**
  * Admission control of the gwdelta stream ([[GwMicroBatchStream]], both
@@ -197,28 +197,28 @@ object GwStreamAdmission {
             "across schemas — restart consumption from a full snapshot")
         curMeta = Some(m)
       }
-      val cdcs = actions.collect { case c: CdcFile => c.path }
+      val cdcs = actions.collect { case c: CdcFile => AddFile(c.path, c.size, 0L) }
       if (cdcs.nonEmpty) Some(GwChangeSlice(v, None, cdcs))
       else {
         val adds = actions.collect { case a: AddFile if a.dataChange => a }
-        val rms = actions.collect { case r: RemoveFile if r.dataChange => r.path }
+        val rms = actions.collect { case r: RemoveFile if r.dataChange => r }
         if (adds.exists(_.dv.isDefined))
           stop(v, "asserts deletion vectors; the position-level diff needs " +
             "the batch API — GwTable.rowChanges")
         if (adds.nonEmpty && rms.nonEmpty)
           stop(v, "mixes added and removed data files (a rewrite); the " +
             "row-level diff needs the batch API — GwTable.rowChanges")
-        if (rms.nonEmpty) {
+        if (adds.nonEmpty) Some(GwChangeSlice(v, Some(graft.Cdc.Insert), adds))
+        else if (rms.nonEmpty) {
           // removed rows must be LIVE rows: a file that carried a deletion
           // vector needs position reconciliation the feed cannot do
           val prev = log.snapshot(Some(v - 1)).files.map(f => f.path -> f).toMap
-          if (rms.exists(p => prev.get(p).exists(_.dv.isDefined)))
+          val removed = rms.map(r => prev.getOrElse(r.path, AddFile(r.path, r.size, 0L)))
+          if (removed.exists(_.dv.isDefined))
             stop(v, "removes a file carrying a deletion vector — use " +
               "GwTable.rowChanges")
-        }
-        if (adds.nonEmpty) Some(GwChangeSlice(v, Some(graft.Cdc.Insert), adds.map(_.path)))
-        else if (rms.nonEmpty) Some(GwChangeSlice(v, Some(graft.Cdc.Delete), rms))
-        else None
+          Some(GwChangeSlice(v, Some(graft.Cdc.Delete), removed))
+        } else None
       }
     }
   }

@@ -12,7 +12,6 @@ import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactor
 import org.apache.spark.sql.execution.datasources.OutputWriterFactory
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types._
-import org.apache.spark.util.SerializableConfiguration
 import scala.collection.mutable
 
 /**
@@ -58,7 +57,7 @@ class GwStreamingWrite(
     val factory = new ParquetFileFormat().prepareWrite(
       spark, job, Map.empty[String, String], info.schema())
     new GwEpochWriterFactory(epochBase, info.schema(), factory,
-      new SerializableConfiguration(job.getConfiguration), partitionColumns)
+      new graft.SerializableHadoopConf(job.getConfiguration), partitionColumns)
   }
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
@@ -106,7 +105,7 @@ class GwEpochWriterFactory(
     epochBase: String,
     schema: StructType,
     factory: OutputWriterFactory,
-    conf: SerializableConfiguration,
+    conf: graft.SerializableHadoopConf,
     partitionColumns: Seq[String]) extends StreamingDataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] =
@@ -122,7 +121,7 @@ class GwEpochFileWriter(
     taskId: Long,
     schema: StructType,
     factory: OutputWriterFactory,
-    conf: SerializableConfiguration,
+    conf: graft.SerializableHadoopConf,
     partitionColumns: Seq[String]) extends DataWriter[InternalRow] {
 
   private val writers =

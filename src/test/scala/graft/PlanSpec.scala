@@ -382,4 +382,73 @@ class PlanSpec extends SparkSpec {
     // one md5 per row feeds split/shard/order; scan reads only doc_id
     assert(!p.contains("text"), s"unpruned documents scan:\n$p")
   }
+
+  // ---- reads plan from the log, not from storage ----
+
+  /** Spark jobs started, and metadata calls on data paths under `root`
+    * (outside `_delta_log`), while `df` is built and planned. */
+  private def planCost(df: () => DataFrame, root: String): (Int, Seq[String]) = {
+    import scala.jdk.CollectionConverters._
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.GraftTestAccess.drainListeners(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    CountingFileSystem.calls.clear()
+    try {
+      df().queryExecution.executedPlan
+      org.apache.spark.GraftTestAccess.drainListeners(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(l)
+    (jobs.get, CountingFileSystem.calls.asScala.toSeq
+      .filter(p => p.startsWith(root + "/") && !p.contains("/_delta_log")))
+  }
+
+  private def tempTable(tag: String): String =
+    java.nio.file.Files.createTempDirectory(tag).resolve("t").toString
+
+  test("planning a read costs no filesystem call per data file and no job") {
+    import org.apache.spark.sql.functions.col
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.cntfs.impl", classOf[CountingFileSystem].getName)
+    for (n <- Seq(64, 400)) {
+      val dir = tempTable("plan-probe")
+      val path = "cntfs://" + dir
+      graft.streaming.GwSink.append(
+        spark.range(0, n * 2L, 1, n).selectExpr("id % 7 AS k", "id AS v"), path)
+      assert(GwTable.forPath(spark, path).snapshot().files.size == n)
+      val (jobs, calls) =
+        planCost(() => GwTable.forPath(spark, path).toDF.filter(col("k") === 3), dir)
+      assert(jobs == 0, s"$n files: $jobs Spark jobs while planning")
+      assert(calls.isEmpty,
+        s"$n files: ${calls.size} filesystem calls on data paths, e.g. ${calls.take(3)}")
+    }
+  }
+
+  test("a logged file missing from storage fails the read, not the plan") {
+    val dir = tempTable("plan-missing")
+    graft.streaming.GwSink.append(spark.range(0, 30, 1, 3).toDF, dir)
+    val files = GwTable.forPath(spark, dir).snapshot().files
+    assert(files.size == 3)
+    val gone = new org.apache.hadoop.fs.Path(files.head.path)
+    assert(gone.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(gone, false))
+    val df = GwTable.forPath(spark, dir).toDF
+    df.queryExecution.executedPlan
+    val e = intercept[Exception](df.collect())
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(messages.exists(_.contains(gone.toUri.getPath)),
+      s"failure does not name ${gone.toUri.getPath}: ${messages.mkString(" | ")}")
+  }
+
+  test("an emptied table plans with no Spark job and counts 0") {
+    val dir = tempTable("plan-empty")
+    graft.streaming.GwSink.append(spark.range(10).toDF, dir)
+    GwTable.forPath(spark, dir).truncate()
+    val (jobs, _) = planCost(() => GwTable.forPath(spark, dir).toDF, dir)
+    assert(jobs == 0, s"$jobs Spark jobs while planning an emptied table")
+    assert(GwTable.forPath(spark, dir).toDF.count() == 0)
+  }
 }
