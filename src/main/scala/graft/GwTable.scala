@@ -968,10 +968,10 @@ final class GwTable private (spark: SparkSession, tablePath: String) {
       .foreach(v => return v)
     require(whenMatchedSet.nonEmpty || insertNotMatched || whenMatchedDeleteIf.nonEmpty,
       "MERGE needs a matched-update, matched-delete and/or not-matched-insert action")
-    require(gwLog.exists(), s"MERGE target has no transaction log at $tablePath")
+    val snap0 = gwLog.latestSnapshot().getOrElse(throw new IllegalArgumentException(
+      s"MERGE target has no transaction log at $tablePath"))
     require(!source.columns.exists(_.startsWith("__gw_")),
       "source columns must not use the reserved __gw_ prefix")
-    val snap0 = gwLog.snapshot(None)
     // MERGE WITH SCHEMA EVOLUTION (Delta parity, API form): source columns
     // absent from the target append to the schema (forced nullable, fresh
     // physical name if a dropped name is being re-added — same rules as
@@ -1362,14 +1362,13 @@ final class GwTable private (spark: SparkSession, tablePath: String) {
   /** TRUNCATE: one metadata-only commit tombstoning every live file — no
     * data is read or written; the content stays time-travelable until
     * `vacuum`. Returns the committed version, or -1 on an empty log. */
-  def truncate(): Long = {
-    if (gwLog.listVersions().isEmpty) return -1L
-    GwTxn(gwLog, "DELETE", "Truncate").commit { snap =>
+  def truncate(): Long =
+    GwTxn(gwLog, "DELETE", "Truncate").commitOrCreate { fresh =>
+      val snap = fresh.getOrElse(return -1L)
       GwTable.assertNotAppendOnly(tablePath, snap, "TRUNCATE")
       val now = System.currentTimeMillis()
       snap.files.map(f => RemoveFile(f.path, f.size, now))
     }
-  }
 
   /**
    * RESTORE: make the live state equal the snapshot at `version` with ONE

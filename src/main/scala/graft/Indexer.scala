@@ -207,10 +207,10 @@ object Indexer {
     // earlier can match — in the steady state this reads ONE version
     // file, not a 64-version tail; the window stays as a backstop
     val committedTxns = scala.collection.mutable.Set.empty[String]
-    if (gwLog.exists()) {
+    val versions = gwLog.listVersions().reverseIterator
+    if (versions.hasNext) {
       val oldestCandidate = batches.map(_.commitTimestamp).min
       val window = math.max(IndexTxnWalkWindow, batches.size + 8)
-      val versions = gwLog.listVersions().reverseIterator
       var inspected = 0
       var stop = false
       while (versions.hasNext && !stop && inspected < window) {
@@ -247,8 +247,8 @@ object Indexer {
    */
   private def promoteUncommittedRestatement(
       conf: Configuration, gwLog: GwLog, batch: Batch): Batch = {
-    if (batch.metadata.isDefined || !gwLog.exists()) return batch
-    val committedFp = gwLog.snapshot(None).metadata
+    if (batch.metadata.isDefined) return batch
+    val committedFp = gwLog.latestSnapshot().flatMap(_.metadata)
       .flatMap(_.configuration.get(FingerprintKey))
     if (!committedFp.exists(_ != batch.schemaId)) return batch
     val schema = SchemaProbe.readSchemaFromFiles(conf, batch.filesToAdd)

@@ -3180,8 +3180,7 @@ object Pipelines {
     val spark = probes.sparkSession
     val metricsLog = graft.log.GwLog.forTable(
       spark.sparkContext.hadoopConfiguration, metricsPath)
-    if (txnId.isDefined && metricsLog.exists() &&
-        graft.log.GwTxn.replayedVersion(metricsLog, txnId).isDefined)
+    if (graft.log.GwTxn.replayedVersion(metricsLog, txnId).isDefined)
       return spark.read.format("gwdelta").load(metricsPath)
         .filter(col("batch") === batch)
     val q = probes.select(id.cast("long").as("pid"), vec.as("pemb"))

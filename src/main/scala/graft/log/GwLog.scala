@@ -2,7 +2,7 @@ package graft.log
 
 import java.nio.charset.StandardCharsets
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 
 /**
  * Transaction-log reader/writer over the Hadoop FileSystem API.
@@ -53,14 +53,16 @@ class GwLog(val tablePath: Path, conf: Configuration,
     * Without the incremental path a busy table pays O(checkpoint-interval)
     * log reads per commit just for its own summary — at object-store
     * latency that doubles commit round trips. Idempotent: an existing crc
-    * (a retried commit, a reader's backfill) is left in place. */
-  def writeChecksum(version: Long, committed: Option[Seq[Action]] = None): Unit =
+    * (a retried commit, a reader's backfill) is left in place. `post` is
+    * the snapshot at `version` when the caller already holds it. */
+  def writeChecksum(version: Long, committed: Option[Seq[Action]] = None,
+      post: Option[Snapshot] = None): Unit =
       LogMetrics.timed(LogMetrics.checksumNanos, LogMetrics.checksums) {
     val f = fs
     val target = checksumPathFor(version)
     if (f.exists(target)) return
     val crc = incrementalChecksum(version, committed)
-      .getOrElse(VersionChecksum.of(snapshot(Some(version))))
+      .getOrElse(VersionChecksum.of(post.getOrElse(snapshot(Some(version)))))
     val line = VersionChecksum.toJson(crc)
     val out = f.create(target, false)
     try out.write((line + "\n").getBytes(StandardCharsets.UTF_8))
@@ -91,17 +93,13 @@ class GwLog(val tablePath: Path, conf: Configuration,
 
   /** The stored checksum at `version` — None when absent OR unparseable
     * (a damaged crc reads as absent; it is advisory, never load-bearing). */
-  def readChecksum(version: Long): Option[VersionChecksum] = {
-    val p = checksumPathFor(version)
-    val f = fs
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val text =
-        try new String(org.apache.commons.io.IOUtils.toByteArray(in), StandardCharsets.UTF_8)
-        finally in.close()
-      VersionChecksum.fromJson(text.trim)
-    }
+  def readChecksum(version: Long): Option[VersionChecksum] =
+    try VersionChecksum.fromJson(readText(checksumPathFor(version)).trim)
+    catch { case _: java.io.FileNotFoundException => None }
+
+  private def readText(p: Path): String = {
+    val in = fs.open(p)
+    try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
   }
 
   /** Cross-check this engine's replay of `version` against the stored
@@ -139,72 +137,19 @@ class GwLog(val tablePath: Path, conf: Configuration,
   /** V2-checkpoint sidecar namespace (Delta `_delta_log/_sidecars/`). */
   def sidecarDir: Path = new Path(logDir, "_sidecars")
 
-  /** The checkpoint's parquet files at `version`, in part order — the
-    * single-file form, or a COMPLETE multi-part set (all `numParts`
-    * present); an incomplete set (crash mid-write) yields Nil, so readers
-    * treat the checkpoint as absent and replay JSON — a torn multi-part
-    * checkpoint can never serve a partial snapshot. */
-  private[graft] def checkpointFilesFor(version: Long): Seq[Path] = {
-    val single = checkpointPathFor(version)
-    if (fs.exists(single)) return Seq(single)
-    // V2 form: `<v>.checkpoint.<uuid>.parquet` — one manifest file (the
-    // uuid token contains hyphens, never dots, so it cannot be mistaken
-    // for a `<part>.<numParts>` pair)
-    val v2 = {
-      val prefix = f"$version%020d.checkpoint."
-      if (!fs.exists(logDir)) Nil
-      else fs.listStatus(logDir).toSeq.map(_.getPath)
-        .filter { p =>
-          val n = p.getName
-          n.startsWith(prefix) && n.endsWith(".parquet") && {
-            val mid = n.stripPrefix(prefix).stripSuffix(".parquet")
-            !mid.contains('.') && mid.nonEmpty && !mid.forall(_.isDigit)
-          }
-        }
-    }
-    if (v2.nonEmpty) return Seq(v2.maxBy(_.getName))
-    val parts = checkpointPartArtifacts(version)
-    parts.headOption.map(_._2) match {
-      case Some(n) if parts.size == n &&
-          parts.map(_._1).sorted == (1 to n).toSeq &&
-          parts.forall(_._2 == n) =>
-        parts.sortBy(_._1).map(_._3)
-      case _ => Nil
-    }
-  }
+  /** One listing of `_delta_log`, parsed ([[LogSegment]]): the only place
+    * the log directory is listed; every listing answer below projects one. */
+  private[graft] def segment(): LogSegment = LogSegment.list(fs, logDir)
 
-  /** Every on-disk part artifact of `version` (complete or not):
-    * (part, numParts, path). */
-  private def checkpointPartArtifacts(version: Long): Seq[(Int, Int, Path)] = {
-    val f = fs
-    if (!f.exists(logDir)) return Nil
-    val prefix = f"$version%020d.checkpoint."
-    f.listStatus(logDir).toSeq.map(_.getPath)
-      .filter(p => p.getName.startsWith(prefix) && p.getName.endsWith(".parquet"))
-      .flatMap { p =>
-        p.getName.stripPrefix(prefix).stripSuffix(".parquet").split("\\.") match {
-          case Array(pt, n) if pt.nonEmpty && pt.forall(_.isDigit) &&
-              n.nonEmpty && n.forall(_.isDigit) =>
-            Some((pt.toInt, n.toInt, p))
-          case _ => None
-        }
-      }
-  }
+  /** The checkpoint's parquet files at `version`, in part order, as
+    * [[LogSegment]] resolves them (Nil for a torn multi-part set). */
+  private[graft] def checkpointFilesFor(version: Long): Seq[Path] =
+    segment().checkpointFiles(version).map(_.getPath)
 
   private def lastCheckpointPath: Path = new Path(logDir, "_last_checkpoint")
 
   /** Sorted list of committed versions; empty when the table has no log. */
-  def listVersions(): Seq[Long] = LogMetrics.timed(
-      LogMetrics.listNanos, LogMetrics.lists) {
-    val f = fs
-    if (!f.exists(logDir)) Nil
-    else
-      f.listStatus(logDir).toSeq
-        .map(_.getPath.getName)
-        .filter(n => n.endsWith(".json") && n.stripSuffix(".json").forall(_.isDigit))
-        .map(_.stripSuffix(".json").toLong)
-        .sorted
-  }
+  def listVersions(): Seq[Long] = segment().versions
 
   def latestVersion(): Option[Long] = listVersions().lastOption
 
@@ -212,11 +157,8 @@ class GwLog(val tablePath: Path, conf: Configuration,
 
   private def readActionsAt(path: Path): Seq[Action] = LogMetrics.timed(
       LogMetrics.readVersionNanos, LogMetrics.readVersions) {
-    val in = fs.open(path)
-    try {
-      val text = new String(org.apache.commons.io.IOUtils.toByteArray(in), StandardCharsets.UTF_8)
-      text.split("\n").iterator.map(_.trim).filter(_.nonEmpty).flatMap(Actions.fromJson).toSeq
-    } finally in.close()
+    readText(path).split("\n").iterator.map(_.trim).filter(_.nonEmpty)
+      .flatMap(Actions.fromJson).toSeq
   }
 
   /** Delta minor-log-compaction naming: `<start>.<end>.compacted.json`
@@ -225,22 +167,7 @@ class GwLog(val tablePath: Path, conf: Configuration,
     new Path(logDir, f"$start%020d.$end%020d.compacted.json")
 
   /** Committed compacted segments as (start, end) ranges, start-ordered. */
-  def listCompacted(): Seq[(Long, Long)] = {
-    val f = fs
-    if (!f.exists(logDir)) Nil
-    else
-      f.listStatus(logDir).toSeq
-        .map(_.getPath.getName)
-        .filter(_.endsWith(".compacted.json"))
-        .flatMap { n =>
-          n.stripSuffix(".compacted.json").split('.') match {
-            case Array(s, e) if s.forall(_.isDigit) && e.forall(_.isDigit) =>
-              Some((s.toLong, e.toLong))
-            case _ => None
-          }
-        }
-        .sorted
-  }
+  def listCompacted(): Seq[(Long, Long)] = segment().compactedRanges
 
   /**
    * Minor log compaction (Delta's `<start>.<end>.compacted.json`): fold
@@ -278,11 +205,13 @@ class GwLog(val tablePath: Path, conf: Configuration,
     if (!f.rename(tmp, target)) { f.delete(tmp, false); () }
   }
 
+  /** The last materialized snapshot on this instance, keyed by version,
+    * with the segment its replay route comes from (see [[snapshotIn]]). */
+  @volatile private var snapCache: (Long, Snapshot, LogSegment) = _
+
   /** What the most recent [[snapshot]] call on this instance actually
     * read: (checkpoint used, commit JSONs read, compacted segments read).
     * Diagnostic only — gates pin that compaction shrinks the replay tail. */
-  @volatile private var snapCache: (Long, Snapshot) = _
-
   @volatile private[graft] var lastReplayReads: (Option[Long], Seq[Long], Seq[(Long, Long)]) =
     (None, Nil, Nil)
 
@@ -292,8 +221,10 @@ class GwLog(val tablePath: Path, conf: Configuration,
     * snapshot is also
     * checkpointed to parquet so later reads resume in O(1) instead of
     * replaying every version JSON (see [[Checkpoint]]). */
-  def commit(actions: Seq[Action]): Long =
-    commitPinned(latestVersion().map(_ + 1).getOrElse(0L), actions)
+  def commit(actions: Seq[Action]): Long = {
+    val seg = segment()
+    commitOn(seg.versions.lastOption.map(_ + 1).getOrElse(0L), actions, seg)
+  }
 
   /** [[commit]] pinned to exactly `version`: for writers whose validation
     * ran against the snapshot at `version - 1` — any intervening commit
@@ -301,32 +232,49 @@ class GwLog(val tablePath: Path, conf: Configuration,
     * landing the write at a later version on top of state it never saw.
     * [[GwTxn]] commits every attempt this way and re-validates on the
     * conflict. */
-  def commitPinned(version: Long, actions: Seq[Action]): Long = {
-    // basis snapshot resolved BEFORE the commit lands: the fold state the
-    // post-commit snapshot advance below continues from
-    val basis: Option[Snapshot] = {
-      val c = snapCache
-      if (version > 0 && c != null && c._1 == version - 1) Some(c._2) else None
+  def commitPinned(version: Long, actions: Seq[Action]): Long =
+    commitOn(version, actions, segment())
+
+  /** The basis snapshot (at `version - 1`) is resolved ONCE, before the
+    * commit lands — from this instance's cache, where a [[GwTxn]] attempt
+    * just put it, else from `seg` — and every step below reads it. An
+    * unresolvable basis (a gap, an unreadable protocol) is None. */
+  private def commitOn(version: Long, actions: Seq[Action], seg: => LogSegment): Long = {
+    val basis: Option[(Snapshot, LogSegment)] = Option(snapCache) match {
+      case _ if version == 0 => None
+      case Some((v, snap, s)) if v == version - 1 => Some((snap, s))
+      case _ => scala.util.Try { val s = seg; (snapshotIn(s, Some(version - 1)), s) }.toOption
     }
+    val prev = basis.map(_._1)
     val stamped = stampInCommitTimestamp(version,
-      upgradeProtocol(version, assignRowIds(version, actions)), basis)
+      upgradeProtocol(assignRowIds(version, actions, prev), prev), prev)
     commitAt(version, stamped)
-    advanceSnapshot(version, basis, stamped)
+    val post = basis.flatMap { case (p, s) =>
+      advanceSnapshot(version, s, Seq(p.headerActions ++ p.files ++ p.tombstones, stamped)) }
     // version checksum (Delta `<version>.crc`): a best-effort state
     // summary of the post-commit state — see [[VersionChecksum]]. The
     // version JSON above IS the committed truth, so a failed crc write
     // must never fail the commit.
-    try writeChecksum(version, Some(stamped))
+    try writeChecksum(version, Some(stamped), post)
     catch { case scala.util.control.NonFatal(_) => () }
     if (checkpointInterval > 0 && version > 0 && version % checkpointInterval == 0) {
       // checkpoints are a read optimization: the version JSON above IS the
       // committed truth, so a failed checkpoint write must not fail the
       // commit (the next interval retries; reads fall back to JSON replay)
       try {
-        writeCheckpoint(version)
+        val snap = post.getOrElse(snapshot(Some(version)))
+        val (cpActions, cpFiles) = writeCheckpointOf(snap)
+        // a fresh listing now routes this version through the checkpoint:
+        // share what a replay of it reads, or each later reader replays it
+        for ((v, _, s) <- Option(snapCache) if v == version) {
+          val cpSeg = LogSegment.of(s.entries ++ cpFiles)
+          if (cpSeg.checkpointFiles(version).map(_.getPath.getName) ==
+              cpFiles.map(_.getPath.getName))
+            advanceSnapshot(version, cpSeg, Seq(cpActions))
+        }
         // Delta's enableExpiredLogCleanup hook: metadata retention runs at
         // checkpoint cadence when the table opts in
-        val conf = snapshot(Some(version)).metadata
+        val conf = snap.metadata
           .map(_.configuration).getOrElse(Map.empty)
         if (Seq("graft.enableExpiredLogCleanup", "delta.enableExpiredLogCleanup")
             .exists(k => conf.get(k).exists(_.trim.equalsIgnoreCase("true")))) {
@@ -359,24 +307,23 @@ class GwLog(val tablePath: Path, conf: Configuration,
     * commits replays the log tail once, not N times (Delta's post-commit
     * snapshot). Restricted to [[GwLog.forTable]] instances so the
     * replay-mechanics diagnostic gates (directly-constructed readers,
-    * lastReplayReads pins) keep observing real replays. Best-effort: any
+    * lastReplayReads pins) keep observing real replays. The shared entry
+    * takes its route from `seg`: after a commit the basis's segment (a
+    * reader that lists a newer checkpoint misses it and replays), after
+    * this instance writes a checkpoint that segment plus the checkpoint's
+    * files, with `chunks` the checkpoint's actions. Best-effort: any
     * failure just leaves the next snapshot() to replay from disk. */
-  private def advanceSnapshot(version: Long, basis: Option[Snapshot],
-      committed: Seq[Action]): Unit =
-    if (shareSnapshots) basis.foreach { p =>
-      try {
-        val state: Seq[Action] =
-          p.protocol.toSeq ++ p.metadata.toSeq ++
-            p.transactions.toSeq.map { case (app, v) => SetTransaction(app, v) } ++
-            p.domains.toSeq.map { case (d, c) => DomainMetadata(d, c) } ++
-            p.files ++ p.tombstones
-        val snap = Snapshot.replay(version, Seq(state, committed))
-        snap.protocol.foreach(pr => Protocol.assertReadable(tablePath.toString, pr))
-        snapCache = (version, snap)
-        GwLog.sharedSnapshotPut(this, version,
-          listCheckpoints().filter(_ <= version).lastOption, snap)
-      } catch { case scala.util.control.NonFatal(_) => () }
-    }
+  private def advanceSnapshot(version: Long, seg: LogSegment,
+      chunks: Seq[Seq[Action]]): Option[Snapshot] =
+    if (!shareSnapshots) None
+    else try {
+      val snap = Snapshot.replay(version, chunks)
+      snap.protocol.foreach(pr => Protocol.assertReadable(tablePath.toString, pr))
+      snapCache = (version, snap, seg)
+      scala.util.Try(fs.getFileStatus(logPathFor(version)))
+        .foreach(GwLog.sharedSnapshotPut(this, version, _, seg, snap))
+      Some(snap)
+    } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Row tracking (Delta rowTracking, writer feature): on a tracked table,
     * every NEW AddFile in a commit gets a contiguous row-id range —
@@ -391,12 +338,10 @@ class GwLog(val tablePath: Path, conf: Configuration,
     * mark rides the metadata (`graft.rowTracking.highWaterMark`), restated
     * in the SAME commit, so the assignment is atomic with the files and a
     * losing racer recomputes from the winner's mark on retry. */
-  private def assignRowIds(version: Long, actions: Seq[Action]): Seq[Action] = {
+  private def assignRowIds(version: Long, actions: Seq[Action],
+      basis: Option[Snapshot]): Seq[Action] = {
     val commitMeta = actions.collectFirst { case m: Metadata => m }
-    val prevMeta =
-      if (version == 0) None
-      else scala.util.Try(snapshot(Some(version - 1)).metadata).toOption.flatten
-    val effMeta = commitMeta.orElse(prevMeta)
+    val effMeta = commitMeta.orElse(basis.flatMap(_.metadata))
     val tracked = effMeta.exists(m =>
       Seq("graft.enableRowTracking", "delta.enableRowTracking")
         .exists(k => m.configuration.get(k).exists(_.trim.equalsIgnoreCase("true"))))
@@ -502,14 +447,13 @@ class GwLog(val tablePath: Path, conf: Configuration,
     * tables stay (1, 2), logs byte-identical); already-covered features
     * add nothing. Also the WRITE-side feature gate: committing to a table
     * whose protocol demands features this engine lacks fails here. */
-  private def upgradeProtocol(version: Long, actions: Seq[Action]): Seq[Action] = {
+  private def upgradeProtocol(actions: Seq[Action],
+      basis: Option[Snapshot]): Seq[Action] = {
     val (rf, wf) = requiredFeatures(actions)
     val declared = actions.collectFirst { case p: Protocol => p }
     if (rf.isEmpty && wf.isEmpty && declared.isEmpty) return actions
-    val current: Protocol = declared.orElse {
-      if (version == 0) None
-      else scala.util.Try(snapshot(Some(version - 1)).protocol).toOption.flatten
-    }.getOrElse(Protocol())
+    val current: Protocol = declared.orElse(basis.flatMap(_.protocol))
+      .getOrElse(Protocol())
     Protocol.assertWritable(tablePath.toString, current)
     val needsUpgrade =
       rf.exists(f => !current.readerFeatures.getOrElse(Nil).contains(f)) ||
@@ -536,7 +480,7 @@ class GwLog(val tablePath: Path, conf: Configuration,
     * stamped — one O(1) version read, which the chain also needs for the
     * previous timestamp. */
   private def stampInCommitTimestamp(version: Long, actions: Seq[Action],
-      basis: Option[Snapshot] = None): Seq[Action] = {
+      basis: Option[Snapshot]): Seq[Action] = {
     def enabledIn(m: Metadata): Boolean =
       Seq("graft.enableInCommitTimestamps", "delta.enableInCommitTimestamps")
         .exists(k => m.configuration.get(k).exists(_.trim.equalsIgnoreCase("true")))
@@ -570,17 +514,17 @@ class GwLog(val tablePath: Path, conf: Configuration,
   /** Checkpoint the snapshot state as of `version` + update `_last_checkpoint`.
     * Alongside protocol/metadata/adds, the checkpoint carries the Delta
     * spec's other snapshot state: app-transaction high-water marks (`txn`)
-    * and remove tombstones still inside the vacuum retention window. */
-  def writeCheckpoint(version: Long): Unit = LogMetrics.timed(
-      LogMetrics.checkpointWriteNanos, LogMetrics.checkpointWrites) {
-    val snap = snapshot(Some(version))
+    * and remove tombstones still inside the vacuum retention window.
+    * [[writeCheckpointOf]] returns the actions a replay of it reads, in
+    * read order, and the files written. */
+  def writeCheckpoint(version: Long): Unit = writeCheckpointOf(snapshot(Some(version)))
+  private def writeCheckpointOf(snap: Snapshot): (Seq[Action], Seq[FileStatus]) =
+      LogMetrics.timed(LogMetrics.checkpointWriteNanos, LogMetrics.checkpointWrites) {
+    val version = snap.version
     val tombstoneFloor = System.currentTimeMillis() - GwLog.TombstoneRetentionMs
-    val actions: Seq[Action] =
-      snap.protocol.toSeq ++ snap.metadata.toSeq ++
-        snap.transactions.toSeq.map { case (app, v) => SetTransaction(app, v) } ++
-        snap.domains.toSeq.map { case (d, c) => DomainMetadata(d, c) } ++
-        snap.files ++
-        snap.tombstones.filter(_.deletionTimestamp >= tombstoneFloor)
+    val header = snap.headerActions
+    val actions: Seq[Action] = header ++ snap.files ++
+      snap.tombstones.filter(_.deletionTimestamp >= tombstoneFloor)
     // Delta multi-part checkpoints: above `graft.checkpoint.partSize`
     // actions the snapshot splits across N part files (sequential slices,
     // so concatenating parts in order reproduces the action sequence) —
@@ -614,11 +558,9 @@ class GwLog(val tablePath: Path, conf: Configuration,
       .exists(k => snap.metadata.map(_.configuration).getOrElse(Map.empty)
         .get(k).exists(_.trim.equalsIgnoreCase("v2")))
     var writtenPaths: Seq[Path] = Nil
+    var readOrder: Seq[Action] = actions
     val partsField =
       if (v2Policy) {
-        val header = snap.protocol.toSeq ++ snap.metadata.toSeq ++
-          snap.transactions.toSeq.map { case (app, v) => SetTransaction(app, v) } ++
-          snap.domains.toSeq.map { case (d, c) => DomainMetadata(d, c) }
         val fileActions = actions.drop(header.size)
         fs.mkdirs(sidecarDir)
         // Bucket count: next power of two above ceil(n/partSize). Power-
@@ -641,13 +583,12 @@ class GwLog(val tablePath: Path, conf: Configuration,
           val h = pathOf(a).hashCode % numBuckets
           buckets(if (h < 0) h + numBuckets else h) += a
         }
-        val refs = buckets.toSeq.map { b =>
-          // Canonical content: sorted by (kind, path) so logically-equal
-          // buckets serialize to identical bytes regardless of arrival
-          // order; `live`/`gone` are path-disjoint in a snapshot, so
-          // cross-bucket replay order is immaterial.
-          val slice = b.result()
-            .sortBy(a => (a.getClass.getName, pathOf(a)))
+        // Canonical content: sorted by (kind, path) so logically-equal
+        // buckets serialize to identical bytes regardless of arrival
+        // order; `live`/`gone` are path-disjoint in a snapshot, so
+        // cross-bucket replay order is immaterial.
+        val slices = buckets.toSeq.map(_.result().sortBy(a => (a.getClass.getName, pathOf(a))))
+        val refs = slices.map { slice =>
           val canon = slice.map(Actions.toJson).mkString("\n")
             .getBytes(StandardCharsets.UTF_8)
           val name = s"${java.util.UUID.nameUUIDFromBytes(canon)}.parquet"
@@ -660,6 +601,7 @@ class GwLog(val tablePath: Path, conf: Configuration,
           checkpointV2PathFor(version, java.util.UUID.randomUUID.toString)
         Checkpoint.write(manifest, conf, header ++ (CheckpointMetadata(version) +: refs))
         writtenPaths = Seq(manifest)
+        readOrder = header ++ slices.flatten
         ""
       } else {
         val numParts =
@@ -682,18 +624,18 @@ class GwLog(val tablePath: Path, conf: Configuration,
     // `sizeInBytes` (total checkpoint bytes) and `numOfAddFiles` — so a
     // foreign reader planning from the hint sees the same metadata the
     // reference writers emit. The hint stays a HINT: resolution is by
-    // listing ([[listCheckpoints]]), exactly like delta. Sized from the
-    // files THIS call just wrote (same set checkpointFilesFor(version)
-    // resolves — the v2 form counts the manifest only, matching the
-    // resolver) instead of re-listing the whole log directory per write.
-    val cpBytes = writtenPaths.map(p => fs.getFileStatus(p).getLen).sum
+    // listing ([[LogSegment]]), exactly like delta. Sized from the files
+    // THIS call just wrote (the v2 form counts the manifest only, as the
+    // segment resolves it) instead of re-listing the log per write.
+    val written = writtenPaths.map(fs.getFileStatus)
     val nAdds = actions.count(_.isInstanceOf[AddFile])
     val out = fs.create(lastCheckpointPath, /* overwrite = */ true)
     try out.write(
       (s"""{"version":$version,"size":${actions.size}$partsField""" +
-        s""","sizeInBytes":$cpBytes,"numOfAddFiles":$nAdds}""")
+        s""","sizeInBytes":${written.map(_.getLen).sum},"numOfAddFiles":$nAdds}""")
         .getBytes(StandardCharsets.UTF_8))
     finally out.close()
+    (readOrder, written)
   }
 
   /** Typed view of `_delta_log/_last_checkpoint` (Delta's
@@ -706,10 +648,8 @@ class GwLog(val tablePath: Path, conf: Configuration,
     * must never change snapshot resolution, so readers here only ever
     * consume it through this accessor and validate against the listing. */
   def lastCheckpointHint(): Option[GwLog.LastCheckpointInfo] = {
-    if (!fs.exists(lastCheckpointPath)) return None
-    val in = fs.open(lastCheckpointPath)
-    val raw = try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-      finally in.close()
+    val raw = try readText(lastCheckpointPath)
+      catch { case _: java.io.FileNotFoundException => return None }
     scala.util.Try {
       val n = GwLog.hintMapper.readTree(raw)
       def optLong(f: String): Option[Long] =
@@ -729,14 +669,14 @@ class GwLog(val tablePath: Path, conf: Configuration,
     }.toOption
   }
 
-  /** The checkpointed actions of `version`, with V2 sidecar refs expanded
+  /** The actions of one checkpoint's `files`, with V2 sidecar refs expanded
     * in order (classic/multi-part forms pass through; a missing sidecar
     * throws, which [[snapshot]]'s torn-checkpoint guard turns into a JSON
     * replay — never a partial snapshot). */
-  private[graft] def readCheckpointActions(version: Long): Seq[Action] =
+  private def readCheckpointActions(files: Seq[FileStatus]): Seq[Action] =
     LogMetrics.timed(LogMetrics.checkpointReadNanos, LogMetrics.checkpointReads) {
-    checkpointFilesFor(version)
-      .flatMap(p => Checkpoint.read(p, conf))
+    files
+      .flatMap(st => Checkpoint.read(st.getPath, conf))
       .flatMap {
         case s: SidecarFile =>
           val raw = new Path(s.path)
@@ -747,29 +687,9 @@ class GwLog(val tablePath: Path, conf: Configuration,
       }
     }
 
-  /** Committed checkpoint versions (from dir listing — `_last_checkpoint`
+  /** Committed checkpoint versions (from the listing — `_last_checkpoint`
     * is a hint, not the source of truth, exactly like delta). */
-  def listCheckpoints(): Seq[Long] = LogMetrics.timed(
-      LogMetrics.listNanos, LogMetrics.lists) {
-    val f = fs
-    if (!f.exists(logDir)) Nil
-    else {
-      val names = f.listStatus(logDir).toSeq.map(_.getPath.getName)
-      val single = names
-        .filter(_.endsWith(".checkpoint.parquet"))
-        .map(_.stripSuffix(".checkpoint.parquet"))
-        .filter(_.forall(_.isDigit))
-        .map(_.toLong)
-      // multi-part candidates count only when the set is COMPLETE
-      val multi = names
-        .filter(n => n.contains(".checkpoint.") && n.endsWith(".parquet") &&
-          !n.endsWith(".checkpoint.parquet"))
-        .map(_.takeWhile(_.isDigit))
-        .filter(_.nonEmpty).map(_.toLong).distinct
-        .filter(v => checkpointFilesFor(v).nonEmpty)
-      (single ++ multi).distinct.sorted
-    }
-  }
+  def listCheckpoints(): Seq[Long] = segment().checkpointVersions
 
   /**
    * Write `actions` as exactly `version`, failing with
@@ -943,26 +863,29 @@ class GwLog(val tablePath: Path, conf: Configuration,
     * JSON replay when no checkpoint qualifies (e.g. time travel before the
     * first checkpoint). */
   def snapshot(versionAsOf: Option[Long] = None): Snapshot =
-    snapshotIn(listVersions(), versionAsOf)
+    snapshotIn(segment(), versionAsOf)
 
   /** The latest snapshot, or None on an empty log — one listing resolves
     * both, which is how every [[GwTxn]] attempt reads the table. */
   def latestSnapshot(): Option[Snapshot] = {
-    val versions = listVersions()
-    if (versions.isEmpty) None else Some(snapshotIn(versions, None))
+    val seg = segment()
+    if (seg.versions.isEmpty) None else Some(snapshotIn(seg, None))
   }
 
-  private def snapshotIn(versions: Seq[Long], versionAsOf: Option[Long]): Snapshot = {
+  /** The snapshot at `versionAsOf` (default: the segment's latest),
+    * resolved from `seg` with no further listing. */
+  private[graft] def snapshotIn(seg: LogSegment, versionAsOf: Option[Long]): Snapshot = {
+    val versions = seg.versions
     require(versions.nonEmpty, s"No transaction log at $logDir")
     val upTo = versionAsOf.getOrElse(versions.last)
     require(
-      versions.contains(upTo),
+      seg.commitFile(upTo).isDefined,
       s"Version $upTo not found at $logDir (have ${versions.headOption.getOrElse(-1L)}..${versions.lastOption.getOrElse(-1L)})")
     // Content at a fixed version is immutable (commits are never
     // rewritten; checkpoints/segments only change HOW a version replays,
     // never what it contains), so the last materialized snapshot is
-    // cached per instance keyed by its resolved version. A commit's 4-6
-    // internal snapshot() calls collapse to one replay — at object-store
+    // cached per instance keyed by its resolved version. A commit's
+    // internal snapshot reads collapse to one replay — at object-store
     // latencies this is most of the non-write commit cost. The version
     // check above still runs on every call, so an external writer's new
     // commit is always picked up. Replay DIAGNOSTICS (lastReplayReads)
@@ -980,22 +903,21 @@ class GwLog(val tablePath: Path, conf: Configuration,
     // version, replay route) suffices. The key guards against every way
     // the served state could differ from a fresh replay's:
     //  - a table DELETED and RECREATED at the same path — pinned by the
-    //    (length, mtime) identity of the version's own commit JSON (a
-    //    collision needs a different log to reproduce the same version,
-    //    byte length and millisecond, which the UUID-bearing metadata /
-    //    commitInfo lines make practically impossible);
+    //    identity of the version's own commit JSON: (length, mtime) from
+    //    the segment plus a hash of its first bytes (see
+    //    [[GwLog.commitIdentity]]);
     //  - the RESUME ROUTE changing (a checkpoint written, deleted, or
     //    replaced since the entry landed) — checkpoint-resumed snapshots
     //    legitimately drop expired remove tombstones, so the route is
     //    part of the content; pinned by the resolved checkpoint version
-    //    plus the identity of its artifacts.
+    //    plus the (name, length, mtime) of its files in the segment.
     // At 100 TB this is the delta-style "one DeltaLog per table" behavior:
     // a pipeline touching one table from N operators replays once, not N
     // times.
-    val routeCp = listCheckpoints().filter(_ <= upTo).lastOption
+    val routeCp = seg.checkpointAtOrBelow(upTo)
     if (shareSnapshots) {
-      GwLog.sharedSnapshotGet(this, upTo, routeCp).foreach { s =>
-        snapCache = (upTo, s)
+      GwLog.sharedSnapshotGet(this, seg, upTo).foreach { s =>
+        snapCache = (upTo, s, seg)
         LogMetrics.snapshotCacheHits.increment()
         return s
       }
@@ -1007,7 +929,7 @@ class GwLog(val tablePath: Path, conf: Configuration,
     // unreadable segment falls back to the covered JSONs (originals are
     // the committed truth — compaction deletes nothing)
     def readTail(tail: Seq[Long], cp: Option[Long]): Seq[Seq[Action]] = {
-      val byStart = listCompacted()
+      val byStart = seg.compactedRanges
         .filter { case (s, e) => e <= upTo && tail.contains(s) && tail.contains(e) }
         .groupBy(_._1).map { case (s, rs) => s -> rs.map(_._2).max }
       val chunks = Seq.newBuilder[Seq[Action]]
@@ -1050,7 +972,7 @@ class GwLog(val tablePath: Path, conf: Configuration,
         // a torn/corrupt checkpoint (crash mid-write) must never brick the
         // table — the version JSONs are always sufficient on their own
         try {
-          val base = readCheckpointActions(cp)
+          val base = readCheckpointActions(seg.checkpointFiles(cp))
           require(base.nonEmpty, s"checkpoint $cp vanished mid-read")
           val tail = versions.filter(v => v > cp && v <= upTo)
           Snapshot.replay(upTo, base +: readTail(tail, Some(cp)))
@@ -1062,8 +984,9 @@ class GwLog(val tablePath: Path, conf: Configuration,
     // misread. Unknown WRITER-only features pass here — readers may read
     // them by spec; the write paths gate separately (assertWritable).
     snap.protocol.foreach(p => Protocol.assertReadable(tablePath.toString, p))
-    snapCache = (upTo, snap)
-    if (shareSnapshots) GwLog.sharedSnapshotPut(this, upTo, routeCp, snap)
+    snapCache = (upTo, snap, seg)
+    if (shareSnapshots)
+      seg.commitFile(upTo).foreach(GwLog.sharedSnapshotPut(this, upTo, _, seg, snap))
     LogMetrics.snapshotReplayNanos.add(System.nanoTime() - __replayT0)
     LogMetrics.snapshotReplays.increment()
     snap
@@ -1090,9 +1013,8 @@ class GwLog(val tablePath: Path, conf: Configuration,
    * files deleted.
    */
   def cleanupExpiredLogs(retentionMs: Long): Int = {
-    val cps = listCheckpoints()
-    if (cps.isEmpty) return 0
-    val newestCp = cps.last
+    val seg = segment()
+    val newestCp = seg.checkpointVersions.lastOption.getOrElse(return 0)
     // checkpointProtection (Delta 4.x): with
     // `requireCheckpointProtectionBeforeVersion = N`, metadata cleanup
     // below N is only legal when it cleans up to AT LEAST N in one run —
@@ -1100,7 +1022,7 @@ class GwLog(val tablePath: Path, conf: Configuration,
     // needs to bootstrap past dropped-feature history. This cleanup
     // deletes everything below the newest checkpoint, so the one-run rule
     // reduces to: newest checkpoint at or above N, else touch nothing.
-    val protectN = snapshot(None).metadata.flatMap(m =>
+    val protectN = snapshotIn(seg, None).metadata.flatMap(m =>
       Seq("graft.requireCheckpointProtectionBeforeVersion",
         "delta.requireCheckpointProtectionBeforeVersion")
         .flatMap(m.configuration.get).headOption
@@ -1108,55 +1030,34 @@ class GwLog(val tablePath: Path, conf: Configuration,
     if (protectN.exists(_ > newestCp)) return 0
     val f = fs
     val cutoff = System.currentTimeMillis() - retentionMs
-    var deleted = 0
-    listVersions().filter(_ < newestCp).foreach { v =>
-      val p = logPathFor(v)
-      if (f.getFileStatus(p).getModificationTime < cutoff && f.delete(p, false))
-        deleted += 1
-    }
-    // version checksums ride the same retention as their version JSONs:
-    // a crc below the newest checkpoint summarizes a version nobody can
-    // replay past cleanup anyway
-    f.listStatus(logDir).toSeq.map(_.getPath)
-      .filter { p =>
-        val n = p.getName
-        n.endsWith(".crc") && n.stripSuffix(".crc").forall(_.isDigit) &&
-          n.stripSuffix(".crc").toLong < newestCp
-      }
-      .foreach { p =>
-        if (f.getFileStatus(p).getModificationTime < cutoff &&
-          f.delete(p, false)) deleted += 1
-      }
-    // every superseded checkpoint ARTIFACT below the newest complete one:
-    // single-file forms, multi-part files, and incomplete crash leftovers
-    // (which listCheckpoints deliberately does not report)
-    f.listStatus(logDir).toSeq.map(_.getPath)
-      .filter(p => p.getName.contains(".checkpoint.") &&
-        p.getName.endsWith(".parquet"))
-      .filter(_.getName.takeWhile(_.isDigit).toLong < newestCp)
-      .foreach { p =>
-        if (f.getFileStatus(p).getModificationTime < cutoff &&
-          f.delete(p, false)) deleted += 1
-      }
-    // compacted segments fully below the newest checkpoint are superseded
-    // the same way their covered version JSONs are
-    listCompacted().filter(_._2 < newestCp).foreach { case (s, e) =>
-      val p = compactedPathFor(s, e)
-      if (f.getFileStatus(p).getModificationTime < cutoff &&
-        f.delete(p, false)) deleted += 1
-    }
+    // below the newest checkpoint and old enough: version JSONs, their
+    // crcs (summaries of versions nobody can replay past cleanup), every
+    // checkpoint ARTIFACT (incomplete crash leftovers included, which
+    // resolve to no checkpoint) and compacted segments fully below it
+    val expired =
+      (seg.commitFiles ++ seg.checksums ++ seg.checkpointArtifacts)
+        .collect { case (v, st) if v < newestCp => st } ++
+        seg.compacted.collect { case ((_, e), st) if e < newestCp => st }
+    val gone = expired
+      .filter(st => st.getModificationTime < cutoff && f.delete(st.getPath, false))
+      .map(_.getPath).toSet
+    var deleted = gone.size
     // sidecars: after superseded V2 manifests are gone, any `_sidecars/`
     // file no surviving manifest references (and old enough) is debris —
     // an incremental checkpointer may share sidecars ACROSS checkpoints,
     // so liveness is by reference, never by age alone
-    if (f.exists(sidecarDir)) {
-      val referenced = listCheckpoints()
-        .flatMap(v => scala.util.Try(
-          checkpointFilesFor(v).flatMap(p => Checkpoint.read(p, conf))).toOption
+    val sidecars =
+      try f.listStatus(sidecarDir).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil }
+    if (sidecars.nonEmpty) {
+      val live = seg.without(gone)
+      val referenced = live.checkpointVersions
+        .flatMap(v => scala.util.Try(live.checkpointFiles(v)
+          .flatMap(st => Checkpoint.read(st.getPath, conf))).toOption
           .getOrElse(Nil))
         .collect { case s: SidecarFile => new Path(sidecarDir, s.path).getName }
         .toSet
-      f.listStatus(sidecarDir).toSeq
+      sidecars
         .filter(st => !referenced.contains(st.getPath.getName) &&
           st.getModificationTime < cutoff)
         .foreach { st => if (f.delete(st.getPath, false)) deleted += 1 }
@@ -1184,7 +1085,7 @@ class GwLog(val tablePath: Path, conf: Configuration,
 
   def delete(): Unit = { fs.delete(tablePath, true); () }
 
-  def exists(): Boolean = fs.exists(logDir) && listVersions().nonEmpty
+  def exists(): Boolean = listVersions().nonEmpty
 }
 
 object GwLog {
@@ -1264,10 +1165,10 @@ object GwLog {
     new GwLog(new Path(tablePath), conf, shareSnapshots = true)
 
   /** Process-wide snapshot cache for [[forTable]] logs: (table, version) ->
-    * (commit-JSON identity, snapshot). Bounded crudely — snapshots here are
-    * metadata-scale, and a full clear only costs re-replays. */
-  private final case class SharedSnap(commitId: (Long, Long, Int), routeCp: Option[Long],
-      cpIds: Seq[(String, Long, Long)], snap: Snapshot)
+    * (commit-JSON identity, replay route, snapshot). Bounded crudely —
+    * snapshots are metadata-scale, and a full clear only costs re-replays. */
+  private final case class SharedSnap(commitId: (Long, Long, Int),
+      route: (Option[Long], Seq[(String, Long, Long)]), snap: Snapshot)
   private val sharedSnaps =
     new java.util.concurrent.ConcurrentHashMap[String, SharedSnap]()
   private val SharedSnapsMax = 512
@@ -1282,57 +1183,43 @@ object GwLog {
     q + "@" + version
   }
 
-  /** (len, mtime, head-hash) identity of the version's commit JSON, or None
-    * when it cannot be read (deleted, permissions — treat as a miss). The
-    * first-bytes hash closes the residual (len, mtime) collision window on
-    * a delete-and-recreate within one mtime granule: commit JSONs lead with
-    * UUID-bearing commitInfo/metaData lines, so two different logs cannot
-    * share a head. */
-  private def commitIdentity(log: GwLog, version: Long): Option[(Long, Long, Int)] =
+  /** (len, mtime, head-hash) identity of a commit JSON, or None when it
+    * cannot be read (deleted, permissions — treat as a miss). Length and
+    * mtime come from the listing; the first-bytes hash closes the residual
+    * (len, mtime) collision window on a delete-and-recreate within one
+    * mtime granule: commit JSONs lead with UUID-bearing commitInfo/metaData
+    * lines, so two different logs cannot share a head. */
+  private def commitIdentity(log: GwLog, commit: FileStatus): Option[(Long, Long, Int)] =
     try {
-      val p = log.logPathFor(version)
-      val f = p.getFileSystem(log.hadoopConf)
-      val st = f.getFileStatus(p)
-      val in = f.open(p)
-      val head = try {
-        val buf = new Array[Byte](256)
-        var off = 0
-        var n = 0
-        while (off < buf.length && { n = in.read(buf, off, buf.length - off); n > 0 })
-          off += n
-        java.util.Arrays.hashCode(java.util.Arrays.copyOf(buf, off))
-      } finally in.close()
-      Some((st.getLen, st.getModificationTime, head))
+      val p = commit.getPath
+      val in = p.getFileSystem(log.hadoopConf).open(p)
+      val head = try java.util.Arrays.hashCode(in.readNBytes(256)) finally in.close()
+      Some((commit.getLen, commit.getModificationTime, head))
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** Identity of the resolved checkpoint's artifacts (path, len, mtime). */
-  private def cpIdentity(log: GwLog, cp: Option[Long]): Seq[(String, Long, Long)] =
-    cp.toSeq.flatMap { v =>
-      log.checkpointFilesFor(v).flatMap { p =>
-        try {
-          val st = p.getFileSystem(log.hadoopConf).getFileStatus(p)
-          Seq((p.getName, st.getLen, st.getModificationTime))
-        } catch { case scala.util.control.NonFatal(_) => Seq(("?", -1L, -1L)) }
-      }
-    }
+  /** The replay route of `version` in `seg` and its files' (name, len, mtime). */
+  private def route(seg: LogSegment, version: Long): (Option[Long], Seq[(String, Long, Long)]) = {
+    val cp = seg.checkpointAtOrBelow(version)
+    (cp, cp.toSeq.flatMap(seg.checkpointFiles)
+      .map(st => (st.getPath.getName, st.getLen, st.getModificationTime)))
+  }
 
-  private def sharedSnapshotGet(log: GwLog, version: Long,
-      routeCp: Option[Long]): Option[Snapshot] = {
+  private def sharedSnapshotGet(log: GwLog, seg: LogSegment,
+      version: Long): Option[Snapshot] = {
     val e = sharedSnaps.get(sharedKey(log, version))
     if (e == null) return None
-    val ok = e.routeCp == routeCp &&
-      commitIdentity(log, version).contains(e.commitId) &&
-      cpIdentity(log, routeCp) == e.cpIds
+    val ok = route(seg, version) == e.route &&
+      seg.commitFile(version).flatMap(commitIdentity(log, _)).contains(e.commitId)
     if (ok) Some(e.snap)
     else { sharedSnaps.remove(sharedKey(log, version)); None }
   }
 
-  private def sharedSnapshotPut(log: GwLog, version: Long,
-      routeCp: Option[Long], snap: Snapshot): Unit = {
-    commitIdentity(log, version).foreach { id =>
+  /** Share `snap` at `version` (commit JSON `commit`) under `seg`'s route. */
+  private def sharedSnapshotPut(log: GwLog, version: Long, commit: FileStatus,
+      seg: LogSegment, snap: Snapshot): Unit = {
+    commitIdentity(log, commit).foreach { id =>
       if (sharedSnaps.size() >= SharedSnapsMax) sharedSnaps.clear()
-      sharedSnaps.put(sharedKey(log, version),
-        SharedSnap(id, routeCp, cpIdentity(log, routeCp), snap))
+      sharedSnaps.put(sharedKey(log, version), SharedSnap(id, route(seg, version), snap))
       ()
     }
   }

@@ -130,9 +130,10 @@ object GwTxn {
     * detector for legacy logs written before `txn` actions). */
   def replayedVersion(log: GwLog, txnId: Option[String]): Option[Long] = {
     for (id <- txnId) {
+      val seg = log.segment()
       def walk(): Option[Long] = {
         val prefix = id.substring(0, id.lastIndexOf('/') + 1)
-        val recent = log.listVersions().takeRight(DedupWindow).reverseIterator
+        val recent = seg.versions.takeRight(DedupWindow).reverseIterator
         var stop = false
         while (recent.hasNext && !stop) {
           val v = recent.next()
@@ -146,7 +147,8 @@ object GwTxn {
         None
       }
       val byTxnMark = parseTxnId(id).exists { case (app, batch) =>
-        log.latestSnapshot().exists(_.transactions.get(app).exists(_ >= batch))
+        seg.versions.nonEmpty &&
+          log.snapshotIn(seg, None).transactions.get(app).exists(_ >= batch)
       }
       if (byTxnMark) {
         // committed for sure; -1 when the commit is older than the walk

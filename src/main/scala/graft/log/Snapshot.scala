@@ -26,6 +26,11 @@ final case class Snapshot(
     // set, so a resume can never resurrect a removed domain)
     domains: Map[String, String] = Map.empty) {
 
+  /** Protocol, metadata, txn marks and domains: table-level state as actions. */
+  def headerActions: Seq[Action] = protocol.toSeq ++ metadata.toSeq ++
+    transactions.toSeq.map { case (app, v) => SetTransaction(app, v) } ++
+    domains.toSeq.map { case (d, c) => DomainMetadata(d, c) }
+
   def schema: StructType =
     metadata
       .map(m => DataType.fromJson(m.schemaString).asInstanceOf[StructType])

@@ -152,7 +152,8 @@ class GwCatalog extends TableCatalog with SupportsNamespaces {
     val location = pointer.location
     val log = GwLog.forTable(conf, location)
     val displayName = (catalogName +: ident.namespace.toSeq :+ ident.name).mkString(".")
-    if (!log.exists()) {
+    val seg = log.segment()
+    if (seg.versions.isEmpty) {
       // registered before any commit: the table serves its DECLARED columns
       // (if any) and accepts the first INSERT, which bootstraps the log
       // (carrying the declared PARTITIONED BY layout into the metadata)
@@ -162,7 +163,7 @@ class GwCatalog extends TableCatalog with SupportsNamespaces {
     } else {
       val opts = new CaseInsensitiveStringMap(java.util.Collections.singletonMap("path", location))
       new org.apache.spark.sql.graftbridge.GwDeltaTable(
-        displayName, SparkSession.active, opts, log.snapshot(version),
+        displayName, SparkSession.active, opts, log.snapshotIn(seg, version),
         writable = version.isEmpty,
         v2BatchWrite = version.isEmpty)
     }
@@ -209,9 +210,7 @@ class GwCatalog extends TableCatalog with SupportsNamespaces {
     // declaring columns on a fresh location makes the table INSERT-ready
     // before its first commit (GwDeltaPendingTable)
     if (schema.nonEmpty) {
-      val log = GwLog.forTable(conf, location)
-      if (log.exists()) {
-        val snap = log.snapshot(None)
+      GwLog.forTable(conf, location).latestSnapshot().foreach { snap =>
         val logged = snap.schema
         require(org.apache.spark.sql.graftbridge.Bridge.sameType(
           graft.log.ColumnMapping.stripMeta(logged), schema),

@@ -67,13 +67,14 @@ class GwDeltaDataSource extends TableProvider with DataSourceRegister
       throw new IllegalArgumentException("gwdelta requires a path"))
     val spark = SparkSession.active
     val log = GwLog.forTable(spark.sparkContext.hadoopConfiguration, path)
-    if (log.latestVersion().isEmpty) return None
+    val seg = log.segment()
+    if (seg.versions.isEmpty) return None
     val versionAsOf = Option(options.get("versionAsOf")).map(_.toLong)
     val timestampAsOf = Option(options.get("timestampAsOf")).map(_.toLong)
     require(versionAsOf.isEmpty || timestampAsOf.isEmpty,
       "specify at most one of versionAsOf / timestampAsOf")
     val version = versionAsOf.orElse(timestampAsOf.map(log.versionAtTimestamp))
-    Some(log.snapshot(version))
+    Some(log.snapshotIn(seg, version))
   }
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =

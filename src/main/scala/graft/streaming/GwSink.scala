@@ -266,9 +266,7 @@ object GwSink {
     * also the writer feature gate: a table whose protocol demands writer
     * features this engine lacks is refused before any bytes move. */
   private def tableMeta(log: GwLog): Option[Metadata] =
-    if (log.listVersions().isEmpty) None
-    else {
-      val snap = log.snapshot(None)
+    log.latestSnapshot().flatMap { snap =>
       snap.protocol.foreach(p =>
         graft.log.Protocol.assertWritable(log.tablePath.toString, p))
       snap.metadata

@@ -44,13 +44,9 @@ class GwStreamingWrite(
 
   /** The table's partition layout: the log's metaData wins; a pending table
     * (first epoch bootstraps the log) uses its declared PARTITIONED BY. */
-  private val partitionColumns: Seq[String] = {
-    val log = graft.log.GwLog.forTable(
-      spark.sparkContext.hadoopConfiguration, tablePath)
-    if (log.listVersions().nonEmpty)
-      log.snapshot(None).metadata.map(_.partitionColumns).getOrElse(Nil)
-    else declaredPartitionBy
-  }
+  private val partitionColumns: Seq[String] = graft.log.GwLog
+    .forTable(spark.sparkContext.hadoopConfiguration, tablePath).latestSnapshot()
+    .map(_.metadata.map(_.partitionColumns).getOrElse(Nil)).getOrElse(declaredPartitionBy)
 
   override def createStreamingWriterFactory(pinfo: PhysicalWriteInfo): StreamingDataWriterFactory = {
     val job = Job.getInstance(spark.sessionState.newHadoopConf())
@@ -72,11 +68,8 @@ class GwStreamingWrite(
       .map(qualified).toSet
     // the shared harvesting rule (stats, zero-row drop, partition values
     // from the __gwp_ layout), restricted to files committed tasks reported
-    val log0 = graft.log.GwLog.forTable(conf, tablePath)
-    val tableConfig =
-      if (!log0.exists()) Map.empty[String, String]
-      else log0.snapshot(None).metadata.map(_.configuration)
-        .getOrElse(Map.empty[String, String])
+    val tableConfig = graft.log.GwLog.forTable(conf, tablePath).latestSnapshot()
+      .flatMap(_.metadata).map(_.configuration).getOrElse(Map.empty[String, String])
     val files: Seq[AddFile] =
       if (written.isEmpty) Nil
       else graft.sources.SchemaProbe

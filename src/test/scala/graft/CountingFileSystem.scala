@@ -5,25 +5,43 @@ import org.apache.hadoop.fs.{FileStatus, LocatedFileStatus, Path, RawLocalFileSy
 
 /**
  * Local filesystem under its own `cntfs` scheme that records the path of
- * every metadata call (`getFileStatus`, `listStatus`, `listLocatedStatus`).
- * Registered through `fs.cntfs.impl`, so it never depends on which
- * `file` FileSystem the cache handed out first.
+ * every metadata call (`getFileStatus`, `listStatus`, `listLocatedStatus`),
+ * and the kind of each call (plus `exists`, which the local filesystem
+ * answers without `getFileStatus`). Registered through `fs.cntfs.impl`, so it
+ * never depends on which `file` FileSystem the cache handed out first.
+ * `RawLocalFileSystem.listStatus` stats each entry through
+ * `getFileStatus`, so a listing of a directory also records one
+ * `getFileStatus` per child.
  */
 class CountingFileSystem extends RawLocalFileSystem {
   override def getScheme: String = "cntfs"
   override def getUri: URI = URI.create("cntfs:///")
 
-  private def record(p: Path): Unit =
-    CountingFileSystem.calls.add(makeQualified(p).toUri.getPath)
+  private def record(kind: String, p: Path): Unit = {
+    val path = makeQualified(p).toUri.getPath
+    CountingFileSystem.calls.add(path)
+    CountingFileSystem.kinds.add(kind -> path)
+  }
 
-  override def getFileStatus(p: Path): FileStatus = { record(p); super.getFileStatus(p) }
-  override def listStatus(p: Path): Array[FileStatus] = { record(p); super.listStatus(p) }
+  override def getFileStatus(p: Path): FileStatus = {
+    record("getFileStatus", p); super.getFileStatus(p)
+  }
+  override def listStatus(p: Path): Array[FileStatus] = {
+    record("listStatus", p); super.listStatus(p)
+  }
+  override def exists(p: Path): Boolean = {
+    CountingFileSystem.kinds.add("exists" -> makeQualified(p).toUri.getPath)
+    super.exists(p)
+  }
   override def listLocatedStatus(p: Path): RemoteIterator[LocatedFileStatus] = {
-    record(p); super.listLocatedStatus(p)
+    record("listLocatedStatus", p); super.listLocatedStatus(p)
   }
 }
 
 object CountingFileSystem {
   /** Paths (scheme-less) of the metadata calls made so far. */
   val calls = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+
+  /** (call kind, scheme-less path) of the same calls, in order. */
+  val kinds = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
 }

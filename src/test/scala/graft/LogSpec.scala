@@ -710,6 +710,134 @@ class LogSpec extends AnyFunSuite {
     assert(log.snapshot().files.size == 1)
   }
 
+  test("one _delta_log listing per snapshot and per commit, and no stat of the log dir") {
+    val conf = new Configuration()
+    conf.set("fs.cntfs.impl", classOf[CountingFileSystem].getName)
+    val dir = Files.createTempDirectory("gwlog-listing").toString
+    val table = "cntfs://" + dir
+    val logDir = dir + "/_delta_log"
+    val log = GwLog.forTable(conf, table)
+    log.commit(Seq(Protocol(),
+      Metadata("id0", new StructType().add("a", "long").json, createdTime = 1L),
+      AddFile("f0.parquet", 1, 1),
+      CommitInfo(1L, "WRITE", "Overwrite", 1, 1, isBlindAppend = false, "t0")))
+    for (i <- 1 to 24)
+      log.commit(Seq(AddFile(s"f$i.parquet", 1, 1),
+        CommitInfo(i, "WRITE", "Append", 1, 1, isBlindAppend = true, s"t$i")))
+    assert(log.listCheckpoints() == Seq(10L, 20L))
+    GwLog.forTable(conf, table).snapshot() // shares v24 under its current route
+    // (listings, stats or exists probes) of `_delta_log` itself while
+    // `body` runs; the per-entry stats a local listing makes are on
+    // children, not counted
+    def cost(body: => Unit): (Int, Int) = {
+      def n(kinds: String*) =
+        CountingFileSystem.kinds.asScala.count { case (k, p) => p == logDir && kinds.contains(k) }
+      val (l0, s0) = (n("listStatus"), n("getFileStatus", "exists"))
+      body
+      (n("listStatus") - l0, n("getFileStatus", "exists") - s0)
+    }
+    val hitsBefore = LogMetrics.snapshotCacheHits.sum()
+    assert(cost(GwLog.forTable(conf, table).snapshot()) == ((1, 0)), "shared-cache hit")
+    assert(LogMetrics.snapshotCacheHits.sum() > hitsBefore)
+    val bare = new GwLog(new org.apache.hadoop.fs.Path(table), conf)
+    assert(cost(bare.snapshot()) == ((1, 0)), "replay")
+    assert(bare.lastReplayReads == ((Some(20L), 21L to 24L, Nil)))
+    val fresh = GwLog.forTable(conf, table)
+    assert(cost(GwTxn(fresh, "WRITE", "Append", isBlindAppend = true)
+      .commit(_ => Seq(AddFile("f25.parquet", 1, 1)))) == ((1, 0)), "commit")
+    assert(fresh.listVersions().last == 25L && fresh.listCheckpoints() == Seq(10L, 20L))
+    assert(fresh.verifyChecksum(25L).exists(_.numFiles == 26))
+  }
+
+  test("a checkpoint a forTable handle writes serves later readers without a replay") {
+    val meta = Metadata("id0", new StructType().add("a", "long").json, createdTime = 1L)
+    val multiPart = new Configuration()
+    multiPart.setInt("graft.checkpoint.partSize", 3)
+    Seq(
+      ("single file", meta, new Configuration()),
+      ("multi-part", meta, multiPart),
+      ("v2", meta.copy(configuration = Map("graft.checkpointPolicy" -> "v2")), new Configuration())
+    ).foreach { case (label, m, conf) =>
+      val table = Files.createTempDirectory("gwlog-cp-route").toString
+      val log = GwLog.forTable(conf, table)
+      val now = System.currentTimeMillis()
+      log.commit(Seq(Protocol(), m, AddFile("f0.parquet", 1, 1)))
+      for (i <- 1 to 12)
+        log.commit(Seq(AddFile(s"f$i.parquet", 1, 1), SetTransaction("app", i)) ++
+          // an expired tombstone, which the checkpoint drops, and a live one
+          (if (i == 3) Seq(RemoveFile("f0.parquet", 1, 5L)) else Nil) ++
+          (if (i == 5) Seq(RemoveFile("f1.parquet", 1, now)) else Nil))
+      assert(log.listCheckpoints() == Seq(10L), label)
+      val replays = LogMetrics.snapshotReplays.sum()
+      val shared = (10L to 12L).map(v => GwLog.forTable(conf, table).snapshot(Some(v)))
+      assert(LogMetrics.snapshotReplays.sum() == replays, s"$label: a reader replayed")
+      val fresh = (10L to 12L).map(v =>
+        new GwLog(new org.apache.hadoop.fs.Path(table), conf).snapshot(Some(v)))
+      assert(shared == fresh, label)
+      assert(fresh.forall(s => s.tombstones.map(_.path) == Seq("f1.parquet")), label)
+    }
+  }
+
+  test("LogSegment resolves each _delta_log name set as the per-method parsers did") {
+    def v(n: Long): String = f"$n%020d"
+    def json(range: Range): Seq[String] = range.map(i => s"${v(i)}.json")
+    def part(n: Long, p: Int, of: Int): String = f"${v(n)}.checkpoint.$p%010d.$of%010d.parquet"
+    val uuidA = "3f2a9c1e-0d4b-4e6f-8a7b-1c2d3e4f5a6b"
+    val uuidB = "9c8b7a6d-5e4f-4a3b-2c1d-0e9f8a7b6c5d"
+    final case class Want(versions: Seq[Long], checkpoints: Seq[(Long, Seq[String])],
+        compacted: Seq[(Long, Long)])
+    val cases: Seq[(String, Seq[String], Want)] = Seq(
+      ("single-file checkpoint beside a V2 manifest",
+        json(0 to 10) ++ Seq(s"${v(10)}.checkpoint.$uuidA.parquet", s"${v(10)}.checkpoint.parquet"),
+        Want(0L to 10L, Seq(10L -> Seq(s"${v(10)}.checkpoint.parquet")), Nil)),
+      ("two V2 manifests",
+        json(0 to 10) ++ Seq(s"${v(10)}.checkpoint.$uuidB.parquet",
+          s"${v(10)}.checkpoint.$uuidA.parquet", s"${v(5)}.checkpoint.$uuidA.parquet"),
+        Want(0L to 10L, Seq(5L -> Seq(s"${v(5)}.checkpoint.$uuidA.parquet"),
+          10L -> Seq(s"${v(10)}.checkpoint.$uuidB.parquet")), Nil)),
+      ("complete and incomplete multi-part sets",
+        json(0 to 20) ++ Seq(part(10, 2, 2), part(10, 1, 2), part(20, 1, 3), part(20, 3, 3),
+          part(15, 1, 2), part(15, 2, 2), part(15, 1, 3)),
+        Want(0L to 20L, Seq(10L -> Seq(part(10, 1, 2), part(10, 2, 2))), Nil)),
+      ("compacted ranges with a malformed name",
+        json(0 to 9) ++ Seq(s"${v(4)}.${v(7)}.compacted.json", s"${v(0)}.${v(3)}.compacted.json",
+          s"${v(4)}.${v(5)}.compacted.json", s"${v(8)}.compacted.json",
+          s"${v(1)}.${v(2)}.${v(3)}.compacted.json", "x.y.compacted.json"),
+        Want(0L to 9L, Nil, Seq((0L, 3L), (4L, 5L), (4L, 7L)))),
+      (".crc files",
+        json(0 to 3) ++ (0 to 3).map(i => s"${v(i)}.crc") ++
+          Seq(s".${v(1)}.json.crc", s".${v(2)}.crc.crc", s".${v(3)}.checkpoint.parquet.crc"),
+        Want(0L to 3L, Nil, Nil)),
+      (".tmp claim files",
+        json(0 to 2) ++ Seq(s".$uuidA-3.json.tmp", s"${v(3)}.json.tmp",
+          s".${v(0)}.${v(2)}.compacted.json.$uuidB.tmp"),
+        Want(0L to 2L, Nil, Nil)),
+      ("_last_checkpoint",
+        json(0 to 10) ++ Seq(s"${v(10)}.checkpoint.parquet", "_last_checkpoint"),
+        Want(0L to 10L, Seq(10L -> Seq(s"${v(10)}.checkpoint.parquet")), Nil)),
+      ("stray names",
+        json(0 to 9) ++ Seq("_sidecars", "README.md", "abc.json", "00000000000000000009.json.bak",
+          s"${v(7)}.checkpoint.a.b.c.parquet", s"${v(8)}.checkpoint.5.parquet"),
+        Want(0L to 9L, Nil, Nil)))
+    val logDir = new org.apache.hadoop.fs.Path("/t/_delta_log")
+    cases.foreach { case (label, names, want) =>
+      val seg = LogSegment.of(scala.util.Random.shuffle(names).map { n =>
+        new org.apache.hadoop.fs.FileStatus(1L, n == "_sidecars", 1, 1L, 1L,
+          new org.apache.hadoop.fs.Path(logDir, n))
+      })
+      assert(seg.versions == want.versions, label)
+      assert(seg.checkpointVersions == want.checkpoints.map(_._1), label)
+      assert(seg.checkpoints.toSeq.map { case (cv, files) => cv -> files.map(_.getPath.getName) } ==
+        want.checkpoints, label)
+      assert(seg.compactedRanges == want.compacted, label)
+    }
+    // checksums and every checkpoint-named artifact (what cleanup sweeps)
+    val crc = LogSegment.of((json(0 to 1) ++ Seq(s"${v(1)}.crc", part(4, 1, 2))).map(n =>
+      new org.apache.hadoop.fs.FileStatus(1L, false, 1, 1L, 1L, new org.apache.hadoop.fs.Path(logDir, n))))
+    assert(crc.checksums.map(_._1) == Seq(1L))
+    assert(crc.checkpointArtifacts.map(_._1) == Seq(4L) && crc.checkpointVersions.isEmpty)
+  }
+
   /** Latest snapshot via the newest checkpoint + tail (versions > cp). */
   private def fullReplayAfterCorruption(log: GwLog): Set[AddFile] = {
     val cp = log.listCheckpoints().last
