@@ -29,6 +29,15 @@ final case class BatchResult(
  * data pages. Parallelism is one Spark task per table (the reference's D1
  * fan-out, Guidewire.scala:71-74) — at 100 TB / thousands of tables the
  * unit of work stays listing-scale, so this distributes linearly.
+ *
+ * The log is the watermark: every indexed folder commits with the label
+ * `gwindex/<schema>/<ts>` ([[indexTxnId]]), so each task reads its table's
+ * high-watermark from the newest labelled commit of its own log. An Append
+ * run therefore runs one Spark job before the checkpoint save — the
+ * fan-out — where the reference first aggregates `_checkpoints` (R1,
+ * Guidewire.scala:270-271). `_checkpoints` is still written every run,
+ * and is read only for a table whose log carries no label (see
+ * [[loadCheckpoints]]).
  */
 object Indexer {
   val CheckpointsTable = "_checkpoints"
@@ -36,6 +45,9 @@ object Indexer {
   /** Metadata.configuration key recording which schema fingerprint a
     * restatement commit belongs to. */
   val FingerprintKey = "gwFingerprint"
+
+  /** Prefix of the txnId every indexed folder commits under. */
+  private val IndexTxnPrefix = "gwindex/"
 
   def index(
       manifestUri: String,
@@ -45,15 +57,22 @@ object Indexer {
     require(
       saveMode == SaveMode.Append || saveMode == SaveMode.Overwrite,
       s"Only Append and Overwrite save modes are supported, got $saveMode")
-    val hadoopConf = spark.sparkContext.hadoopConfiguration
-    val checkpoints: Map[String, Long] =
-      if (saveMode == SaveMode.Append) loadCheckpoints(databasePath) else Map.empty
-    val manifest = Manifest.read(hadoopConf, manifestUri)
-    val outcomes = processManifest(manifest, checkpoints, databasePath, saveMode, enforceGuidewireTimestamp)
+    val manifest = Manifest.read(spark.sparkContext.hadoopConfiguration, manifestUri)
+    val fromLogs = processManifest(manifest, Map.empty, databasePath, saveMode, enforceGuidewireTimestamp)
+    // a table whose log holds commits but no indexer label committed
+    // nothing: rerun it once with its `_checkpoints` watermark
+    val unlabelled = fromLogs.collect { case (t, Left(m)) if m == unlabelledLog(t) => t }.toSet
+    val outcomes =
+      if (unlabelled.isEmpty) fromLogs
+      else {
+        val checkpoints = loadCheckpoints(databasePath)
+        fromLogs ++ processManifest(manifest.filter { case (t, _) => unlabelled(t) },
+          unlabelled.map(t => t -> checkpoints.getOrElse(t, -1L)).toMap,
+          databasePath, saveMode, enforceGuidewireTimestamp)
+      }
     // per-table failure isolation: commits of healthy tables are already
-    // durable, so their watermarks MUST be checkpointed even when a sibling
-    // table failed — otherwise the next run re-commits their folders and
-    // incremental consumers see the rows twice
+    // durable, so their watermarks are checkpointed even when a sibling
+    // table failed
     val ok = outcomes.collect { case (t, Right(r)) => t -> r }
     saveCheckpoints(ok, databasePath, saveMode)
     val errors = outcomes.collect { case (_, Left(msg)) => msg }
@@ -77,7 +96,17 @@ object Indexer {
           (lower.contains("proxy") || lower.contains("nonproxyhosts")))
     }
 
+  /** The `Left` of a table whose log holds commits but no indexer label
+    * within [[IndexTxnWalkWindow]] versions — a log the reference wrote, or
+    * a longer tail of maintenance commits. */
+  private def unlabelledLog(tableName: String): String =
+    s"$tableName: no $IndexTxnPrefix commit among the last $IndexTxnWalkWindow " +
+      "versions of its log, so its watermark must come from checkpoints"
+
   /** Fan out one task per table; discovery + commit run executor-side.
+    * A table's watermark is its entry in `checkpoints` when it has one,
+    * else its own log's ([[logWatermark]]); a table whose log carries no
+    * label commits nothing and returns `Left(unlabelledLog(table))`.
     * Failures are isolated per table (Left(error)) so one bad table cannot
     * abort the job before healthy siblings' watermarks are checkpointed. */
   def processManifest(
@@ -90,23 +119,17 @@ object Indexer {
     if (manifest.isEmpty) return Map.empty
     val sc = spark.sparkContext
     val confB = sc.broadcast(new SerializableHadoopConf(sc.hadoopConfiguration))
-    val checkpointsB = sc.broadcast(checkpoints)
-    val dbPathB = sc.broadcast(databasePath)
-    val proxyB = sc.broadcast(proxyProperties())
+    val dbPath = databasePath.stripSuffix("/")
+    val proxy = proxyProperties()
     val overwrite = saveMode == SaveMode.Overwrite
     val enforce = enforceGuidewireTimestamp
-    sc.makeRDD(manifest.toSeq, numSlices = manifest.size)
+    try sc.makeRDD(manifest.toSeq, numSlices = manifest.size)
       .map { case (tableName, entry) =>
-        proxyB.value.foreach { case (k, v) => System.setProperty(k, v) }
-        val conf = confB.value.value
-        val lastProcessed = checkpointsB.value.getOrElse(tableName, -1L)
+        proxy.foreach { case (k, v) => System.setProperty(k, v) }
         val outcome =
-          try {
-            val batches = discoverBatches(conf, entry, lastProcessed, enforce)
-            Right(commitBatches(
-              conf, s"${dbPathB.value.stripSuffix("/")}/$tableName", tableName, batches,
-              bootstrap = overwrite || lastProcessed <= 0L))
-          } catch {
+          try indexTable(confB.value.value, s"$dbPath/$tableName", tableName, entry,
+            checkpoints.get(tableName), overwrite, enforce)
+          catch {
             case scala.util.control.NonFatal(e) =>
               Left(s"$tableName: ${e.getMessage}")
           }
@@ -114,13 +137,61 @@ object Indexer {
       }
       .collect()
       .toMap
+    finally confB.destroy()
   }
+
+  /** One table's fan-out task. The log is resolved once: its listing
+    * gives the watermark walk its versions, and its snapshot the
+    * committed fingerprint. Overwrite skips both and bootstraps. */
+  private def indexTable(
+      conf: Configuration,
+      tablePath: String,
+      tableName: String,
+      entry: ManifestEntry,
+      checkpoint: Option[Long],
+      overwrite: Boolean,
+      enforce: Boolean): Either[String, Seq[BatchResult]] = {
+    val gwLog = GwLog.forTable(conf, tablePath)
+    val seg = if (overwrite) LogSegment.of(Nil) else gwLog.segment()
+    val head = if (seg.versions.isEmpty) None else Some(gwLog.snapshotIn(seg, None))
+    // a missing or empty log has no watermark: the table bootstraps
+    val watermark =
+      if (head.isEmpty) Some(-1L) else checkpoint.orElse(logWatermark(gwLog, seg.versions))
+    watermark match {
+      case None => Left(unlabelledLog(tableName))
+      case Some(w) =>
+        val batches = discoverBatches(conf, entry, w, enforce)
+        Right(commitBatches(conf, gwLog, tableName, batches,
+          head.flatMap(_.metadata).flatMap(_.configuration.get(FingerprintKey)),
+          bootstrap = overwrite || w <= 0L))
+    }
+  }
+
+  /** The table's high-watermark from its own log: `<ts>` of the newest
+    * commit labelled `gwindex/<schema>/<ts>`, walking back from the latest
+    * version. Folders commit in timestamp order (CDA timestamps increase
+    * across fingerprints, SURVEY §2.6.4), so this is the reference's
+    * `max(processedTimestamp)`. The label, not `CommitInfo.timestamp`, is
+    * read: in-commit timestamps may adjust the latter. None when the
+    * newest [[IndexTxnWalkWindow]] versions carry no label. */
+  private def logWatermark(gwLog: GwLog, versions: Seq[Long]): Option[Long] =
+    versions.reverseIterator.take(IndexTxnWalkWindow)
+      .map(v => gwLog.readVersion(v).collectFirst { case ci: CommitInfo => ci.txnId })
+      .collectFirst { case Some(id) if id.startsWith(IndexTxnPrefix) =>
+        id.substring(id.lastIndexOf('/') + 1).toLong
+      }
+
+  /** Backstop on the backward label walk (a log whose tail is all
+    * maintenance commits). */
+  private val IndexTxnWalkWindow = 64
 
   /**
    * Per-table batch assembly (reference D4-D9, Guidewire.scala:111-181):
    * fingerprints in schemaHistory-timestamp order; folders sorted; gated by
-   * the manifest watermark (EDGE CASE#1) and the incremental checkpoint;
-   * Metadata attached only to the first folder of each fingerprint.
+   * the manifest watermark (EDGE CASE#1) and the incremental watermark;
+   * Metadata attached only to the first folder of each fingerprint. Every
+   * in-window folder is listed first, then all of the window's footers are
+   * harvested in one parallel call.
    */
   def discoverBatches(
       conf: Configuration,
@@ -128,112 +199,83 @@ object Indexer {
       lastProcessedTimestamp: Long,
       enforceGuidewireTimestamp: Boolean): Seq[Batch] = {
     val manifestGate = if (enforceGuidewireTimestamp) entry.lastWriteTs else Long.MaxValue
-    val fingerprints = entry.schemaHistory.toList.sortBy(_._2.toLong).map(_._1).zipWithIndex
-    val indexed = fingerprints.flatMap { case (schemaId, i) =>
+    final case class Folder(schemaId: String, ts: Long, fingerprintStart: Boolean, files: Array[AddFile])
+    val folders = entry.schemaHistory.toList.sortBy(_._2.toLong).map(_._1).flatMap { schemaId =>
       val schemaDir = s"${entry.dataPath}/$schemaId"
-      val timestamps = CdaLayout.listTimestampDirectories(conf, schemaDir).sorted.zipWithIndex
-      val inWindow = timestamps
+      CdaLayout.listTimestampDirectories(conf, schemaDir).sorted.zipWithIndex
         .filter { case (ts, _) => ts <= manifestGate && ts > lastProcessedTimestamp }
-      // the fingerprint's schema commit belongs on its chronologically first
-      // folder — but if that folder is record-less (dropped below), the
-      // restatement must ride the first folder that HAS files, else the
-      // fingerprint would blind-append under the previous schema
-      val isFingerprintStart = inWindow.headOption.exists(_._2 == 0)
-      var needMetadata = isFingerprintStart
-      inWindow
-        .flatMap { case (ts, j) =>
-          val files = CdaLayout.listParquetFiles(conf, s"$schemaDir/$ts", withStats = true)
-          if (files.isEmpty) None // record-less folder: no batch, not checkpointed
-          else {
-            val metadata =
-              if (needMetadata) {
-                // the fingerprint's restatement MUST ride its first folder
-                // with files; committing that folder without a schema would
-                // blind-append new-fingerprint files under the old schema
-                val probed = SchemaProbe.readSchemaFromFiles(conf, files.toSeq)
-                if (probed.isEmpty) throw new IllegalStateException(
-                  s"cannot probe a schema for fingerprint $schemaId from any file of " +
-                    s"$schemaDir/$ts — refusing to commit the fingerprint without its " +
-                    "restatement metadata")
-                needMetadata = false
-                probed.map { schema =>
-                  Metadata(
-                    id = UUID.randomUUID().toString,
-                    schemaString = schema.json,
-                    // the fingerprint travels with the schema commit so a
-                    // later run can detect an uncommitted restatement
-                    configuration = Map(FingerprintKey -> schemaId),
-                    createdTime = ts)
-                }
-              }
-              else None
-            Some(((i, j), Batch(schemaId, ts, files.toSeq, metadata)))
-          }
+        .map { case (ts, j) =>
+          Folder(schemaId, ts, j == 0, CdaLayout.listParquetFiles(conf, s"$schemaDir/$ts"))
         }
     }
-    indexed.sortBy(_._1).map(_._2)
+    val harvested = CdaLayout.withFooterStats(conf, folders.flatMap(_.files).toIndexedSeq)
+    // the fingerprint's schema commit belongs on its chronologically first
+    // folder — but if that folder is record-less (dropped below), the
+    // restatement must ride the first folder that HAS files, else the
+    // fingerprint would blind-append under the previous schema
+    val needMetadata = scala.collection.mutable.Set(
+      folders.filter(_.fingerprintStart).map(_.schemaId): _*)
+    folders.zip(folders.scanLeft(0)(_ + _.files.length)).flatMap { case (f, at) =>
+      val files = harvested.slice(at, at + f.files.length)
+      if (files.isEmpty) None // record-less folder: no batch, not checkpointed
+      else {
+        val metadata =
+          if (!needMetadata.remove(f.schemaId)) None
+          else {
+            val schemaDir = s"${entry.dataPath}/${f.schemaId}"
+            val schema = SchemaProbe.readSchemaFromFiles(conf, files).getOrElse(
+              throw new IllegalStateException(
+                s"cannot probe a schema for fingerprint ${f.schemaId} from any file of " +
+                  s"$schemaDir/${f.ts} — refusing to commit the fingerprint without its " +
+                  "restatement metadata"))
+            Some(Metadata(
+              id = UUID.randomUUID().toString,
+              schemaString = schema.json,
+              // the fingerprint travels with the schema commit so a
+              // later run can detect an uncommitted restatement
+              configuration = Map(FingerprintKey -> f.schemaId),
+              createdTime = f.ts))
+          }
+        Some(Batch(f.schemaId, f.ts, files, metadata))
+      }
+    }
   }
 
   /** txnId stamped on a folder's commit: the folder IS the batch identity
     * (schema fingerprint + epoch-ms folder name are unique per table), so a
-    * rerun can recognize its own earlier commit. The `gwindex/` prefix
+    * later run reads its watermark back from the log. The `gwindex/` prefix
     * namespaces indexer commits away from sink/maintenance txnIds. */
   def indexTxnId(batch: Batch): String =
-    s"gwindex/${batch.schemaId}/${batch.commitTimestamp}"
+    s"$IndexTxnPrefix${batch.schemaId}/${batch.commitTimestamp}"
 
   /** Commit batches oldest->newest; one folder = one log version (K1-K3).
+    * `committedFingerprint` is the table's before this run (None on an
+    * empty log); it is tracked through this run's own commits.
     *
-    * Re-commit idempotence (documented deviation from the reference,
-    * SURVEY §2.6.5): checkpoints are saved only after every table
-    * succeeds, so a crash between a table's commits and the checkpoint
-    * write re-delivers already-committed folders on rerun. The reference
-    * re-commits them as duplicate versions (snapshot converges, history
-    * polluted); here the folder's txnId is matched against the recent log
-    * tail and an already-committed folder is SKIPPED — but still reported
-    * in `BatchResult`s so this run's checkpoint write repairs the
-    * watermark. */
+    * Crash recovery (a documented deviation from the reference, SURVEY
+    * §2.6.5): the next run's watermark comes from this log, not from
+    * `_checkpoints`. After a crash between a table's commits and the
+    * checkpoint save, the reference re-delivers the committed folders and
+    * re-commits them as duplicate versions; here the rerun neither
+    * re-commits nor re-reports them, and `_checkpoints` catches up when the
+    * table's next folder lands. */
   def commitBatches(
       conf: Configuration,
-      tablePath: String,
+      gwLog: GwLog,
       tableName: String,
       batches: Seq[Batch],
+      committedFingerprint: Option[String],
       bootstrap: Boolean): Seq[BatchResult] = {
     if (batches.isEmpty) return Nil
-    val gwLog = GwLog.forTable(conf, tablePath)
     if (bootstrap) gwLog.delete()
-    // lazy BACKWARD walk with early stop: indexer commits land in folder-
-    // timestamp order (CDA timestamps increase, §2.6.4), so the first
-    // gwindex commit older than the oldest candidate proves nothing
-    // earlier can match — in the steady state this reads ONE version
-    // file, not a 64-version tail; the window stays as a backstop
-    val committedTxns = scala.collection.mutable.Set.empty[String]
-    val versions = gwLog.listVersions().reverseIterator
-    if (versions.hasNext) {
-      val oldestCandidate = batches.map(_.commitTimestamp).min
-      val window = math.max(IndexTxnWalkWindow, batches.size + 8)
-      var inspected = 0
-      var stop = false
-      while (versions.hasNext && !stop && inspected < window) {
-        val v = versions.next()
-        inspected += 1
-        gwLog.readVersion(v).collectFirst { case ci: CommitInfo => ci }.foreach { ci =>
-          if (ci.txnId.startsWith("gwindex/")) {
-            committedTxns += ci.txnId
-            if (ci.timestamp < oldestCandidate) stop = true
-          }
-        }
-      }
-    }
+    var fingerprint = if (bootstrap) None else committedFingerprint
     batches.map { raw =>
-      val batch = promoteUncommittedRestatement(conf, gwLog, raw)
-      if (!committedTxns.contains(indexTxnId(batch))) commitBatch(gwLog, batch)
+      val batch = promoteUncommittedRestatement(conf, fingerprint, raw)
+      commitBatch(gwLog, batch)
+      if (batch.metadata.isDefined) fingerprint = Some(batch.schemaId)
       BatchResult(tableName, batch.schemaId, batch.commitTimestamp, batch.filesToAdd.size)
     }
   }
-
-  /** Backstop on the backward txn walk when the early-stop condition never
-    * fires (e.g. a log whose tail is all maintenance commits). */
-  private val IndexTxnWalkWindow = 64
 
   /**
    * Cross-run restatement guard: discovery only attaches Metadata when the
@@ -246,11 +288,8 @@ object Indexer {
    * fingerprint under the old schema.
    */
   private def promoteUncommittedRestatement(
-      conf: Configuration, gwLog: GwLog, batch: Batch): Batch = {
-    if (batch.metadata.isDefined) return batch
-    val committedFp = gwLog.latestSnapshot().flatMap(_.metadata)
-      .flatMap(_.configuration.get(FingerprintKey))
-    if (!committedFp.exists(_ != batch.schemaId)) return batch
+      conf: Configuration, committedFp: Option[String], batch: Batch): Batch = {
+    if (batch.metadata.isDefined || !committedFp.exists(_ != batch.schemaId)) return batch
     val schema = SchemaProbe.readSchemaFromFiles(conf, batch.filesToAdd)
       .getOrElse(throw new IllegalStateException(
         s"fingerprint ${batch.schemaId} differs from the table's committed " +
@@ -275,8 +314,8 @@ object Indexer {
    * runtime, so `GwTable.history` shows the real operation per commit.)
    */
   def commitBatch(gwLog: GwLog, batch: Batch): Long = {
-    // the folder's txnId labels the commit for the backward walk above; it
-    // is no stream tag, so the log carries no txn action for it
+    // the folder's txnId labels the commit for the watermark walk; it is
+    // no stream tag, so the log carries no txn action for it
     val txn = GwTxn(gwLog, "WRITE", "Append", isBlindAppend = true,
       txnId = Some(indexTxnId(batch)), exactlyOnce = false,
       timestamp = Some(batch.commitTimestamp))
@@ -321,7 +360,10 @@ object Indexer {
     }
   }
 
-  /** Per-table high-watermark: groupBy(max) over the checkpoint table (R1). */
+  /** Per-table high-watermark: groupBy(max) over the checkpoint table (R1).
+    * An Append run reads it only as a fallback, once, for the tables whose
+    * logs carry no indexer label (tables migrated from the reference);
+    * every other table's watermark comes from its own log. */
   def loadCheckpoints(databasePath: String)(implicit spark: SparkSession): Map[String, Long] = {
     val log = GwLog.forTable(
       spark.sparkContext.hadoopConfiguration, checkpointsPath(databasePath))

@@ -1,8 +1,9 @@
 package graft.sources
 
 import graft.log.AddFile
+import java.io.FileNotFoundException
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, Path}
 
 /**
  * Listing operators over the CDA directory layout
@@ -16,20 +17,21 @@ import org.apache.hadoop.fs.{FileSystem, Path}
  */
 object CdaLayout {
 
-  private def fs(conf: Configuration, p: Path): FileSystem = p.getFileSystem(conf)
+  /** The entries of `dir`, or None when it does not exist: one listing,
+    * with no `exists` probe before it. */
+  private def list(conf: Configuration, dir: String): Option[Array[FileStatus]] = {
+    val p = new Path(dir)
+    try Some(p.getFileSystem(conf).listStatus(p))
+    catch { case _: FileNotFoundException => None }
+  }
 
   /** Timestamp sub-directories of a schema dir, as epoch millis (S2). */
-  def listTimestampDirectories(conf: Configuration, schemaDir: String): Seq[Long] = {
-    val p = new Path(schemaDir)
-    val f = fs(conf, p)
-    if (!f.exists(p)) Nil
-    else
-      f.listStatus(p).toSeq
-        .filter(_.isDirectory)
-        .map(_.getPath.getName)
-        .filter(_.forall(_.isDigit))
-        .map(_.toLong)
-  }
+  def listTimestampDirectories(conf: Configuration, schemaDir: String): Seq[Long] =
+    list(conf, schemaDir).toSeq.flatten
+      .filter(_.isDirectory)
+      .map(_.getPath.getName)
+      .filter(_.forall(_.isDigit))
+      .map(_.toLong)
 
   /**
    * Data files of one timestamp dir as AddFile actions (S3 + S4):
@@ -43,24 +45,26 @@ object CdaLayout {
   /** As above; with `withStats` each file's footer min/max is harvested
     * into `AddFile.stats` for snapshot-level file skipping (a documented
     * deviation from the reference's `stats = null` — see
-    * [[SchemaProbe.readStats]]). */
+    * [[SchemaProbe.readStats]]). Files whose footer reports 0 rows stay:
+    * CDA's record-less files are the schema of last resort. */
   def listParquetFiles(conf: Configuration, timestampDir: String, withStats: Boolean): Array[AddFile] = {
-    val p = new Path(timestampDir)
-    val f = fs(conf, p)
-    if (!f.exists(p)) Array.empty
-    else
-      f.listStatus(p)
-        .filter(_.isFile)
-        .filter { st =>
-          val n = st.getPath.getName
-          !n.startsWith(".") && !n.startsWith("_") && n.endsWith(".parquet")
-        }
-        .filter(_.getLen > 0L)
-        .map(st => AddFile(
-          path = st.getPath.toString,
-          size = st.getLen,
-          modificationTime = st.getModificationTime,
-          dataChange = true,
-          stats = if (withStats) SchemaProbe.readStats(conf, st.getPath.toString) else None))
+    val files = list(conf, timestampDir).getOrElse(Array.empty[FileStatus])
+      .filter(_.isFile)
+      .filter { st =>
+        val n = st.getPath.getName
+        !n.startsWith(".") && !n.startsWith("_") && n.endsWith(".parquet")
+      }
+      .filter(_.getLen > 0L)
+      .map(st => AddFile(
+        path = st.getPath.toString,
+        size = st.getLen,
+        modificationTime = st.getModificationTime,
+        dataChange = true))
+    if (withStats) withFooterStats(conf, files.toIndexedSeq).toArray else files
   }
+
+  /** `files` with their footer stats, harvested in one parallel call. */
+  def withFooterStats(conf: Configuration, files: IndexedSeq[AddFile]): IndexedSeq[AddFile] =
+    files.zip(SchemaProbe.readStatsAll(conf, files.map(_.path)))
+      .map { case (f, stats) => f.copy(stats = stats) }
 }

@@ -1,7 +1,9 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{CreateFlag, FileStatus, FSDataInputStream, FSDataOutputStream,
+  LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 
 /**
  * Local filesystem whose permission operations use java.nio instead of
@@ -23,8 +25,59 @@ import org.apache.hadoop.fs.permission.FsPermission
  * SEMANTICS are unchanged: the same 9-bit rwx mask is applied; the rare
  * modes java.nio cannot express (sticky/setuid/setgid) fall back to the
  * forking implementation.
+ *
+ * It also counts operations in the FileSystem `statistics`, as the HDFS
+ * client does: `open`, `listStatus`, `getFileStatus` and `exists` are read
+ * ops; `create`, `createNonRecursive`, `mkdirs`, `rename` and `delete` are
+ * write ops. Hadoop's own local FS counts only bytes, so without this
+ * `getReadOps`/`getWriteOps` read 0 on `file:` paths. A call counts once,
+ * however many of these methods it makes inside (`open` stats its file,
+ * `listStatus` stats every entry, `create` probes and makes the parent).
  */
 class GwNioRawLocalFileSystem extends RawLocalFileSystem {
+  private val depth = new ThreadLocal[Array[Int]] {
+    override def initialValue(): Array[Int] = Array(0)
+  }
+
+  private def op[A](write: Boolean)(body: => A): A = {
+    val d = depth.get
+    if (d(0) == 0 && statistics != null) {
+      if (write) statistics.incrementWriteOps(1) else statistics.incrementReadOps(1)
+    }
+    d(0) += 1
+    try body finally d(0) -= 1
+  }
+
+  override def open(f: Path, bufferSize: Int): FSDataInputStream =
+    op(write = false)(super.open(f, bufferSize))
+  override def listStatus(f: Path): Array[FileStatus] = op(write = false)(super.listStatus(f))
+  override def getFileStatus(f: Path): FileStatus = op(write = false)(super.getFileStatus(f))
+  override def exists(f: Path): Boolean = op(write = false)(super.exists(f))
+
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
+      blockSize: Long, progress: Progressable): FSDataOutputStream =
+    op(write = true)(super.create(f, overwrite, bufferSize, replication, blockSize, progress))
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long, progress: Progressable): FSDataOutputStream =
+    op(write = true)(super.create(f, permission, overwrite, bufferSize, replication,
+      blockSize, progress))
+  override def createNonRecursive(f: Path, permission: FsPermission,
+      flags: java.util.EnumSet[CreateFlag], bufferSize: Int, replication: Short,
+      blockSize: Long, progress: Progressable): FSDataOutputStream =
+    op(write = true)(super.createNonRecursive(f, permission, flags, bufferSize, replication,
+      blockSize, progress))
+  override def createNonRecursive(f: Path, permission: FsPermission, overwrite: Boolean,
+      bufferSize: Int, replication: Short, blockSize: Long,
+      progress: Progressable): FSDataOutputStream =
+    op(write = true)(super.createNonRecursive(f, permission, overwrite, bufferSize,
+      replication, blockSize, progress))
+  override def mkdirs(f: Path): Boolean = op(write = true)(super.mkdirs(f))
+  override def mkdirs(f: Path, permission: FsPermission): Boolean =
+    op(write = true)(super.mkdirs(f, permission))
+  override def rename(src: Path, dst: Path): Boolean = op(write = true)(super.rename(src, dst))
+  override def delete(f: Path, recursive: Boolean): Boolean =
+    op(write = true)(super.delete(f, recursive))
+
   override def setPermission(p: Path, permission: FsPermission): Unit = {
     if (permission == null) return
     val bits = permission.toShort.toInt

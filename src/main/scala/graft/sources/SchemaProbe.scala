@@ -253,6 +253,26 @@ object SchemaProbe {
   def harvestAddFiles(conf: Configuration, dir: Path, dataChange: Boolean): Seq[AddFile] =
     harvestPartitioned(conf, dir, dataChange, Nil)
 
+  /** [[readStats]] of every file, in order, with the footer opens run
+    * by a fixed small pool: at 100 TB a commit or an ingest window holds
+    * hundreds of part files, and a serial harvest chains one round trip per
+    * file. Results land by index, so callers' commit bytes never depend
+    * on which footer finished first. */
+  def readStatsAll(conf: Configuration, files: IndexedSeq[String],
+      statsCols: Option[Set[String]] = None): IndexedSeq[Option[String]] =
+    if (files.size <= 1) files.map(readStats(conf, _, statsCols))
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(16, files.size))
+      try {
+        val tasks = files.map { f =>
+          new java.util.concurrent.Callable[Option[String]] {
+            override def call(): Option[String] = readStats(conf, f, statsCols)
+          }
+        }
+        pool.invokeAll(tasks.asJava).asScala.toIndexedSeq.map(_.get())
+      } finally pool.shutdown()
+    }
+
   /** Directory-name prefix under which partitioned writes stage their
     * hive-style layout: `__gwp_<col>=<escaped value>/part-*.parquet`. The
     * prefix keeps the layout column distinct from the REAL column, which
@@ -272,11 +292,7 @@ object SchemaProbe {
         graft.log.LogMetrics.harvestNanos, graft.log.LogMetrics.harvests) {
     val fs = dir.getFileSystem(conf)
     // two phases: a cheap sequential directory walk collecting candidates,
-    // then the expensive per-file footer opens in PARALLEL (a fixed small
-    // pool; at 100 TB a commit stages hundreds of part files and a
-    // sequential footer harvest serializes the whole commit on one
-    // driver-side round-trip chain). Candidate ORDER is preserved exactly
-    // (results land by index), so commit JSON bytes are unchanged.
+    // then the expensive per-file footer opens in one parallel harvest
     val listed = Vector.newBuilder[(org.apache.hadoop.fs.FileStatus, Map[String, String])]
     def walk(d: Path, values: Map[String, String]): Unit =
       fs.listStatus(d).foreach { st =>
@@ -292,23 +308,7 @@ object SchemaProbe {
       }
     walk(dir, Map.empty)
     val cands = listed.result()
-    val statsByIdx: IndexedSeq[Option[String]] =
-      if (cands.size <= 1)
-        cands.map(c => readStats(conf, c._1.getPath.toString, statsCols))
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(16, cands.size))
-        try {
-          import scala.jdk.CollectionConverters._
-          val tasks = cands.map { c =>
-            new java.util.concurrent.Callable[Option[String]] {
-              override def call(): Option[String] =
-                readStats(conf, c._1.getPath.toString, statsCols)
-            }
-          }
-          pool.invokeAll(tasks.asJava).asScala.toIndexedSeq.map(_.get())
-        } finally pool.shutdown()
-      }
+    val statsByIdx = readStatsAll(conf, cands.map(_._1.getPath.toString), statsCols)
     val files = cands.zip(statsByIdx).flatMap { case ((st, values), stats) =>
       // a zero-row part file is footer-only output: committing it would
       // only add a file-open cost to every future scan

@@ -42,6 +42,43 @@ class IndexerSpec extends SparkSpec {
     (manifestPath.toUri.toString, work.resolve("db").toUri.toString)
   }
 
+  /** Lands a one-file folder at 1680945094000 (a copy of a part file of
+    * the last fixture folder) and advances the manifest watermark to it. */
+  private def landNewFolder(manifestUri: String): Unit = {
+    val manifestPath = Paths.get(java.net.URI.create(manifestUri))
+    val dataDir = manifestPath.getParent.resolve("cda/policy_holders")
+    val srcFile = {
+      val s = Files.list(dataDir.resolve("301248660/1680945093000"))
+      try s.filter(_.toString.endsWith(".parquet")).findFirst().get()
+      finally s.close()
+    }
+    val newFolder = dataDir.resolve("301248660/1680945094000")
+    Files.createDirectories(newFolder)
+    Files.copy(srcFile, newFolder.resolve("part-extra.parquet"))
+    val text = new String(Files.readAllBytes(manifestPath), StandardCharsets.UTF_8)
+    Files.write(manifestPath, text.replace("\"lastSuccessfulWriteTimestamp\": \"1680945093000\"",
+      "\"lastSuccessfulWriteTimestamp\": \"1680945094000\"").getBytes(StandardCharsets.UTF_8))
+    ()
+  }
+
+  /** Stage details of every Spark job `body` starts. */
+  private def jobsOf[A](body: => A): Seq[String] = {
+    val details = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        details.add(e.stageInfos.map(_.details).mkString("\n")); ()
+      }
+    }
+    org.apache.spark.GraftTestAccess.drainListeners(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      org.apache.spark.GraftTestAccess.drainListeners(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(l)
+    import scala.jdk.CollectionConverters._
+    details.asScala.toSeq
+  }
+
   test("end-to-end golden lineage: index -> 4 versions -> time travel reads") {
     val (manifestUri, dbPath) = stageFixture()
     val results = Indexer.index(manifestUri, dbPath)(spark)
@@ -148,16 +185,80 @@ class IndexerSpec extends SparkSpec {
     assert(crashed("policy_holders").isRight)
     assert(table.log.listVersions() == Seq(0L, 1L, 2L, 3L, 4L))
 
-    // the watermark is stale, so a full rerun re-discovers the folder —
-    // it must repair the checkpoint WITHOUT committing a duplicate version
+    // the checkpoint is stale, but the watermark comes from the log, which
+    // already holds the folder: a rerun must not commit a duplicate version
     val repaired = Indexer.index(manifestUri, dbPath)(spark)
-    assert(repaired("policy_holders").map(_.processedTimestamp) == Seq(1680945094000L),
-      "re-delivered folder must be reported so the checkpoint is repaired")
+    assert(repaired("policy_holders").isEmpty)
     assert(table.log.listVersions() == Seq(0L, 1L, 2L, 3L, 4L),
       "rerun must not commit the folder twice")
     assert(table.toDF.count() == 9) // 8 + the one-row copied part file
     // converged: a third run discovers nothing
     assert(Indexer.index(manifestUri, dbPath)(spark)("policy_holders").isEmpty)
+  }
+
+  test("a steady-state Append run runs only the fan-out and the checkpoint save") {
+    val (manifestUri, dbPath) = stageFixture()
+    Indexer.index(manifestUri, dbPath)(spark)
+    landNewFolder(manifestUri)
+    var results = Map.empty[String, Seq[BatchResult]]
+    val jobs = jobsOf { results = Indexer.index(manifestUri, dbPath)(spark) }
+    assert(results("policy_holders").map(_.processedTimestamp) == Seq(1680945094000L))
+    assert(jobs.size == 2, s"jobs:\n${jobs.mkString("\n---\n")}")
+    assert(jobs.count(_.contains("Indexer$.processManifest")) == 1)
+    assert(Indexer.loadCheckpoints(dbPath)(spark).get("policy_holders").contains(1680945094000L))
+  }
+
+  test("a table whose directory was deleted is rebuilt from its folders") {
+    val (manifestUri, dbPath) = stageFixture()
+    Indexer.index(manifestUri, dbPath)(spark)
+    val tableDir = Paths.get(java.net.URI.create(s"$dbPath/policy_holders"))
+    GwLog.forTable(spark.sparkContext.hadoopConfiguration, tableDir.toString).delete()
+    assert(Indexer.loadCheckpoints(dbPath)(spark).get("policy_holders").contains(1680945093000L))
+    val rebuilt = Indexer.index(manifestUri, dbPath)(spark)
+    assert(rebuilt("policy_holders").size == 4)
+    val table = GwTable.forPath(spark, s"$dbPath/policy_holders")
+    assert(table.log.listVersions() == Seq(0L, 1L, 2L, 3L))
+    assert(table.toDF.count() == 8)
+  }
+
+  test("a log with no indexer label takes its watermark from _checkpoints") {
+    val (manifestUri, dbPath) = stageFixture()
+    Indexer.index(manifestUri, dbPath)(spark)
+    // the reference stamps no label: strip it from every commit, and drop
+    // the checksums that would no longer match
+    val logDir = Paths.get(java.net.URI.create(s"$dbPath/policy_holders/_delta_log"))
+    val names = { val s = Files.list(logDir); try s.toArray.map(_.toString) finally s.close() }
+    names.filter(_.endsWith(".crc")).foreach(n => Files.delete(Paths.get(n)))
+    names.filter(_.matches(".*/\\d{20}\\.json")).foreach { n =>
+      val text = new String(Files.readAllBytes(Paths.get(n)), StandardCharsets.UTF_8)
+      val stripped = text.replaceAll(",\"txnId\":\"gwindex/[^\"]*\"", "")
+      assert(stripped != text, s"no label in $n")
+      Files.write(Paths.get(n), stripped.getBytes(StandardCharsets.UTF_8))
+    }
+    landNewFolder(manifestUri)
+    val results = Indexer.index(manifestUri, dbPath)(spark)
+    assert(results("policy_holders").map(_.processedTimestamp) == Seq(1680945094000L))
+    val table = GwTable.forPath(spark, s"$dbPath/policy_holders")
+    assert(table.log.listVersions() == Seq(0L, 1L, 2L, 3L, 4L))
+    assert(table.toDF.count() == 9)
+  }
+
+  test("a legacy plain-parquet _checkpoints directory reads back and migrates") {
+    val (manifestUri, dbPath) = stageFixture()
+    import spark.implicits._
+    Seq(("policy_holders", "301248659", 1680535502000L, 3),
+      ("retired", "7", 1600000000000L, 1))
+      .toDF("tableName", "processedSchema", "processedTimestamp", "processedFiles")
+      .write.parquet(Indexer.checkpointsPath(dbPath))
+    val legacy = Map("policy_holders" -> 1680535502000L, "retired" -> 1600000000000L)
+    assert(Indexer.loadCheckpoints(dbPath)(spark) == legacy)
+    // the table has no log yet, so it bootstraps from all of its folders,
+    // and the legacy rows ride the checkpoint table's bootstrap commit
+    assert(Indexer.index(manifestUri, dbPath)(spark)("policy_holders").size == 4)
+    assert(GwLog.forTable(spark.sparkContext.hadoopConfiguration,
+      Indexer.checkpointsPath(dbPath)).exists())
+    assert(Indexer.loadCheckpoints(dbPath)(spark) ==
+      legacy + ("policy_holders" -> 1680945093000L))
   }
 
   test("manifest gate (EDGE CASE#1) drops folders newer than the manifest watermark") {

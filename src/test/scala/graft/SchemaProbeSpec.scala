@@ -1,7 +1,7 @@
 package graft
 
 import graft.log.AddFile
-import graft.sources.{Manifest, SchemaProbe}
+import graft.sources.{CdaLayout, Manifest, SchemaProbe}
 import java.nio.file.Paths
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.types._
@@ -47,6 +47,39 @@ class SchemaProbeSpec extends SparkSpec {
       Seq(AddFile(bogus, 5, 0), AddFile(good, 1000, 0)))
     assert(probed.isDefined)
     assert(probed.get.fieldNames.toSeq == Seq("firstName", "lastName", "age"))
+  }
+
+  test("CDA footer harvest: the pooled read equals a serial readStats per listed file") {
+    val root = java.nio.file.Files.createTempDirectory("cda-harvest")
+    val folders = Seq("100", "200").map(root.resolve)
+    spark.range(0, 60, 1, 6).selectExpr("id", "id * 2 AS v")
+      .write.parquet(folders.head.toString)
+    spark.range(0, 9, 1, 3).selectExpr("id").write.parquet(folders(1).toString)
+    // CDA rules: a zero-byte file drops; a 0-row file stays
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        StructType(Seq(StructField("id", LongType)))).write.parquet(s"$root/zero")
+    val zero = new java.io.File(s"$root/zero").listFiles()
+      .filter(_.getName.endsWith(".parquet")).head.toPath
+    java.nio.file.Files.copy(zero, folders(1).resolve("part-zero-rows.parquet"))
+    java.nio.file.Files.write(folders(1).resolve("part-empty.parquet"), Array.emptyByteArray)
+    java.nio.file.Files.write(folders(1).resolve("part-bogus.parquet"), "bogus".getBytes)
+
+    val listed = folders.map(f => CdaLayout.listParquetFiles(conf, f.toString).toSeq)
+    assert(listed.head.size == 6 && listed(1).size == 5)
+    assert(!listed(1).exists(_.path.endsWith("part-empty.parquet")))
+    val serial = listed.flatten.map(f => SchemaProbe.readStats(conf, f.path))
+    assert(serial.count(_.isDefined) == 10)
+    assert(serial.exists(_.exists(_.contains("\"numRecords\":0"))))
+    // one call across both folders, and one call per folder
+    val pooled = CdaLayout.withFooterStats(conf, listed.flatten.toIndexedSeq)
+    val perFolder = folders.flatMap(f =>
+      CdaLayout.listParquetFiles(conf, f.toString, withStats = true).toSeq)
+    for (got <- Seq(pooled, perFolder)) {
+      assert(got.size == serial.size)
+      got.zip(listed.flatten).zip(serial).foreach { case ((g, l), s) =>
+        assert(g == l.copy(stats = s), g.path)
+      }
+    }
   }
 
   test("manifest fixtures parse (both shapes, path normalization)") {
