@@ -10,10 +10,13 @@ import org.apache.spark.sql.functions._
  *
  *  - everything is declarative DataFrame code: Catalyst plans the shuffles,
  *    AQE re-plans at runtime, no driver materialization anywhere;
- *  - hot paths avoid interpreted higher-order expressions: shingling is
- *    posexplode + window leads + a multi-column xxhash64, minhashing is a
- *    bank of codegen'd min() aggregates, set similarity is an inverted-index
- *    join — all measured ~20x faster than the array/transform() forms;
+ *  - hot paths avoid interpreted higher-order expressions and UDFs (the
+ *    array/transform() forms measured ~20x slower): a document's text
+ *    near-dup facts come from native codegen'd kernels in one narrow
+ *    projection — its shingle set (`ShingleHashes`), MinHash lanes
+ *    (`MinHashLanes`) and SimHash (`SimHash`) — and candidate pairs are
+ *    verified on those per-document sets with `array_intersect`, never by
+ *    joining shingle rows back;
  *  - near-dup candidate generation is always sub-quadratic (LSH band
  *    buckets / shared-shingle blocks / chunk pigeonholing), then verified
  *    exactly — the shape that survives a 100 TB corpus.
@@ -1953,28 +1956,53 @@ object Pipelines {
   }
 
   /**
-   * One row per distinct (id, 3-gram-shingle-hash), plus any blocking
-   * columns. Codegen-friendly shingle representation (see object scaladoc).
+   * One row per document with at least one word trigram: `__id`, any
+   * blocking columns and `set`, the document's distinct shingle hashes
+   * ([[graft.functions.ShingleHashes]]) — one narrow projection per
+   * document (see object scaladoc).
    */
-  def shingleRows(df: DataFrame, id: Column, text: Column, blocks: Seq[Column] = Nil): DataFrame = {
-    val byPos = Window.partitionBy("__id").orderBy("pos")
-    // spread a narrow scan before the word fan-out so tokenization and the
-    // shingle hashing parallelize (no-op at scale)
+  private def shingleSets(df: DataFrame, id: Column, text: Column,
+      blocks: Seq[Column] = Nil): DataFrame =
+    // spread a narrow scan first so the hashing parallelizes (no-op at scale)
     spreadForCompute(df, id)
-      .select((id.as("__id") +: blocks) :+ posexplode(split(text, " ")): _*)
-      .withColumn("w2", lead("col", 1).over(byPos))
-      .withColumn("w3", lead("col", 2).over(byPos))
-      .filter(col("w3").isNotNull)
-      .withColumn("s", xxhash64(col("col"), col("w2"), col("w3")))
-      .drop("pos", "col", "w2", "w3")
-      .distinct()
+      .select((id.as("__id") +: blocks) :+ graft.functions.ShingleHashes(text).as("set"): _*)
+      .filter(size(col("set")) > 0)
+
+  /** One row per (document, shingle) of `shingleSets`' output, with the
+    * document's set size `sz`: the inverted index the prefix filters rank. */
+  private def shingleIndex(sets: DataFrame, blockNames: Seq[String]): DataFrame =
+    sets.select((blockNames.map(col) :+ col("__id") :+
+      size(col("set")).cast("long").as("sz")) :+ explode(col("set")).as("s"): _*)
+
+  /** Each document's `keep` rarest shingles of a `shingleIndex`: a
+    * rarest-first total order by document frequency within the block, ties
+    * broken by shingle hash. Output: the join keys and `__id`. */
+  private def rarestPrefix(index: DataFrame, joinKeys: Seq[String], keep: Column): DataFrame = {
+    val freq = index.groupBy(joinKeys.map(col): _*).agg(count(lit(1)).as("df"))
+    val byRarity = Window.partitionBy("__id").orderBy(col("df"), col("s"))
+    index.join(freq, joinKeys)
+      .withColumn("pos_in_doc", row_number().over(byRarity))
+      .filter(col("pos_in_doc") <= keep)
+      .select((joinKeys.map(col) :+ col("__id")): _*)
   }
 
-  /** Jaccard from intersection counts + per-doc set sizes over pair rows. */
-  private def jaccardFromCounts(inter: DataFrame, sizes: DataFrame, threshold: Double): DataFrame =
-    inter
-      .join(sizes.select(col("__id").as("doc_a"), col("sz").as("sz_a")), Seq("doc_a"))
-      .join(sizes.select(col("__id").as("doc_b"), col("sz").as("sz_b")), Seq("doc_b"))
+  /** Candidate pairs verified on their documents' shingle sets: `doc_a`,
+    * `doc_b`, the intersection size `inter` and both set sizes — two id
+    * joins and one `array_intersect` per pair. A pair that shares no
+    * shingle has no intersection to report and is dropped. */
+  private def intersectSets(candidates: DataFrame, sets: DataFrame): DataFrame =
+    candidates
+      .join(sets.select(col("__id").as("doc_a"), col("set").as("set_a")), Seq("doc_a"))
+      .join(sets.select(col("__id").as("doc_b"), col("set").as("set_b")), Seq("doc_b"))
+      .select(col("doc_a"), col("doc_b"),
+        size(array_intersect(col("set_a"), col("set_b"))).cast("long").as("inter"),
+        size(col("set_a")).cast("long").as("sz_a"),
+        size(col("set_b")).cast("long").as("sz_b"))
+      .filter(col("inter") > 0)
+
+  /** Jaccard in permille over candidate pairs, kept at `threshold` or above. */
+  private def jaccardPairs(candidates: DataFrame, sets: DataFrame, threshold: Double): DataFrame =
+    intersectSets(candidates, sets)
       .select(col("doc_a"), col("doc_b"),
         round(lit(1000.0) * col("inter") / (col("sz_a") + col("sz_b") - col("inter")))
           .cast("long").as("jacc_permille"))
@@ -1982,29 +2010,27 @@ object Pipelines {
 
   /** MinHash+LSH near-dup pairs. Materializes eagerly: the result is the
     * duplicate-pair set (metadata-scale next to the corpus), so it is
-    * computed once, locally checkpointed, and the shingle cache released —
+    * computed once, locally checkpointed, and the set cache released —
     * repeated invocations in a long-lived session leak nothing. */
   def minHashDedupPairs(df: DataFrame, id: Column, text: Column,
       numPerm: Int, bands: Int, threshold: Double): DataFrame = {
     require(numPerm % bands == 0, "numPerm must be divisible by bands")
     val rowsPerBand = numPerm / bands
-    val sh = shingleRows(df, id, text).persist()
-    // declared outside the try so the finally can release it on ANY exit —
-    // an exception between persist() and the eager localCheckpoint must not
-    // leak the cached blocks for the session's lifetime (round-12 ADVICE)
-    var mh: DataFrame = null
+    // one row per document: its shingle set and all minhash lanes. Both
+    // sides of the candidate self-join and the verify read it, and the
+    // branches differ, so exchange reuse cannot dedupe them — persist.
+    val sets = shingleSets(df, id, text)
+      .select(col("__id"), col("set"),
+        graft.functions.MinHashLanes(col("set"), numPerm).as("mh"))
+      .persist()
+    // released in the finally on ANY exit: an exception between persist()
+    // and the eager localCheckpoint must not leak the cached blocks for
+    // the session's lifetime
     try {
-      // one shuffle over the shingles: all minhash lanes + the set size
-      val aggCols = (0 until numPerm).map(p => min(xxhash64(lit(p), col("s"))).as(s"mh$p")) :+
-        count(lit(1)).as("sz")
-      // referenced by BOTH sides of the candidate self-join and by `sizes`
-      // below — persist so the 32-lane minhash aggregation runs once, not
-      // three times (the branches differ, so exchange reuse cannot dedupe)
-      mh = sh.groupBy("__id").agg(aggCols.head, aggCols.tail: _*).persist()
       val bandCols = (0 until bands).map { b =>
-        xxhash64((lit(b) +: (0 until rowsPerBand).map(i => col(s"mh${b * rowsPerBand + i}"))): _*)
+        xxhash64((lit(b) +: (0 until rowsPerBand).map(i => col("mh")(b * rowsPerBand + i))): _*)
       }
-      val banded = mh.select(col("__id"), posexplode(array(bandCols: _*)))
+      val banded = sets.select(col("__id"), posexplode(array(bandCols: _*)))
         .withColumnRenamed("pos", "band")
         .withColumnRenamed("col", "bucket")
 
@@ -2014,19 +2040,8 @@ object Pipelines {
         .filter(col("doc_a") < col("doc_b"))
         .select("doc_a", "doc_b")
         .distinct()
-
-      val sizes = mh.select(col("__id"), col("sz"))
-      val inter = candidates
-        .join(sh.select(col("__id").as("doc_a"), col("s")), Seq("doc_a"))
-        .join(sh.select(col("__id").as("doc_b"), col("s")), Seq("doc_b", "s"))
-        .groupBy("doc_a", "doc_b")
-        .agg(count(lit(1)).as("inter"))
-      jaccardFromCounts(inter, sizes, threshold).localCheckpoint(true)
-    } finally {
-      sh.unpersist()
-      if (mh != null) mh.unpersist()
-      ()
-    }
+      jaccardPairs(candidates, sets, threshold).localCheckpoint(true)
+    } finally { sets.unpersist(); () }
   }
 
   /**
@@ -2136,24 +2151,16 @@ object Pipelines {
   }
 
   def simHashDedupPairs(df: DataFrame, id: Column, text: Column, maxHamming: Int): DataFrame = {
-    val wordCounts = df
-      .select(id.as("__id"), explode(split(text, " ")).as("word"))
-      .groupBy("__id", "word")
-      .agg(count(lit(1)).as("cnt"))
-      // 60-bit md5-prefix term hash, NOT xxhash64: md5 is the one keyed
-      // hash DuckDB and Spark compute identically, which makes the whole
-      // SimHash pipeline SQL-replayable (the d03 oracle re-derives every
-      // bit vote from the same hex). Top 4 simhash bits are structurally 0
-      // (votes there are always negative) — harmless to similarity, and
-      // identical on both engines.
-      .withColumn("h",
-        conv(substring(md5(col("word")), 1, 15), 16, 10).cast("long"))
-
-    // one custom TypedImperativeAggregate (fixed 64-counter buffer) instead
-    // of a 64-column sum(when(...)) bank — same votes, constant state
-    val sims = wordCounts.groupBy("__id")
-      .agg(graft.functions.SimHashAgg(col("h"), col("cnt")).as("simhash"))
-    hammingNearDupPairs(sims, col("__id"), col("simhash"), maxHamming)
+    // one native per-document SimHash (graft.functions.SimHash): its term
+    // hash is a 60-bit md5 prefix, NOT xxhash64 — md5 is the one keyed hash
+    // DuckDB and Spark compute identically, so the d03 oracle re-derives
+    // every bit vote from the same hex. Top 4 simhash bits are
+    // structurally 0 (votes there are always negative) — harmless to
+    // similarity, and identical on both engines.
+    val codes = spreadForCompute(df, id)
+      .select(id.as("__id"), graft.functions.SimHash(text).as("simhash"))
+      .filter(col("simhash").isNotNull)
+    hammingNearDupPairs(codes, col("__id"), col("simhash"), maxHamming)
   }
 
   /**
@@ -2208,11 +2215,12 @@ object Pipelines {
     // the candidate self-join references `chunks` twice with differing
     // column names, so exchange reuse cannot dedupe the branches — without
     // the persist the whole upstream (image/audio DECODE for the
-    // perceptual-hash callers, the SimHash aggregation for d03) runs
+    // perceptual-hash callers, the SimHash projection for d03) runs
     // twice. Eager result + unpersist = same cache hygiene as the LSH
-    // paths (the pair set is metadata-scale next to the corpus).
+    // paths (the pair set is metadata-scale next to the corpus), released
+    // on ANY exit: a failing verify must not leak the cached chunks.
     val cached = chunks.persist()
-    val out = cached.select(col("chunk"), col("chunk_val"), col("__hid").as("doc_a"), col("__hbits").as("sim_a"))
+    try cached.select(col("chunk"), col("chunk_val"), col("__hid").as("doc_a"), col("__hbits").as("sim_a"))
       .join(cached.select(col("chunk"), col("chunk_val"), col("__hid").as("doc_b"), col("__hbits").as("sim_b")),
         Seq("chunk", "chunk_val"))
       .filter(col("doc_a") < col("doc_b"))
@@ -2221,8 +2229,7 @@ object Pipelines {
       .distinct()
       .filter(col("hamming") <= maxHamming)
       .localCheckpoint(true)
-    cached.unpersist()
-    out
+    finally { cached.unpersist(); () }
   }
 
   /**
@@ -2264,31 +2271,20 @@ object Pipelines {
    */
   def ngramJaccardPairs(df: DataFrame, id: Column, text: Column,
       blocks: Seq[Column], threshold: Double): DataFrame = {
-    val sh = shingleRows(df, id, text, blocks).persist()
-    // released in the finally on ANY exit (round-12 ADVICE: a success-path
-    // unpersist leaks the cached blocks when the verify join throws)
+    val sets = shingleSets(df, id, text, blocks).persist()
+    // released in the finally on ANY exit: a success-path unpersist leaks
+    // the cached blocks when the verify join throws
     var prefix: DataFrame = null
     try {
-      val blockNames = sh.columns.filter(c => c != "__id" && c != "s").toSeq
-      val sizes = sh.groupBy("__id").agg(count(lit(1)).as("sz"))
+      val blockNames = sets.columns.filter(c => c != "__id" && c != "set").toSeq
       val joinKeys = blockNames :+ "s"
-
-      // rarest-first total order (ties broken by shingle hash), then keep
-      // each document's prefix
-      val freq = sh.groupBy(joinKeys.map(col): _*).agg(count(lit(1)).as("df"))
-      val byRarity = Window.partitionBy("__id").orderBy(col("df"), col("s"))
-      prefix = sh
-        .join(freq, joinKeys)
-        .withColumn("pos_in_doc", row_number().over(byRarity))
-        // set size over the same partitioning — no extra shuffle for a join
-        .withColumn("sz", count(lit(1)).over(Window.partitionBy("__id")))
-        // epsilon guards double rounding (0.2*10 = 2.0000000000000004 would
-        // ceil to 3 and shave the prefix below the safe length)
-        .filter(col("pos_in_doc") <= col("sz") - ceil(lit(threshold) * col("sz") - lit(1e-9)) + 1)
-        .select((joinKeys.map(col) :+ col("__id")): _*)
+      // epsilon guards double rounding (0.2*10 = 2.0000000000000004 would
+      // ceil to 3 and shave the prefix below the safe length)
+      prefix = rarestPrefix(shingleIndex(sets, blockNames), joinKeys,
+          col("sz") - ceil(lit(threshold) * col("sz") - lit(1e-9)) + 1)
         // the self-join below references this subtree TWICE, and its two
         // branches differ (doc_a vs doc_b) so exchange reuse cannot dedupe
-        // them — persist so the freq join + rarity windows run once
+        // them — persist so the freq join + rarity window run once
         .persist()
 
       val candidates = prefix.select((joinKeys.map(col) :+ col("__id").as("doc_a")): _*)
@@ -2296,15 +2292,9 @@ object Pipelines {
         .filter(col("doc_a") < col("doc_b"))
         .select("doc_a", "doc_b")
         .distinct()
-
-      val inter = candidates
-        .join(sh.select(col("__id").as("doc_a"), col("s")), Seq("doc_a"))
-        .join(sh.select(col("__id").as("doc_b"), col("s")), Seq("doc_b", "s"))
-        .groupBy("doc_a", "doc_b")
-        .agg(count(lit(1)).as("inter"))
-      jaccardFromCounts(inter, sizes, threshold).localCheckpoint(true)
+      jaccardPairs(candidates, sets, threshold).localCheckpoint(true)
     } finally {
-      sh.unpersist()
+      sets.unpersist()
       if (prefix != null) prefix.unpersist()
       ()
     }
@@ -2334,44 +2324,30 @@ object Pipelines {
       blocks: Seq[Column], thresholdPermille: Int): DataFrame = {
     require(thresholdPermille >= 1 && thresholdPermille <= 1000,
       s"thresholdPermille must be in [1, 1000]: $thresholdPermille")
-    val sh = shingleRows(df, id, text, blocks).persist()
+    val sets = shingleSets(df, id, text, blocks).persist()
     try {
-      val blockNames = sh.columns.filter(c => c != "__id" && c != "s").toSeq
+      val blockNames = sets.columns.filter(c => c != "__id" && c != "set").toSeq
       val joinKeys = blockNames :+ "s"
-      val freq = sh.groupBy(joinKeys.map(col): _*).agg(count(lit(1)).as("df"))
-      val byRarity = Window.partitionBy("__id").orderBy(col("df"), col("s"))
-      val prefix = sh
-        .join(freq, joinKeys)
-        .withColumn("pos_in_doc", row_number().over(byRarity))
-        .withColumn("sz", count(lit(1)).over(Window.partitionBy("__id")))
-        // integer ceil: ceil(t*sz/1000) = (t*sz + 999) div 1000 — exact,
-        // no double-rounding epsilon needed
-        .filter(expr(s"pos_in_doc <= sz - " +
-          s"((${thresholdPermille}L * sz + 999L) div 1000L) + 1"))
-        .select((joinKeys.map(col) :+ col("__id")): _*)
+      val index = shingleIndex(sets, blockNames)
+      // integer ceil: ceil(t*sz/1000) = (t*sz + 999) div 1000 — exact,
+      // no double-rounding epsilon needed
+      val prefix = rarestPrefix(index, joinKeys,
+        expr(s"sz - ((${thresholdPermille}L * sz + 999L) div 1000L) + 1"))
       val candidates = prefix
         .select((joinKeys.map(col) :+ col("__id").as("doc_a")): _*)
-        .join(sh.select((joinKeys.map(col) :+ col("__id").as("doc_b")): _*),
+        .join(index.select((joinKeys.map(col) :+ col("__id").as("doc_b")): _*),
           joinKeys)
         .filter(col("doc_a") =!= col("doc_b"))
         .select("doc_a", "doc_b")
         .distinct()
-      val sizes = sh.groupBy("__id").agg(count(lit(1)).as("sz"))
-      val inter = candidates
-        .join(sh.select(col("__id").as("doc_a"), col("s")), Seq("doc_a"))
-        .join(sh.select(col("__id").as("doc_b"), col("s")), Seq("doc_b", "s"))
-        .groupBy("doc_a", "doc_b")
-        .agg(count(lit(1)).as("inter"))
-      inter
-        .join(sizes.select(col("__id").as("doc_a"), col("sz").as("sz_a")),
-          Seq("doc_a"))
+      intersectSets(candidates, sets)
         .filter(lit(1000L) * col("inter") >=
           lit(thresholdPermille.toLong) * col("sz_a"))
         .select(col("doc_a"), col("doc_b"),
           round(lit(1000.0) * col("inter") / col("sz_a"))
             .cast("long").as("cont_permille"))
         .localCheckpoint(true)
-    } finally { sh.unpersist(); () }
+    } finally { sets.unpersist(); () }
   }
 
   // ------------------------------------------------------------- vectors

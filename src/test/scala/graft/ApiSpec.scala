@@ -367,6 +367,16 @@ class ApiSpec extends AnyFunSuite {
     assert(uncapped.count() == default.count())
   }
 
+  test("hammingNearDupPairs releases its cached chunks when the verify fails") {
+    spark.catalog.clearCache()
+    // the bits column raises only when the eager verify runs
+    val codes = docs.select(col("doc_id"), raise_error(lit("bad code")).cast("long").as("code"))
+    intercept[Exception] {
+      graft.api.Pipelines.hammingNearDupPairs(codes, col("doc_id"), col("code"), maxHamming = 3)
+    }
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
   test("persisted IVF index answers exactly what the in-memory path answers") {
     val e = embs
     val dir = java.nio.file.Files.createTempDirectory("apiivf")

@@ -448,6 +448,150 @@ class OperatorSpec extends AnyFunSuite {
     assert(custom == declarative)
   }
 
+  /** The sf0.001 documents plus edge texts (null, empty, 1 and 2 words,
+    * double/leading/trailing spaces, non-ASCII words, repeated shingles),
+    * checkpointed so no projection over them folds into a local relation. */
+  private def kernelInputs: org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    val edges = Seq[String](null, "", "one", "two words", "a b c", "a  b c",
+      " a b c", "a b c ", "   ", "naïve café über straße 日本語 テキスト",
+      "x y z x y z x y z x y z", "ünï ünï ünï ünï")
+      .zipWithIndex.map { case (t, i) => (-1L - i, t) }.toDF("doc_id", "text")
+    spark.read.parquet(s"$sf/documents.parquet").select("doc_id", "text")
+      .unionByName(edges).localCheckpoint()
+  }
+
+  /** Runs `f` once through whole-stage codegen and once through
+    * interpreted `eval`, and returns both answers. */
+  private def codegenAndEval[T](f: => T): Seq[T] =
+    Seq("true" -> "CODEGEN_ONLY", "false" -> "NO_CODEGEN").map { case (wscg, mode) =>
+      spark.conf.set("spark.sql.codegen.wholeStage", wscg)
+      spark.conf.set("spark.sql.codegen.factoryMode", mode)
+      try f
+      finally {
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+      }
+    }
+
+  test("ShingleHashes, MinHashLanes and SimHash equal their declarative forms, codegen and eval") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    val in = kernelInputs
+    // the declarative shingle rows the kernels replace: posexplode, two
+    // window leads, a three-column xxhash64 and a distinct
+    val byPos = Window.partitionBy("doc_id").orderBy("pos")
+    val rows = in.select(col("doc_id"), posexplode(split(col("text"), " ")))
+      .withColumn("w2", lead("col", 1).over(byPos))
+      .withColumn("w3", lead("col", 2).over(byPos))
+      .filter(col("w3").isNotNull)
+      .select(col("doc_id"), xxhash64(col("col"), col("w2"), col("w3")).as("s"))
+      .distinct()
+    val declSets = rows.collect().groupMap(_.getLong(0))(_.getLong(1))
+      .map { case (id, s) => id -> s.toSeq.sorted }
+    val lanes = (0 until 32).map(p => min(xxhash64(lit(p), col("s"))).as(s"mh$p"))
+    val declLanes = rows.groupBy("doc_id").agg(lanes.head, lanes.tail: _*).collect()
+      .map(r => r.getLong(0) -> (1 to 32).map(r.getLong)).toMap
+    val declSim = in.select(col("doc_id"), explode(split(col("text"), " ")).as("word"))
+      .groupBy("doc_id", "word").agg(count(lit(1)).as("cnt"))
+      .withColumn("h", conv(substring(md5(col("word")), 1, 15), 16, 10).cast("long"))
+      .groupBy("doc_id").agg(graft.functions.SimHashAgg(col("h"), col("cnt")))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(declSets.size > 400 && declSets.contains(-11L) && declSets(-11L).size == 3)
+
+    val answers = codegenAndEval {
+      in.select(col("doc_id"),
+          graft.functions.ShingleHashes(col("text")).as("set"),
+          graft.functions.SimHash(col("text")).as("sim"))
+        .withColumn("mh", graft.functions.MinHashLanes(col("set"), 32))
+        .collect().map { r =>
+          val set = Option(r.getSeq[Long](1))
+          (r.getLong(0), set, Option(r.get(2)).map(_.asInstanceOf[Long]),
+            Option(r.getSeq[Long](3)))
+        }.toSeq
+    }
+    answers.foreach { got =>
+      // a set is ascending and distinct; fewer than 3 words is the empty
+      // set, a null text is null
+      val sets = got.collect { case (id, Some(s), _, _) if s.nonEmpty => id -> s }.toMap
+      assert(sets == declSets)
+      assert(sets.values.forall(s => s == s.distinct.sorted))
+      assert(got.filter(_._2.exists(_.isEmpty)).map(_._1).toSet == Set(-2L, -3L, -4L))
+      assert(got.find(_._1 == -1L).exists(r => r._2.isEmpty && r._3.isEmpty && r._4.isEmpty))
+      assert(got.collect { case (id, _, _, Some(l)) => id -> l }.toMap == declLanes)
+      assert(got.collect { case (id, _, Some(h), _) => id -> h }.toMap == declSim)
+    }
+    assert(answers.distinct.size == 1)
+  }
+
+  /** Word-trigram sets of the sf0.001 documents, with their blocks. */
+  private def trigramDocs: Array[(Long, String, Long, Set[Seq[String]])] =
+    spark.read.parquet(s"$sf/documents.parquet")
+      .select("doc_id", "lang", "n_chars", "text").collect().map { r =>
+        // limit -1: keep trailing empty words, as Spark's split() does
+        val w = r.getString(3).split(" ", -1)
+        (r.getLong(0), r.getString(1), r.getLong(2) / 100,
+          w.sliding(3).filter(_.length == 3).map(_.toSeq).toSet)
+      }
+
+  /** Spark's `round` on a double: HALF_UP on its decimal form. */
+  private def permille(num: Long, den: Long): Long =
+    BigDecimal(1000.0 * num / den).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
+
+  test("ngramJaccardPairs equals in-memory all-pairs Jaccard at sf0.001 (t = 0.2, 0.5)") {
+    import org.apache.spark.sql.functions._
+    val docs = trigramDocs.filter(_._4.nonEmpty)
+    Seq(0.2, 0.5).foreach { t =>
+      val expected = (for {
+        a <- docs; b <- docs
+        if a._1 < b._1 && a._2 == b._2 && a._3 == b._3
+        inter = (a._4 intersect b._4).size.toLong
+        if inter > 0
+        j = permille(inter, a._4.size + b._4.size - inter)
+        if j >= (t * 1000).toLong
+      } yield (a._1, b._1, j)).toSet
+      val got = graft.api.Pipelines.ngramJaccardPairs(
+        spark.read.parquet(s"$sf/documents.parquet"), col("doc_id"), col("text"),
+        Seq(col("lang"), expr("n_chars div 100").as("len_block")), t)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      assert(got == expected, s"t=$t extra=${got -- expected} missing=${expected -- got}")
+      if (t == 0.2) assert(got.nonEmpty, "fixture should contain near-dup pairs")
+    }
+  }
+
+  test("containmentPairs equals in-memory directed containment at sf0.001") {
+    import org.apache.spark.sql.functions._
+    val docs = trigramDocs.filter(_._4.nonEmpty)
+    val expected = (for {
+      a <- docs; b <- docs
+      if a._1 != b._1 && a._2 == b._2
+      inter = (a._4 intersect b._4).size.toLong
+      if inter > 0 && 1000L * inter >= 500L * a._4.size
+    } yield (a._1, b._1, permille(inter, a._4.size))).toSet
+    val got = Dedup.d19ContainmentDedup(spark, sf)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(got.nonEmpty && got == expected,
+      s"extra=${got -- expected} missing=${expected -- got}")
+  }
+
+  test("minHashDedupPairs reports every identical-text pair at jacc_permille 1000") {
+    import org.apache.spark.sql.functions._
+    val d = spark.read.parquet(s"$sf/documents.parquet").select("doc_id", "text")
+    // every fifth document planted again under a new id
+    val planted = d.unionByName(d.filter(col("doc_id") % 5 === 0)
+      .select((col("doc_id") + 100000L).as("doc_id"), col("text")))
+    val identical = planted.collect().groupMap(_.getString(1))(_.getLong(0)).values
+      .filter(_.size > 1).flatMap { ids =>
+        val s = ids.toSeq.sorted
+        for (i <- s.indices; j <- i + 1 until s.size) yield (s(i), s(j))
+      }.toSet
+    val got = graft.api.Pipelines.minHashDedupPairs(planted, col("doc_id"), col("text"),
+      numPerm = 32, bands = 8, threshold = 0.5)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    assert(identical.size >= 100)
+    identical.foreach(p => assert(got.get(p).contains(1000L), s"pair $p: ${got.get(p)}"))
+  }
+
   test("IVF centroid training monotonically improves the spherical objective") {
     import org.apache.spark.sql.functions.col
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
